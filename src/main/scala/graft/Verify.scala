@@ -51,20 +51,35 @@ object Verify {
     // unchanged files). Stamp the dump with the builder tree's SHA +
     // dirty flag so compare_oracle.py can prove freshness by identity:
     // equal clean SHAs ⇒ fresh regardless of mtimes. Best-effort — a
-    // missing stamp just falls back to the mtime guard.
+    // missing stamp just falls back to the mtime guard. git runs in the
+    // tree these classes were loaded from (a classes directory, or the
+    // directory of the jar `sbt runMain` copies them into under target/),
+    // never the JVM's working directory, which may be another repository.
     try {
-      def git(cmd: String*): String = {
-        val p = new ProcessBuilder(("git" +: cmd): _*)
-          .redirectErrorStream(true).start()
-        val out = new String(p.getInputStream.readAllBytes()).trim
-        p.waitFor(); out
-      }
-      val sha = git("rev-parse", "HEAD")
-      val dirty = git("status", "--porcelain").nonEmpty
+      val loc = Paths.get(getClass.getProtectionDomain.getCodeSource
+        .getLocation.toURI)
+      val (sha, dirty) =
+        gitStamp((if (Files.isDirectory(loc)) loc else loc.getParent).toString)
       Files.writeString(Paths.get(s"$outDir/_verify_meta.json"),
         s"""{"sha": ${q(sha)}, "dirty": $dirty}""")
     } catch { case e: Throwable =>
       System.err.println(s"[verify] meta stamp failed: $e") }
     spark.stop()
+  }
+
+  /** (HEAD sha, dirty) of the git work tree holding `dir`. A non-zero git
+    * exit throws: git's error text must never be recorded as a sha.
+    */
+  private[graft] def gitStamp(dir: String): (String, Boolean) = {
+    def git(cmd: String*): String = {
+      val p = new ProcessBuilder((Seq("git", "-C", dir) ++ cmd): _*)
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      val out = new String(p.getInputStream.readAllBytes()).trim
+      val rc = p.waitFor()
+      if (rc != 0)
+        throw new IllegalStateException(s"git ${cmd.mkString(" ")} exited $rc")
+      out
+    }
+    (git("rev-parse", "HEAD"), git("status", "--porcelain").nonEmpty)
   }
 }

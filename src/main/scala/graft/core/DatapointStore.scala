@@ -13,9 +13,15 @@ import org.apache.spark.sql.types._
   * column pruning reaches the parquet reader per-downsampler — the
   * reference's "only requested aggregates deserialized" trick (SURVEY §4).
   *
-  * Partitioned by (granularity, ymd): granularity pruning reproduces the
-  * per-granularity collections, ymd + parquet min/max stats on `t`
-  * reproduce the timestamp-encoded-_id range scan.
+  * Partitioned by (granularity, ymd) — (stream_id, granularity, ymd) in the
+  * derived roots: granularity pruning reproduces the per-granularity
+  * collections, ymd + parquet min/max stats on `t` reproduce the
+  * timestamp-encoded-_id range scan. Reads name the partition directories
+  * to scan ([[read]]): the caller's catalog knows which directory holds a
+  * stream's rows, so a read lists that directory and not the whole root —
+  * a derived root with more stream directories than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) would
+  * otherwise cost a distributed listing job on every scan.
   *
   * Filesystem access goes through the Hadoop FS API exclusively (r13):
   * every directory swap, marker file, and partition walk works against
@@ -88,16 +94,34 @@ object DatapointStore {
   def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Read one or more store roots as ONE scan node with the schema pinned:
-    * multi-path read keeps the plan O(1) in the number of roots, and the
-    * explicit schema makes empty roots (directories holding only _SUCCESS
-    * after an empty write) read as zero rows instead of failing schema
-    * inference and bricking every subsequent scan.
+  /** Read directories `dirs` of ONE store root (the root itself, or
+    * partition directories under it such as `<root>/granularity=g` or
+    * `<root>/stream_id=s/granularity=g`) as one scan node with the schema
+    * pinned. `basePath` keeps the partition columns above each listed
+    * directory, so a routed read still carries stream_id/granularity, and
+    * Spark lists only the directories named, never the root's other
+    * streams. The explicit schema makes empty directories (holding only
+    * _SUCCESS after an empty write) read as zero rows instead of failing
+    * schema inference.
+    *
+    * The root's crash recovery runs first, so a stranded backup is swung
+    * back before the existence check; directories that do not exist (a
+    * granularity never materialized) are skipped, and a read of none is
+    * [[empty]] rather than "Path does not exist".
     */
-  def read(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    paths.foreach { p => recoverIfNeeded(p); recoverParts(p) }
-    if (paths.isEmpty) empty(spark)
-    else spark.read.schema(schema).parquet(paths: _*)
+  def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
+    scan(spark, root, dirs).getOrElse(empty(spark))
+
+  /** [[read]], or None when none of `dirs` exists. */
+  private[graft] def scan(spark: SparkSession, root: String,
+      dirs: Seq[String]): Option[DataFrame] = {
+    recoverIfNeeded(root)
+    recoverParts(root)
+    val fs = fsFor(root)
+    val present = dirs.distinct.filter(d => fs.exists(new Path(d)))
+    if (present.isEmpty) None
+    else Some(spark.read.option("basePath", root).schema(schema)
+      .parquet(present: _*))
   }
 
   /** Read-side half of replace()'s crash safety: a crash between the two

@@ -721,8 +721,11 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
           val lo = bounds.map(_.getTimestamp(1)).minBy(_.getTime)
           val hi = bounds.map(_.getTimestamp(2)).maxBy(_.getTime)
           val gnames = ids.map(catalog(_).highest_granularity).distinct.toSeq
+          // appends only reach source streams: their raw rows sit in the
+          // primary root's granularity directories, and only those list
           val existing = filterToStreams(
-            DatapointStore.read(spark, Seq(datapointsPath))
+            DatapointStore.read(spark, datapointsPath,
+                gnames.map(sourceDir))
               .where(col("granularity").isin(gnames: _*) &&
                 col("t") >= lo && col("t") <= hi &&
                 col("ymd") >= DatapointStore.ymdKey(lo) &&
@@ -857,7 +860,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     */
   private def staleDependent(d: StreamDescriptor): Boolean = {
     if (dfs.exists(hPath(dirtyFile(d.stream_id)))) return true
-    if (!nonEmptyDir(s"$derivedRawPath/stream_id=${d.stream_id}")) return true
+    if (!nonEmptyDir(streamDir(derivedRawPath, d.stream_id))) return true
     readCoverage(d.stream_id) match {
       case None => true
       case Some(cw) => coverageNow(d).exists(_.after(cw))
@@ -881,7 +884,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * cheaper than a distributed scan of nothing.
     */
   private def granularityExists(g: String): Boolean = {
-    if (nonEmptyDir(s"$datapointsPath/granularity=$g")) return true
+    if (nonEmptyDir(sourceDir(g))) return true
     def anyStreamHas(root: String): Boolean =
       hList(root).exists(k => k.isDirectory &&
         nonEmptyDir(s"${k.getPath}/granularity=$g"))
@@ -899,17 +902,60 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   private def derivedRawPath = s"$rootDir/derived_raw"
   private def rollupsPath = s"$rootDir/derived_rollups"
 
-  /** Unified scan of the datapoints table: exactly three scan nodes
-    * regardless of stream count — primary root, derived raw root, derived
-    * rollups root. Plan size is O(1) in #streams.
+  /** One derived stream's directory under a derived root: all of its
+    * partitions, plus (in the raw root) its coverage and dirty markers. */
+  private def streamDir(root: String, id: String) = s"$root/stream_id=$id"
+
+  /** The primary root's directory for granularity `g`: every source
+    * stream's rows at that level. */
+  private def sourceDir(g: String) = s"$datapointsPath/granularity=$g"
+
+  /** Where the catalog puts stream `id`'s rows at granularity `g`: source
+    * streams share the primary root's `granularity=g` directory; a derived
+    * stream keeps its raw level (its highest granularity) in the derived
+    * raw root and its coarser levels in the rollups root, each under its
+    * own stream directory. Returns (root, directory).
     */
-  def datapoints: DataFrame = {
-    val scans = Seq(datapointsPath, derivedRawPath, rollupsPath)
-      .filter(nonEmptyDir)
-      .map(p => DatapointStore.read(spark, Seq(p)))
+  private def dirOf(id: String, g: String): (String, String) = {
+    val d = catalog(id)
+    if (d.derive_op.isEmpty) datapointsPath -> sourceDir(g)
+    else {
+      val root = if (g == d.highest_granularity) derivedRawPath else rollupsPath
+      root -> s"${streamDir(root, id)}/granularity=$g"
+    }
+  }
+
+  /** Directories holding every row of `ids` at every granularity: the
+    * whole primary root when any is a source stream, and each derived
+    * stream's directory in both derived roots.
+    */
+  private def streamDirs(ids: Iterable[String]): Seq[(String, String)] = {
+    val (der, src) = ids.toSeq.partition(catalog(_).derive_op.isDefined)
+    (if (src.nonEmpty) Seq(datapointsPath -> datapointsPath) else Nil) ++
+      Seq(derivedRawPath, rollupsPath).flatMap(r => der.map(id => r -> streamDir(r, id)))
+  }
+
+  /** Catalog-routed scan: per store root, ONE scan node over the listed
+    * (root, directory) pairs; roots with none of them on disk drop out.
+    * Spark's partition discovery lists only those directories — never a
+    * whole derived root, whose `stream_id=` level grows with the number of
+    * derived streams and lists through a distributed job past 32 of them.
+    * Plan size stays O(1) in #streams (at most three scan nodes).
+    */
+  private def scanDirs(dirs: Seq[(String, String)]): DataFrame = {
+    val byRoot = dirs.groupMap(_._1)(_._2)
+    val scans = Seq(datapointsPath, derivedRawPath, rollupsPath).flatMap(r =>
+      byRoot.get(r).flatMap(DatapointStore.scan(spark, r, _)))
     if (scans.isEmpty) DatapointStore.empty(spark)
     else scans.reduce(_.unionByName(_))
   }
+
+  /** Unified scan of every stream's datapoints (all granularities) — the
+    * catalog-routed scan over all ids, at most three scan nodes: the
+    * primary root and every derived stream's directory in the two derived
+    * roots. Store paths route narrower scans through the same helper.
+    */
+  def datapoints: DataFrame = scanDirs(streamDirs(catalog.keys))
 
   /** Stream-id filter that stays plan-friendly at scale: no filter when
     * the set is the whole catalog, a literal IN for small sets, a
@@ -949,8 +995,12 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       tds.foreach(n => if (!d.time_downsamplers.contains(n))
         throw UnsupportedDownsampler(n))
     }
-    // partition pruning on granularity + parquet min/max pushdown on t
-    var q = datapoints
+    // the catalog knows the ONE partition directory holding these rows:
+    // Spark lists it alone (no other root, no other derived stream — and
+    // so never a distributed listing job), then parquet min/max pushdown
+    // on stream_id/t prunes inside it
+    val (root, dir) = dirOf(streamId, granularity.name)
+    var q = DatapointStore.read(spark, root, Seq(dir))
       .where(col("granularity") === granularity.name && col("stream_id") === streamId)
     // a `t` predicate alone never prunes the ymd partition column — derive
     // the matching ymd day-key bounds explicitly (same epoch-day formula
@@ -1074,8 +1124,8 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     // derived streams: drop their raw + rollup partition directories, no
     // table rewrite
     derVictims.foreach { id =>
-      rmTree(s"$derivedRawPath/stream_id=$id")
-      rmTree(s"$rollupsPath/stream_id=$id")
+      rmTree(streamDir(derivedRawPath, id))
+      rmTree(streamDir(rollupsPath, id))
     }
     // raw streams share the primary table: rewrite it (rare admin op) —
     // scan ONLY the primary root, never the union view
@@ -1211,19 +1261,26 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       Granularity.ladder.drop(1).map(g => g.name -> activeAt(g)).toMap
     val levels = Granularity.ladder.drop(1).filter(g => needsAt(g.name).nonEmpty)
 
+    // the store is resolved ONCE per ladder run, over the active streams
+    // only: the hwm-scan and every level's fold scans share this one file
+    // listing (every ladder write is deferred past the loop, so it stays
+    // current). A derived root lists at most once per run — never per
+    // level — and only the active derived streams' directories.
+    val scanIds = levels.flatMap(g => needsAt(g.name)).distinct
+    lazy val store = scanDirs(streamDirs(scanIds))
+
     // ONE scan resolves every remaining level's per-stream high-water
     // marks (max materialized bucket) up front — granularity is a
     // partition column and the union of active sets prunes stream_id, so
-    // this pays the file-listing and scan job once per ladder run, not
-    // once per level, and only over active streams. Levels whose
-    // partitions were never materialized cost nothing (directory probe).
+    // this pays the scan job once per ladder run, not once per level, and
+    // only over active streams. Levels whose partitions were never
+    // materialized cost nothing (directory probe).
     val scannable = levels.map(_.name).filter(granularityExists)
-    val scanIds = levels.flatMap(g => needsAt(g.name)).distinct
     spark.sparkContext.setJobDescription("ladder:hwm-scan")
     val hwmByLevel: Map[String, Seq[(String, Timestamp)]] =
       if (scannable.isEmpty) Map.empty
       else filterToStreams(
-          datapoints.where(col("granularity").isin(scannable: _*)), scanIds)
+          store.where(col("granularity").isin(scannable: _*)), scanIds)
         .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
         .collect().toSeq
         .groupBy(_.getString(1))
@@ -1308,7 +1365,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
           }
 
         def rawOf(idsSel: Seq[String]): DataFrame = filterToStreams(
-          datapoints.where(
+          store.where(
             col("granularity").isin(idsSel.map(hgOf(_).name).distinct: _*)),
           idsSel)
 
@@ -1316,7 +1373,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         // being deferred — the previous level's in-memory new rows
         def fineOf(idsSel: Seq[String], cols: Seq[String]): DataFrame = {
           val disk = filterToStreams(
-              datapoints.where(col("granularity") === prev.name), idsSel)
+              store.where(col("granularity") === prev.name), idsSel)
             .select(cols.map(col): _*)
           newByLevel.get(prev.name) match {
             case Some(mem) => disk.unionByName(
@@ -1552,7 +1609,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * crash-ordering never has to reason about it.
     */
   private def coverageFile(id: String) =
-    s"$derivedRawPath/stream_id=$id/_graft_coverage"
+    s"${streamDir(derivedRawPath, id)}/_graft_coverage"
 
   /** In-progress sentinel for an INCREMENTAL rewrite: set before the
     * partition deletes, cleared only after the write and coverage marker
@@ -1563,7 +1620,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * of this stream down the self-healing full recompute.
     */
   private def dirtyFile(id: String) =
-    s"$derivedRawPath/stream_id=$id/_graft_dirty"
+    s"${streamDir(derivedRawPath, id)}/_graft_dirty"
 
   private def readCoverage(id: String): Option[Timestamp] = {
     val f = hPath(coverageFile(id))
@@ -1605,7 +1662,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     */
   private def deleteDerivedYmds(root: String, id: String,
       fromKey: String, toKey: Option[String]): Unit = {
-    hList(s"$root/stream_id=$id")
+    hList(streamDir(root, id))
       .withFilter(_.isDirectory).foreach { gdir =>
         dfs.listStatus(gdir.getPath)
           .withFilter(f => f.isDirectory &&
@@ -1641,7 +1698,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   private def incEligibility(d: StreamDescriptor, changedDeps: Seq[String],
       regions: Map[String, Region]): Option[(Timestamp, Option[String], Timestamp)] = {
     if (changedDeps.isEmpty || !changedDeps.forall(regions.contains)) return None
-    if (!nonEmptyDir(s"$derivedRawPath/stream_id=${d.stream_id}")) return None
+    if (!nonEmptyDir(streamDir(derivedRawPath, d.stream_id))) return None
     if (dfs.exists(hPath(dirtyFile(d.stream_id)))) return None // crashed mid-rewrite
     val cw = readCoverage(d.stream_id) match {
       case Some(t) => t
@@ -1690,8 +1747,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       if (sd.derive_op.isDefined) {
         // derived roots partition by stream_id first: the last pre-w day
         // is an exact driver-side directory listing, no probing
-        val keys = hList(
-            s"$derivedRawPath/stream_id=$srcId/granularity=$hg")
+        val keys = hList(dirOf(srcId, hg)._2)
           .filter(f => f.isDirectory && f.getPath.getName.startsWith("ymd="))
           .map(_.getPath.getName.stripPrefix("ymd=")).filter(_ < wKey)
         if (keys.isEmpty) resolved((srcId, w)) = Some(Array.empty)
@@ -1733,7 +1789,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       val specDf = broadcast(specs.toSeq
         .map(sp => (sp.srcId, sp.gname, sp.loKey, sp.hiKey, sp.w))
         .toDF("__src", "__g", "__lo", "__hi", "__w"))
-      val rows = datapoints
+      val rows = scanDirs(specs.toSeq.map(sp => dirOf(sp.srcId, sp.gname)))
         .where(col("ymd") >= specs.map(_.loKey).min &&
                col("ymd") <= specs.map(_.hiKey).max)
         .join(specDf, col("stream_id") === col("__src") &&
@@ -1828,10 +1884,10 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       }
       val pairsDf = broadcast(pairs.toDF(
         "__src", "__gname", "__out", "__w", "__lo", "__hi"))
-      val srcIds = pairs.map(_._1).distinct
-      val gnames = pairs.map(_._2).distinct
+      // only the directories holding the sources' rows at their highest
+      // granularity: source-stream sources never list a derived root
       val base = filterToStreams(
-        datapoints.where(col("granularity").isin(gnames: _*)), srcIds)
+        scanDirs(pairs.map(p => dirOf(p._1, p._2))), pairs.map(_._1).distinct)
       val pruned = minW.fold(base)(w =>
         base.where(col("ymd") >= DatapointStore.ymdKey(w) && col("t") >= w))
       val joined = pruned
@@ -1886,8 +1942,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
             val rDf = broadcast(resetPairs.toDF(
               "__src", "__gname", "__out", "__from"))
             val rBase = filterToStreams(
-              datapoints.where(col("granularity")
-                .isin(resetPairs.map(_._2).distinct: _*)),
+              scanDirs(resetPairs.map(p => dirOf(p._1, p._2))),
               resetPairs.map(_._1).distinct)
             val rMin = resetPairs.flatMap(p => Option(p._4))
               .sortBy(_.getTime).headOption
@@ -1944,7 +1999,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
             dfs.listStatus(dirty.getParent)
               .filterNot(_.getPath.getName == dirty.getName)
               .foreach(f => rmTree(f.getPath.toString))
-            rmTree(s"$rollupsPath/stream_id=${d.stream_id}")
+            rmTree(streamDir(rollupsPath, d.stream_id))
         }
       }
       DatapointStore.appendByStream(result, derivedRawPath)

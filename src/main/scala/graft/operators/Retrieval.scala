@@ -952,15 +952,14 @@ object Retrieval {
     // lanes execute at the caller's sink). Tags only, no plan changes.
     val sc = spark.sparkContext
     sc.setJobDescription("bm25-audit:sample")
-    val (n, q) =
+    val q =
       try {
-        val n0 = docs.count()
-        val st0 = math.max(1L, (n0 + sampleBudget - 1) / sampleBudget)
-        (n0, docs.where(col(idCol) % st0 === 0)
+        val n = docs.count()
+        val st = math.max(1L, (n + sampleBudget - 1) / sampleBudget)
+        docs.where(col(idCol) % st === 0)
           .select(col(idCol).as("qid"), col(textCol).as("qtext"))
-          .localCheckpoint(true)) // feeds both lanes
+          .localCheckpoint(true) // feeds both lanes
       } finally sc.setJobDescription(null)
-    val st = math.max(1L, (n + sampleBudget - 1) / sampleBudget)
     val direct = bm25TopK(docs, q, k, idCol = idCol, textCol = textCol)
     val indexed = bm25TopKIndexed(spark, root, q, k, nBuckets)
     val rr = direct.where(col("rnk") === 1).select(col("qid"), col("doc_id"))

@@ -17,6 +17,26 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  test("Verify's git stamp runs in the given directory and fails on a non-zero git exit") {
+    import java.nio.file.Files
+    def run(dir: java.io.File, args: String*): Int =
+      scala.util.Try(new ProcessBuilder(args: _*).directory(dir)
+        .redirectErrorStream(true).redirectOutput(ProcessBuilder.Redirect.DISCARD)
+        .start().waitFor()).getOrElse(-1)
+    val repo = Files.createTempDirectory("graft-stamp-repo").toFile
+    assume(run(repo, "git", "init", "-q") == 0, "git is not available")
+    assert(run(repo, "git", "-c", "user.name=t", "-c", "user.email=t@t",
+      "commit", "-q", "--allow-empty", "-m", "init") == 0)
+    val (sha, dirty) = Verify.gitStamp(repo.toString)
+    assert(sha.matches("[0-9a-f]{40}") && !dirty, s"stamp: $sha $dirty")
+    Files.writeString(repo.toPath.resolve("untracked"), "x")
+    assert(Verify.gitStamp(repo.toString) == (sha, true))
+    // outside any work tree git exits non-zero: the stamp fails instead
+    // of recording git's error text as the sha
+    val plain = Files.createTempDirectory("graft-stamp-plain").toString
+    intercept[IllegalStateException](Verify.gitStamp(plain))
+  }
+
   test("every query is oracled unless on the explicit rows-only list") {
     // rows-only means the op is genuinely not SQL-expressible in DuckDB.
     // Since r5 the multimodal stub codec is md5-derived, so even mm_* are

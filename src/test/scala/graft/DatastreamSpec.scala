@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -375,6 +375,119 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the time range must reach the parquet reader as a pushed filter
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(t,"),
       s"missing pushed time filter in:\n$plan")
+  }
+
+  /** Descriptions of the partition-discovery ("Listing leaf files") jobs
+    * Spark schedules while `body` runs, with its result. */
+  def listingJobs[T](body: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files")).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("getData above the 32-path listing threshold: one partition directory, zero listing jobs, same rows as the unified scan") {
+    import spark.implicits._
+    val ds = freshDs()
+    val src = ds.ensureStream(Map("name" -> "lsrc"))
+    val other = ds.ensureStream(Map("name" -> "lother"))
+    // 34 derived streams: each derived root then holds more stream
+    // directories than spark.sql.sources.parallelPartitionDiscovery.threshold
+    val nDerived = 34
+    val drv = ds.ensureStreams((0 until nDerived).map(i =>
+        EnsureSpec(Map("name" -> s"ld$i"), deriveFrom = Seq(src),
+          deriveOp = Some(DeriveOps.Derivative))))
+      .map(_.streamId.get)
+    val pts = for {
+      (id, k) <- Seq(src -> 1.0, other -> 3.0); d <- Seq(1, 2); h <- 0 until 24
+      m <- Seq(0, 30)
+    } yield (id, ts(f"2024-01-0$d%d $h%02d:$m%02d:00"), k * (d * 100 + h) + m)
+    ds.appendMultiple(pts.toDF("stream_id", "t", "v"))
+    ds.downsampleStreams(ts("2024-01-03 00:00:00"))
+    // engaged: the unified scan lists each derived root through a job
+    val (_, unified) = listingJobs(ds.datapoints.count())
+    assert(unified.nonEmpty,
+      "store is below the listing threshold; the pin is not engaged")
+
+    val lo = ts("2024-01-01 06:00:00")
+    val hi = ts("2024-01-02 03:00:00")
+    val vds = Seq("count", "sum", "min", "max")
+    for {
+      id <- Seq(src, drv.head, drv.last)
+      g <- Seq(Granularity.Seconds, Granularity.Hours)
+      (start, end) <- Seq((None, None), (Some(lo), Some(hi)))
+    } {
+      val raw = g == Granularity.Seconds
+      val (got, jobs) = listingJobs(ds.getData(id, g, start = start, end = end,
+          valueDownsamplers = if (raw) None else Some(vds),
+          timeDownsamplers = if (raw) None else Some(Seq("first")))
+        .collect().map(_.toSeq).toSeq)
+      assert(jobs.isEmpty, s"getData($id, ${g.name}) listed: $jobs")
+      val window = ds.datapoints.where(col("granularity") === g.name &&
+        col("stream_id") === id &&
+        start.fold(lit(true))(s => col("t") >= s) &&
+        end.fold(lit(true))(e => col("t") <= e))
+      val cols =
+        if (raw) Seq(col("t"), col("v_num"), col("v_json"))
+        else col("t") +: vds.map(n => col(Downsamplers.value(n))) :+ col("t_first")
+      val want = window.select(cols: _*).orderBy("t").collect().map(_.toSeq).toSeq
+      assert(want.nonEmpty, s"no fixture rows for $id at ${g.name}")
+      assert(got == want, s"getData($id, ${g.name}, $start, $end) differs")
+    }
+  }
+
+  test("routed reads heal stranded crash backups; a granularity with no directory reads empty") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-routed-heal").toString
+    val ds = new Datastream(spark, root)
+    val src = ds.ensureStream(Map("name" -> "hs"))
+    val drv = ds.ensureStream(Map("name" -> "hd"), deriveFrom = Seq(src),
+      deriveOp = Some(DeriveOps.Derivative))
+    // nothing materialized at Hours yet (no ladder run), and no derived
+    // rollups root at all: empty results, not "Path does not exist"
+    assert(ds.getData(src, Granularity.Hours).count() == 0L)
+    assert(ds.getData(drv, Granularity.Hours).count() == 0L)
+    ds.appendMultiple(Seq((src, ts("2024-01-01 00:00:10"), 1.0),
+      (src, ts("2024-01-01 00:01:10"), 4.0),
+      (src, ts("2024-01-02 00:00:10"), 9.0)).toDF("stream_id", "t", "v"))
+    assert(ds.getData(src, Granularity.Hours).count() == 0L)
+    assert(ds.getData(drv, Granularity.Days).count() == 0L)
+    def rows(id: String) =
+      ds.getData(id, Granularity.Seconds).collect().map(_.toSeq).toSeq
+    val srcRows = rows(src)
+    val drvRows = rows(drv)
+    assert(srcRows.size == 3 && drvRows.size == 2)
+
+    // a compaction crashed between swinging a derived leaf aside and
+    // swinging its replacement in: the leaf sits only in the backup tree
+    val rawRoot = s"$root/derived_raw"
+    val leaf = new java.io.File(s"$rawRoot/stream_id=$drv/granularity=seconds")
+      .listFiles().filter(_.getName.startsWith("ymd=")).head
+    val rel = s"stream_id=$drv/granularity=seconds/${leaf.getName}"
+    val bak = new java.io.File(s"$rawRoot.graft-parts-bak/$rel")
+    bak.getParentFile.mkdirs()
+    assert(leaf.renameTo(bak))
+    assert(rows(drv) == drvRows, "stranded derived leaf served as a hole")
+    assert(new java.io.File(s"$rawRoot/$rel").isDirectory)
+    assert(!new java.io.File(s"$rawRoot.graft-parts-bak").exists())
+
+    // a primary-root replace crashed between its two renames: only
+    // `<root>.graft-old` is left
+    val dp = new java.io.File(s"$root/datapoints")
+    assert(dp.renameTo(new java.io.File(s"$root/datapoints.graft-old")))
+    assert(rows(src) == srcRows, "stranded primary root served as empty")
+    assert(dp.isDirectory && !new java.io.File(s"$root/datapoints.graft-old").exists())
   }
 
   test("null values: ignored by value downsamplers, counted out of count") {

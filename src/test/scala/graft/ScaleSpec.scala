@@ -160,6 +160,73 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ds.getData(ids.head, graft.model.Granularity.Days).count() == 1L)
   }
 
+  test("catalog-routed store scans: a ladder over 34 derived streams lists each derived root at most once; a source-only cascade lists nothing") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-routed").toString
+    val ds = new graft.core.Datastream(spark, work)
+    val srcs = (0 until 4).map(i => ds.ensureStream(Map("rs" -> s"s$i")))
+    // 34 derived streams over source streams only — more stream
+    // directories per derived root than Spark lists without a job (32)
+    val drv = ds.ensureStreams((0 until 34).map(i => graft.model.EnsureSpec(
+        Map("rd" -> s"d$i"), deriveFrom = Seq(srcs(i % srcs.size)),
+        deriveOp = Some(graft.model.DeriveOps.Derivative))))
+      .map(_.streamId.get)
+    def batch(day: Int) = (for {
+      (id, k) <- srcs.zipWithIndex; h <- 0 until 24; m <- Seq(0, 30)
+    } yield (id, java.sql.Timestamp.valueOf(f"2024-04-$day%02d $h%02d:$m%02d:00"),
+        100.0 * day + h + m + k)).toDF("stream_id", "t", "v")
+    // until = the next midnight closes `day` at every ladder level
+    def closeOf(day: Int) =
+      java.sql.Timestamp.valueOf(f"2024-04-${day + 1}%02d 00:00:00")
+    // batch 1 materializes every derived stream's raw and rollup
+    // directories; batch 2 is the steady-state shape under test
+    ds.appendMultiple(batch(1))
+    ds.downsampleStreams(closeOf(1))
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description")))
+          .foreach(d => descs.add(
+            Option(j.properties.getProperty("graft.phase")).getOrElse("") -> d))
+    }
+    val b2 = batch(2)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setLocalProperty("graft.phase", "append")
+      ds.appendMultiple(b2)
+      spark.sparkContext.setLocalProperty("graft.phase", "ladder")
+      ds.downsampleStreams(closeOf(2))
+      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.phase", null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    val all = { import scala.jdk.CollectionConverters._; descs.asScala.toSeq }
+    def listings(phase: String) = all.collect {
+      case (p, d) if p == phase && d.startsWith("Listing leaf files") => d
+    }
+    // the cascade recomputed every derived stream from source streams:
+    // its scans never touch a derived root
+    assert(all.exists(x => x._1 == "append" && x._2.startsWith("cascade")),
+      "the batch did not run the derive cascade")
+    assert(listings("append").isEmpty,
+      s"source-only cascade listed: ${listings("append")}")
+    val levelsRun = all.collect { case ("ladder", d) if d.startsWith("ladder:") &&
+      graft.model.Granularity.byName.contains(d.stripPrefix("ladder:")) => d }.distinct
+    assert(levelsRun.size >= 4, s"ladder ran only $levelsRun")
+    val lad = listings("ladder")
+    Seq("derived_raw", "derived_rollups").foreach { r =>
+      val n = lad.count(_.contains(s"/$r/"))
+      assert(n <= 1, s"ladder listed $r $n times over ${levelsRun.size} levels")
+    }
+    assert(lad.size <= 2, s"ladder listing jobs: $lad")
+    // and the rollups are complete for the closed day
+    drv.take(2).foreach(id =>
+      assert(ds.getData(id, graft.model.Granularity.Days).count() >= 1L))
+  }
+
   test("bucketed tables join without a shuffle (co-located join)") {
     import spark.implicits._
     val orders = (1L to 1000L).map(i => (i, s"o$i")).toDF("okey", "odata")
