@@ -1772,8 +1772,11 @@ object SparkEntry {
       // space over the top-1000 tokens — the corpus-health check
       // (natural text sits near slope −1; template/spam corpora
       // don't). Counts and ranks are exact integers; the log sums are
-      // the only float step, round(4) absorbs ulps. The rank window is
-      // GLOBAL but vocabulary-scale (the q_ntile_cume dispensation).
+      // the only float step, round(4) absorbs ulps; + 0.0 after the
+      // round maps a rounded −0.0 to +0.0 on both engines (a fit of ±ulp
+      // noise rounds to a signed zero whose sign depends on summation
+      // order). The rank window is GLOBAL but vocabulary-scale (the
+      // q_ntile_cume dispensation).
       val tf = tbl(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("t"))
         .where(col("t") =!= "")
@@ -1798,10 +1801,10 @@ object SparkEntry {
           sum("y").as("sy"), sum(expr("x * y")).as("sxy"),
           sum(expr("x * x")).as("sxx"))
         .select(col("n").as("n_tokens"),
-          expr("round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)")
-            .as("zipf_slope"),
+          expr("round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)" +
+            " + CAST(0 AS DOUBLE)").as("zipf_slope"),
           expr("round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx))" +
-            " * sx) / n, 4)").as("intercept"))
+            " * sx) / n, 4) + CAST(0 AS DOUBLE)").as("intercept"))
     },
 
     "text_heaps_fit" -> { (s, dir) =>
@@ -1813,7 +1816,8 @@ object SparkEntry {
       // broadcast theta-join — never a per-prefix rescan), n_j = token
       // mass before cut_j. Counts/cuts are exact integers; ln + OLS is
       // the zipf lane's float discipline (round(4) absorbs sum-order
-      // ulps).
+      // ulps, + 0.0 makes the sign of a rounded zero canonical — a
+      // saturated vocabulary fits β = ±ulp noise).
       import s.implicits._
       val docs = tbl(s, dir, "documents").select("doc_id", "text")
       val toks = docs.select(col("doc_id"),
@@ -1835,10 +1839,10 @@ object SparkEntry {
           sum("y").as("sy"), sum(expr("x * y")).as("sxy"),
           sum(expr("x * x")).as("sxx"))
         .select(col("np").as("n_points"),
-          expr("round((np * sxy - sx * sy) / (np * sxx - sx * sx), 4)")
-            .as("heaps_beta"),
+          expr("round((np * sxy - sx * sy) / (np * sxx - sx * sx), 4)" +
+            " + CAST(0 AS DOUBLE)").as("heaps_beta"),
           expr("round((sy - ((np * sxy - sx * sy) / (np * sxx - sx * sx))" +
-            " * sx) / np, 4)").as("intercept"))
+            " * sx) / np, 4) + CAST(0 AS DOUBLE)").as("intercept"))
     },
 
     "text_hash_features" -> { (s, dir) =>
@@ -7510,8 +7514,13 @@ object SparkEntry {
       // tie group recomposes the identical rank, because dbkt is a
       // monotone prefix of the doc_id sort key — the same discipline
       // as the bkt rank below. ScaleSpec pins bit-equality + the plan.
-      val dDiv = math.max(1L, d.agg(max("doc_id")).head().getLong(0) / 256L + 1L)
-      val dd = d.withColumn("dbkt", expr(s"doc_id div ${dDiv}L"))
+      // The range width rides the plan as a one-row broadcast (no Spark
+      // action while the plan is built; an empty corpus has max = null,
+      // which coalesces to width 1).
+      val dDiv = d.agg(expr("greatest(1L, coalesce(max(doc_id), 0L) div 256 + 1)")
+        .as("ddiv"))
+      val dd = d.crossJoin(broadcast(dDiv))
+        .withColumn("dbkt", expr("doc_id div ddiv")).drop("ddiv")
       val wdc = Window.partitionBy("lang", "n_chars").orderBy("dbkt")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val dBelow = dd.groupBy("lang", "n_chars", "dbkt")
@@ -9176,7 +9185,8 @@ object SparkEntry {
         |ORDER BY mi_nats DESC, bucket""".stripMargin,
 
     "text_zipf_fit" ->
-      // same integer counts/ranks; the OLS double mirrors term-for-term
+      // same integer counts/ranks; the OLS double mirrors term-for-term,
+      // + 0.0 canonicalizes a rounded signed zero as on the Spark side
       """WITH t AS (SELECT unnest(string_split(text, ' ')) AS tok
         |  FROM documents),
         |c AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM t
@@ -9189,13 +9199,14 @@ object SparkEntry {
         |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx FROM p)
         |SELECT n AS n_tokens,
         |  round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4)
-        |    AS zipf_slope,
+        |    + CAST(0 AS DOUBLE) AS zipf_slope,
         |  round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx)
-        |    / n, 4) AS intercept
+        |    / n, 4) + CAST(0 AS DOUBLE) AS intercept
         |FROM g""".stripMargin,
 
     "text_heaps_fit" ->
-      // same exact-integer checkpoints; ln + OLS mirrors term-for-term
+      // same exact-integer checkpoints; ln + OLS mirrors term-for-term,
+      // + 0.0 canonicalizes a rounded signed zero as on the Spark side
       """WITH d AS (SELECT doc_id, text FROM documents),
         |t0 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
         |  FROM d),
@@ -9216,9 +9227,9 @@ object SparkEntry {
         |    sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx FROM p)
         |SELECT np AS n_points,
         |  round((np * sxy - sx * sy) / (np * sxx - sx * sx), 4)
-        |    AS heaps_beta,
+        |    + CAST(0 AS DOUBLE) AS heaps_beta,
         |  round((sy - ((np * sxy - sx * sy) / (np * sxx - sx * sx)) * sx)
-        |    / np, 4) AS intercept
+        |    / np, 4) + CAST(0 AS DOUBLE) AS intercept
         |FROM g""".stripMargin,
 
     "text_hash_features" ->

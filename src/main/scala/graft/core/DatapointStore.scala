@@ -153,11 +153,15 @@ object DatapointStore {
   /** Append to a derived-stream root: ONE partitioned write for all
     * derived streams together (never a job per stream), with stream_id as
     * the leading partition column so a recompute or delete drops one
-    * stream's data by removing its partition directory.
+    * stream's data by removing its partition directory. The repartition
+    * names its width (the session's default parallelism): every leaf
+    * still lands in one file, but AQE cannot coalesce a write of many
+    * small leaves into one task that creates them all serially.
     */
   def appendByStream(df: DataFrame, path: String): Unit =
     normalize(df)
-      .repartition(col("stream_id"), col("granularity"), col("ymd"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism,
+        col("stream_id"), col("granularity"), col("ymd"))
       .sortWithinPartitions("t")
       .write.mode(SaveMode.Append)
       .partitionBy("stream_id", "granularity", "ymd").parquet(path)

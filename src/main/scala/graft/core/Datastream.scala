@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
-import graft.operators.{Derive, Downsample}
+import graft.operators.{Derive, RollupLadder}
 
 /** Spark-native re-design of the reference's frontend `Datastream` class
   * (SURVEY.md §2.1, operators A1–A11; public wlanslovenija/datastream API —
@@ -1189,13 +1189,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       spark, p, Seq("stream_id", "granularity", "ymd"), minFiles, lenient))
   }
 
-  /** Fold new raw datapoints into every coarser granularity for all matched
-    * streams — one distributed job per ladder level, finest→coarsest, each
-    * level folding from the previous level's partial aggregates
-    * (SURVEY §2.2 note a: c/s/q/l/u compose, m/d derive; the nested ladder
-    * means completed coarse buckets are exactly unions of completed finer
-    * buckets). Only completed buckets (bucket end <= until) are written.
-    */
   /** Reference-parity overload: `until=None` means "now" (A10's default —
     * every bucket that has already closed in wall-clock time
     * materializes).
@@ -1203,12 +1196,21 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   def downsampleStreams(): Option[DataFrame] =
     downsampleStreams(new Timestamp(System.currentTimeMillis()))
 
+  /** Fold new raw datapoints into every coarser granularity for all matched
+    * streams in ONE pass ([[graft.operators.RollupLadder]]): after one
+    * high-water-mark scan, a single kernel job folds every level of every
+    * active stream, finest→coarsest per (stream, UTC day), each level from
+    * the previous level's partial aggregates (SURVEY §2.2 note a: c/s/q/l/u
+    * compose, m/d derive; the nested ladder means completed coarse buckets
+    * are exactly unions of completed finer buckets). Only completed
+    * buckets (bucket end <= until) are written, in one write per store
+    * root; `returnDatapoints` returns those rows.
+    */
   def downsampleStreams(until: Timestamp,
       queryTags: Map[String, String] = Map.empty,
       returnDatapoints: Boolean = false,
       filterStream: StreamDescriptor => Boolean = Datastream.AllStreams)
       : Option[DataFrame] = {
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // filterStream = the reference's filter_stream callback (A10): a
     // catalog-level predicate, evaluated on stream DESCRIPTORS (metadata
     // scale), never on datapoints
@@ -1217,8 +1219,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       .filter(id => filterStream(catalog(id)))
     if (ids.isEmpty || !datapointsExist) return None
     val hgOf = ids.map(id => id -> Granularity(catalog(id).highest_granularity)).toMap
-
-    val isNumeric = ids.map(id => id -> (catalog(id).value_type == ValueType.Numeric)).toMap
 
     // ACTIVE-SET pruning (driver-only, unrestricted runs): a stream can
     // contribute a new COMPLETED bucket at level g only if
@@ -1260,189 +1260,90 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     val needsAt: Map[String, Seq[String]] =
       Granularity.ladder.drop(1).map(g => g.name -> activeAt(g)).toMap
     val levels = Granularity.ladder.drop(1).filter(g => needsAt(g.name).nonEmpty)
+    if (levels.isEmpty) return None
 
     // the store is resolved ONCE per ladder run, over the active streams
-    // only: the hwm-scan and every level's fold scans share this one file
-    // listing (every ladder write is deferred past the loop, so it stays
-    // current). A derived root lists at most once per run — never per
-    // level — and only the active derived streams' directories.
+    // only: the hwm-scan and the fold kernel share this one file listing
+    // (the ladder's write follows both). A derived root lists at most once
+    // per run, and only the active derived streams' directories.
     val scanIds = levels.flatMap(g => needsAt(g.name)).distinct
-    lazy val store = scanDirs(streamDirs(scanIds))
+    val store = scanDirs(streamDirs(scanIds))
 
-    // ONE scan resolves every remaining level's per-stream high-water
-    // marks (max materialized bucket) up front — granularity is a
-    // partition column and the union of active sets prunes stream_id, so
-    // this pays the scan job once per ladder run, not once per level, and
-    // only over active streams. Levels whose partitions were never
-    // materialized cost nothing (directory probe).
-    val scannable = levels.map(_.name).filter(granularityExists)
-    spark.sparkContext.setJobDescription("ladder:hwm-scan")
-    val hwmByLevel: Map[String, Seq[(String, Timestamp)]] =
-      if (scannable.isEmpty) Map.empty
-      else filterToStreams(
-          store.where(col("granularity").isin(scannable: _*)), scanIds)
-        .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
-        .collect().toSeq
-        .groupBy(_.getString(1))
-        .map { case (g, rs) =>
-          g -> rs.map(r => (r.getString(0), r.getTimestamp(2))) }
-
-    // per target level: streams that need it, split by fold source and by
-    // value type (numeric folds all 10 aggregates; nominal/graph fold count
-    // + time downsamplers only — SURVEY §1.4).
-    //
-    // r10 job-count shape: the per-level loop CHAINS — level g+1 folds
-    // from the on-disk prev-level partials UNION level g's just-computed
-    // checkpointed frame — and ALL writes defer to ONE union write per
-    // root after the loop. The r9 per-level write-then-reread loop cost
-    // 6-7 jobs per level (checkpoint + two partitioned writes each);
-    // deferred, a ladder run is one checkpoint per level + 2 writes
-    // total. (Distinct from the r2 negative result, which chained
-    // persist()-cached levels with per-level writes: localCheckpoint
-    // chaining with deferred writes adds no cache-materialization jobs.)
-    // Frontier/pending advance only AFTER the union write lands — a
-    // crash mid-ladder leaves store and coverage maps at the pre-run
-    // state together.
-    val newByLevel = scala.collection.mutable.Map[String, DataFrame]()
-    val pendingWrites =
-      scala.collection.mutable.ArrayBuffer[(DataFrame, Seq[String])]()
-    // AQE OFF for the per-level fold checkpoints: AQE executes each
-    // checkpoint as shuffle-stage job + result-stage job (2 jobs/level,
-    // measured); these folds are fixed-shape small aggregates whose
-    // partition sizing is already pinned by the session conf, so
-    // runtime re-planning buys nothing here and doubles the per-batch
-    // scheduler floor. Restored before the union write (writes keep
-    // AQE: partition coalescing DOES matter for output file counts).
+    // AQE OFF for the hwm-scan and the fold checkpoint: AQE executes a
+    // checkpointed aggregate as shuffle-stage job + result-stage job;
+    // these are fixed-shape jobs whose partition sizing is pinned here, so
+    // runtime re-planning buys nothing and doubles the per-batch scheduler
+    // floor. Restored before the write (writes keep AQE: partition
+    // coalescing DOES matter for output file counts).
     // SCOPE CAVEAT: spark.conf is session-global, so any query PLANNED
-    // on this SparkSession while the fold loop runs inherits AQE-off
-    // and the shrunken shuffle width. That is inside this store's
-    // contract — the owning driver runs ingest/downsample synchronously
-    // (the one-owner model every mutation path here assumes) — but a
-    // deployment sharing the session with ad-hoc readers should run
-    // ladders on a cloned session (SparkSession.cloneSession gives a
-    // separate conf over the same shared state) if concurrent planning
-    // matters.
+    // on this SparkSession while the ladder runs inherits AQE-off and the
+    // shrunken shuffle width. That is inside this store's contract — the
+    // owning application runs ingest/downsample synchronously (the one-owner
+    // model every mutation path here assumes) — but a deployment sharing
+    // the session with ad-hoc readers should run ladders on a cloned
+    // session (SparkSession.cloneSession gives a separate conf over the
+    // same shared state) if concurrent planning matters.
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     // a 1/16 slice of the session's shuffle width stands in for AQE's
-    // coalescing on these metadata-scale folds — scales with a real
-    // deployment's conf while keeping the local replay's reduce tasks
-    // near what AQE-on produced
+    // coalescing on the metadata-scale hwm aggregate
     spark.conf.set("spark.sql.shuffle.partitions",
       math.max(2, prevParts.toInt / 16).toString)
-    try levels.foreach { g =>
-      val needs = needsAt(g.name)
-      spark.sparkContext.setJobDescription(s"ladder:${g.name}")
-      if (needs.nonEmpty) {
-        val prev = Granularity.ladder(Granularity.ladder.indexOf(g) - 1)
-        val (fromPartials, fromRaw) =
-          needs.partition(id => hgOf(id).seconds < prev.seconds)
+    val folded = try {
+      // ONE scan resolves every level's per-stream high-water marks (max
+      // materialized bucket) up front — granularity is a partition column
+      // and the union of active sets prunes stream_id, so this is one job
+      // per ladder run, over active streams only. Levels whose partitions
+      // were never materialized cost nothing (directory probe).
+      val scannable = levels.map(_.name).filter(granularityExists)
+      spark.sparkContext.setJobDescription("ladder:hwm-scan")
+      val hwm: Map[(String, String), Long] =
+        if (scannable.isEmpty) Map.empty
+        else filterToStreams(
+            store.where(col("granularity").isin(scannable: _*)), scanIds)
+          .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
+          .collect().iterator
+          .map(r => (r.getString(0), r.getString(1)) ->
+            Math.floorDiv(r.getTimestamp(2).getTime, 1000L))
+          .toMap
 
-        // high-water mark per stream at this level, from the front-loaded
-        // scan. Small active sets inline as a literal map filter (no join
-        // stage, one fewer AQE job per level); large ones ride a
-        // broadcast join (a million-entry literal would explode the
-        // plan) — the filterToStreams tiering.
-        val levelExists = scannable.contains(g.name)
-        val hwms = hwmByLevel.getOrElse(g.name, Seq.empty)
-
-        def newBuckets(src: DataFrame): DataFrame =
-          if (!levelExists || hwms.isEmpty) src
-          else if (hwms.size <= 256) {
-            val m = typedLit(hwms.map { case (id, t) =>
-              id -> Math.floorDiv(t.getTime, 1000L)
-            }.toMap)
-            src.where(element_at(m, col("stream_id")).isNull ||
-              unix_timestamp(col("t")) >=
-                element_at(m, col("stream_id")) + g.seconds)
-          } else {
-            val existing = broadcast(hwms.toDF("stream_id", "hwm"))
-            src.join(existing, Seq("stream_id"), "left")
-              .where(col("hwm").isNull ||
-                     unix_timestamp(col("t")) >= unix_timestamp(col("hwm")) + g.seconds)
-              .drop("hwm")
-          }
-
-        def rawOf(idsSel: Seq[String]): DataFrame = filterToStreams(
-          store.where(
-            col("granularity").isin(idsSel.map(hgOf(_).name).distinct: _*)),
-          idsSel)
-
-        // fold source: disk partials of the previous level plus — writes
-        // being deferred — the previous level's in-memory new rows
-        def fineOf(idsSel: Seq[String], cols: Seq[String]): DataFrame = {
-          val disk = filterToStreams(
-              store.where(col("granularity") === prev.name), idsSel)
-            .select(cols.map(col): _*)
-          newByLevel.get(prev.name) match {
-            case Some(mem) => disk.unionByName(
-              filterToStreams(mem, idsSel).select(cols.map(col): _*))
-            case None => disk
-          }
+      // per stream: which levels this run folds, each from its threshold
+      // (high-water bucket + g.seconds: only buckets past what is on disk)
+      val needSets = levels.map(g => g -> needsAt(g.name).toSet)
+      val plans = scanIds.map { id =>
+        val thr = Array.fill(Granularity.ladder.size)(RollupLadder.Skip)
+        needSets.foreach { case (g, need) =>
+          if (need(id)) thr(g.level) =
+            hwm.get((id, g.name)).fold(Long.MinValue)(_ + g.seconds)
         }
+        id -> RollupLadder.StreamPlan(
+          catalog(id).value_type == ValueType.Numeric, hgOf(id).level, thr)
+      }.toMap
 
-        val (rawNum, rawCnt) = fromRaw.partition(isNumeric)
-        val (partNum, partCnt) = fromPartials.partition(isNumeric)
-        val parts = Seq(
-          if (rawNum.nonEmpty)
-            Some(Downsample.toGranularity(
-              newBuckets(rawOf(rawNum).select(col("stream_id"), col("t"),
-                col("v_num").as("v"))), g, Some(until)))
-          else None,
-          if (rawCnt.nonEmpty)
-            Some(Downsample.countOnlyToGranularity(
-              newBuckets(rawOf(rawCnt).select(col("stream_id"), col("t"),
-                col("v_json"))), g, Some(until)))
-          else None,
-          if (partNum.nonEmpty) {
-            val fine = fineOf(partNum, Seq("stream_id", "t", "c", "s", "q",
-              "l", "u", "t_first", "t_last", "t_mean"))
-            Some(Downsample.foldToCoarser(newBuckets(fine), g)
-              .where(unix_timestamp(col("t")) + g.seconds <= lit(until.getTime / 1000L)))
-          } else None,
-          if (partCnt.nonEmpty) {
-            val fine = fineOf(partCnt, Seq("stream_id", "t", "c",
-              "t_first", "t_last", "t_mean"))
-            Some(Downsample.countOnlyFold(newBuckets(fine), g)
-              .where(unix_timestamp(col("t")) + g.seconds <= lit(until.getTime / 1000L)))
-          } else None
-        ).flatten
-
-        parts.reduceOption(_.unionByName(_, allowMissingColumns = true))
-          .foreach { out =>
-            // ALWAYS checkpoint: the frame is the next level's chained
-            // fold source and the deferred write source. localCheckpoint,
-            // NOT persist: caching under AQE materializes as extra
-            // jobs/tasks per consumer (measured r2/r7)
-            val frame = out.localCheckpoint(true)
-            newByLevel(g.name) = frame
-            // derived streams' rollups go to their own root (so a later
-            // recompute never touches the primary table)
-            pendingWrites +=
-              ((frame, needs.filter(id => catalog(id).derive_op.isDefined)))
-            if (returnDatapoints) emitted += DatapointStore.normalize(frame)
-          }
-      }
+      // every level of every active stream in ONE kernel job; checkpointed
+      // because the write and return_datapoints both read it.
+      // localCheckpoint, NOT persist: caching under AQE materializes as
+      // extra jobs/tasks per consumer (measured r2/r7)
+      spark.sparkContext.setJobDescription("ladder:fold")
+      RollupLadder.fold(store, plans, until.getTime / 1000L,
+        spark.sparkContext.defaultParallelism).localCheckpoint(true)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
 
-    // the whole ladder's output lands in ONE union write per root
-    if (pendingWrites.nonEmpty) {
-      spark.sparkContext.setJobDescription("ladder:write")
-      val union = pendingWrites.map(_._1)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-      val derived = pendingWrites.flatMap(_._2).distinct.toSeq
-      if (derived.nonEmpty) {
-        DatapointStore.append(
-          union.where(!col("stream_id").isin(derived: _*)), datapointsPath)
-        // ALL derived streams' rollups (all levels) in one write
-        DatapointStore.appendByStream(
-          union.where(col("stream_id").isin(derived: _*)), rollupsPath)
-      } else DatapointStore.append(union, datapointsPath)
-    }
+    // the whole ladder's output lands in ONE write per root; derived
+    // streams' rollups go to their own root (so a later recompute never
+    // touches the primary table)
+    spark.sparkContext.setJobDescription("ladder:write")
+    val derived = scanIds.filter(id => catalog(id).derive_op.isDefined)
+    if (derived.nonEmpty) {
+      DatapointStore.append(
+        folded.where(!col("stream_id").isin(derived: _*)), datapointsPath)
+      DatapointStore.appendByStream(
+        folded.where(col("stream_id").isin(derived: _*)), rollupsPath)
+    } else DatapointStore.append(folded, datapointsPath)
 
     if (unrestricted) levels.foreach { g =>
       // frontier: every bucket ending <= until is now materialized (or
@@ -1467,7 +1368,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       ()
     }
     spark.sparkContext.setJobDescription(null)
-    emitted.reduceOption(_.unionByName(_))
+    if (returnDatapoints) Some(DatapointStore.normalize(folded)) else None
   }
 
   private def noteDataWritten(loSec: Long, ids: Iterable[String]): Unit =

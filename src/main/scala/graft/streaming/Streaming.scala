@@ -292,11 +292,11 @@ object Streaming {
   case class ResetEvent(stream_id: String, t: Timestamp)
 
   /** Union row of the two V4 inputs; reset rows carry v = 0 (unused).
-    * (private[streaming], not private: Spark codegen instantiates the
+    * (private[graft], not private: Spark codegen instantiates the
     * encoder's deserialized class reflectively — object-private compiles
     * to bytecode janino cannot reference.)
     */
-  private[streaming] case class TaggedPoint(stream_id: String, t: Timestamp,
+  private[graft] case class TaggedPoint(stream_id: String, t: Timestamp,
       v: Double, is_reset: Boolean)
 
   /** Two-input V4 state: last SOURCE point (reset rows never become the
@@ -306,7 +306,7 @@ object Streaming {
     * pending reset applies once a source row at or past its timestamp
     * folds). Sentinel Long.MinValue = "none yet". Times are epoch millis.
     */
-  private[streaming] case class CounterResetState(prevT: Long, prevV: Double,
+  private[graft] case class CounterResetState(prevT: Long, prevV: Double,
       lastResetT: Long, pending: Seq[Long])
 
   /** Stateful streaming V4 `counter_derivative` with a LIVE reset stream
@@ -380,7 +380,7 @@ object Streaming {
     * enclosing object and fail task serialization — the holder object
     * is the closure's only capture.
     */
-  private[streaming] object CoreFolds extends Serializable {
+  private[graft] object CoreFolds extends Serializable {
 
   /** The V2 per-point fold body, shared verbatim by [[derivative]] and
     * the one-stateful-op skewed lane [[derivativeSkewed]] so the two can
@@ -444,6 +444,25 @@ object Streaming {
     }
     (out, st.copy(pending = pending))
   }
+
+  /** One drain of the fused skewed V4 buffer ([[counterDerivativeWithResetsSkewed]]):
+    * buffered rows with t < `wmMs` release into [[foldCounterReset]] in
+    * (t, reset-first, v) order; the rest stay held. Strict `<`: late rows
+    * are dropped against the PREVIOUS batch's watermark but drain
+    * against the current one, so a row with t == watermark can be due on
+    * arrival — and a union-fed operator may hand a key's rows to
+    * handleInputRows in more than one call per micro-batch. Holding it
+    * one more drain lets a same-t reset from a later call of the batch
+    * still fold first. Returns (emitted, held, state after the fold).
+    */
+  def drainCounterReset(key: String, buffered: Seq[TaggedPoint],
+      st0: CounterResetState, wmMs: Long, maxValue: Option[Double])
+      : (Seq[Point], Seq[TaggedPoint], CounterResetState) = {
+    val (due, hold) = buffered.partition(_.t.getTime < wmMs)
+    val (out, st1) = foldCounterReset(key,
+      due.sortBy(p => (p.t.getTime, !p.is_reset, p.v)), st0, maxValue)
+    (out, hold, st1)
+  }
   } // CoreFolds
 
   /** [[counterDerivativeWithResets]] under bounded-skew delivery on BOTH
@@ -461,8 +480,11 @@ object Streaming {
     * buffer releases each key's due rows in (t, reset-first, v) order —
     * exactly the in-order feed the fold is pinned against — and the
     * early-not-late reset contract is mechanical: a reset with
-    * t_r <= t_s drains in the same-or-earlier micro-batch as that
-    * source row (both release when wm >= their t).
+    * t_r <= t_s drains in the same-or-earlier drain as that source row
+    * (both release once wm > their t — strict, so a reset ON the
+    * watermark that arrives in a later call of the same micro-batch
+    * still precedes its same-t source row; see
+    * [[CoreFolds.drainCounterReset]]).
     *
     * Watermark shape: each feed keeps its OWN EventTimeWatermark node
     * BEFORE the union, so the operator's watermark is the min-policy
@@ -498,26 +520,25 @@ object Streaming {
       }
       private def drain(key: String, wmMs: Long): Iterator[Point] = {
         val all = buf.get().toSeq
-        val (due, hold) = all.partition(_.t.getTime <= wmMs)
+        val st0 =
+          if (fst.exists()) fst.get()
+          else CounterResetState(none, 0.0, none, Nil)
+        val (out, hold, st1) =
+          CoreFolds.drainCounterReset(key, all, st0, wmMs, maxValue)
         buf.clear()
+        getHandle.listTimers().foreach(getHandle.deleteTimer)
         if (hold.nonEmpty) {
           buf.appendList(hold.toArray)
-          // one armed timer at the earliest held row (the reorderBuffer
-          // discipline): fires when the watermark passes it even if this
-          // key never sees another row
-          getHandle.listTimers().foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(hold.map(_.t.getTime).min)
-        } else getHandle.listTimers().foreach(getHandle.deleteTimer)
-        if (due.isEmpty) Iterator.empty
-        else {
-          val sorted = due.sortBy(p => (p.t.getTime, !p.is_reset, p.v))
-          val st0 =
-            if (fst.exists()) fst.get()
-            else CounterResetState(none, 0.0, none, Nil)
-          val (out, st1) = CoreFolds.foldCounterReset(key, sorted, st0, maxValue)
-          fst.update(st1)
-          out.iterator
+          // one armed timer 1 ms past the earliest held row (the
+          // reorderBuffer discipline): fires once the watermark passes
+          // it even if this key never sees another row. Not AT the row:
+          // under the strict release rule that timer could fire at
+          // wm == t, release nothing, and take the re-armed timer (same
+          // key and time) with it when the fired one is deleted
+          getHandle.registerTimer(hold.map(_.t.getTime).min + 1L)
         }
+        if (hold.size < all.size) fst.update(st1)
+        out.iterator
       }
       override def handleInputRows(key: String, rows: Iterator[TaggedPoint],
           timerValues: TimerValues): Iterator[Point] = {

@@ -5370,5 +5370,61 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"weighted lane mishandled nulls: ${wmed.toSeq}")
   }
 
+  test("text_heaps_fit / text_zipf_fit: growing vocabulary fits beta > 0, every fit value sign-canonical") {
+    import spark.implicits._
+    // the gate corpus saturates its vocabulary, so beta is ±ulp noise that
+    // round(4) turns into a signed zero; the fits add 0.0 after rounding
+    // on both engines. Pin both regimes: a vocabulary that grows (one new
+    // token per document, beta well above 0, checked against a direct OLS
+    // of the ten checkpoints) and one that saturates (beta exactly +0.0)
+    def negZero(x: Double) =
+      java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(-0.0)
+    def corpus(grow: Boolean) = (0 until 100).map { i =>
+      val fresh = if (grow) s" new$i" else ""
+      (i.toLong, s"a b c d ${"x" * (1 + i % 3)}$fresh")
+    }
+    for (grow <- Seq(true, false)) {
+      val docs = corpus(grow)
+      val dir = java.nio.file.Files.createTempDirectory("graft-heaps").toString
+      docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+      val heaps = SparkEntry.queries("text_heaps_fit")(spark, dir).collect()
+      val zipf = SparkEntry.queries("text_zipf_fit")(spark, dir).collect()
+      assert(heaps.length == 1 && zipf.length == 1)
+      val (beta, hIcpt) = (heaps.head.getDouble(1), heaps.head.getDouble(2))
+      val (slope, zIcpt) = (zipf.head.getDouble(1), zipf.head.getDouble(2))
+      Seq(beta, hIcpt, slope, zIcpt).foreach(x =>
+        assert(!negZero(x), s"grow=$grow: a fit emitted -0.0 ($beta $hIcpt $slope $zIcpt)"))
+      // direct OLS over the same checkpoints: V_j = tokens first seen
+      // before cut_j, n_j = token mass before cut_j
+      val toks = docs.map { case (id, t) => id -> t.split(" ").toSeq }
+      val pts = (1 to 10).map { j =>
+        val cut = docs.size * j / 10
+        val before = toks.filter(_._1 < cut)
+        (math.log(before.map(_._2.size).sum.toDouble),
+          math.log(before.flatMap(_._2).distinct.size.toDouble))
+      }
+      val n = pts.size
+      val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
+      val sxy = pts.map(p => p._1 * p._2).sum
+      val sxx = pts.map(p => p._1 * p._1).sum
+      val expected = (n * sxy - sx * sy) / (n * sxx - sx * sx)
+      if (grow) assert(beta > 0.1 && math.abs(beta - expected) < 1e-4,
+        s"growing vocabulary: beta $beta, direct OLS $expected")
+      else assert(beta == 0.0 && math.abs(expected) < 1e-9,
+        s"saturated vocabulary: beta $beta, direct OLS $expected")
+    }
+  }
+
+  test("pipe_curriculum builds and runs on an empty corpus (null-safe doc_id range width)") {
+    import spark.implicits._
+    // max(doc_id) over no documents is null; the tie-range width must
+    // coalesce instead of throwing while the query is built
+    val dir = java.nio.file.Files.createTempDirectory("graft-curr").toString
+    Seq.empty[(Long, String, String, String, Long)]
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("pipe_curriculum")(spark, dir).count() == 0L)
+  }
+
   override def afterAll(): Unit = spark.stop()
 }

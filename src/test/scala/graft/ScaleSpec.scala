@@ -20,12 +20,14 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("rollup ladder job count stays bounded (defer-write chained shape, r10)") {
+  test("rollup ladder job count stays bounded (one-pass kernel, fixed per run)") {
     import spark.implicits._
     // the r9 per-level write-then-reread loop cost 6-7 Spark jobs per
     // ladder level (36-44 per live ingest batch); the r10 defer-write
-    // chain is ~2-3 per level + one union write per root. This pins the
-    // shape: a reintroduced per-level write would trip the bound.
+    // chain ~2-3 per level + one union write per root. The one-pass
+    // kernel is hwm-scan + threshold broadcast + fold + the write, a
+    // fixed count for all 6 levels this run folds: a reintroduced
+    // per-level job would trip the bound.
     val work = Files.createTempDirectory("graft-ladderjobs").toString
     val ds = new graft.core.Datastream(spark, work)
     val ids = (0 until 4).map(i => ds.ensureStream(Map("lj" -> s"s$i")))
@@ -53,7 +55,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     val n = jobs.get()
-    assert(n > 0 && n <= 30, s"steady-state ladder run used $n jobs (bound 30)")
+    assert(n > 0 && n <= 6, s"steady-state ladder run used $n jobs (bound 6)")
     // and the rollups are complete: day 1 is the only COMPLETED day
     // bucket (day 2's bucket ends after until=23:30, the completed-bucket
     // rule holds it back)
@@ -130,11 +132,12 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       byTag.asScala.map { case (k, v) => k -> v.toInt }.toMap
     }
     info(s"10k-stream live batch: ${total.get()} jobs by phase $tags")
-    // (a) same bound the 4-stream ladder test pins — job counts are a
-    // function of ladder LEVELS, not stream count
+    // (a) job counts are not a function of stream count: the ladder's
+    // share stays under the same fixed bound the 4-stream ladder test
+    // pins (6), the whole live batch under 30
     assert(total.get() <= 30,
       s"10k-stream live batch used ${total.get()} jobs ($tags)")
-    assert(tags.filter(_._1 == "ladder").values.sum <= 14,
+    assert(tags.filter(_._1 == "ladder").values.sum <= 6,
       s"ladder jobs grew with stream count: $tags")
     // (b) the per-stream checks/extrema fold stays ONE job at 10k streams
     assert(tags.getOrElse("append", 0) <= 4 && tags.nonEmpty, s"append phase: $tags")
@@ -213,8 +216,13 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the batch did not run the derive cascade")
     assert(listings("append").isEmpty,
       s"source-only cascade listed: ${listings("append")}")
-    val levelsRun = all.collect { case ("ladder", d) if d.startsWith("ladder:") &&
-      graft.model.Granularity.byName.contains(d.stripPrefix("ladder:")) => d }.distinct
+    // the ladder folded several levels: the closed day has rollup rows at
+    // >= 4 levels (read from the store — the one-pass kernel folds every
+    // level in one job, so job tags no longer name levels)
+    val day2 = Some(java.sql.Timestamp.valueOf("2024-04-02 00:00:00"))
+    val levelsRun = graft.model.Granularity.ladder.drop(1).filter(g =>
+      ds.getData(drv.head, g, start = day2, end = Some(closeOf(2)),
+        endExclusive = true).count() > 0L).map(_.name)
     assert(levelsRun.size >= 4, s"ladder ran only $levelsRun")
     val lad = listings("ladder")
     Seq("derived_raw", "derived_rollups").foreach { r =>

@@ -245,6 +245,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v4Fused.nonEmpty)
   }
 
+  test("fused skewed V4 drain holds rows on the watermark: a reset from a later call of the batch still folds first") {
+    // Late rows are dropped against the PREVIOUS batch's watermark but
+    // drain against the current one, so a row with t == watermark is due
+    // on arrival, and a union-fed stateful operator can hand a key's rows
+    // to handleInputRows in more than one call per micro-batch. Replay
+    // the processor's drains for that split: call 1 brings a counter
+    // wrap (100 -> 10) exactly on the watermark, call 2 its reset. The
+    // wrap must not fold before the reset arrives.
+    import Streaming.{CoreFolds, CounterResetState, TaggedPoint}
+    val t0 = ts("2024-01-01 00:00:00").getTime
+    val wm = t0 + 60000L
+    def pt(ms: Long, v: Double) = TaggedPoint("a", new Timestamp(ms), v, is_reset = false)
+    val st0 = CounterResetState(t0, 100.0, Long.MinValue, Nil)
+    val (out1, held1, st1) = CoreFolds.drainCounterReset(
+      "a", Seq(pt(wm, 10.0)), st0, wm, Some(120.0))
+    assert(out1.isEmpty && held1.size == 1,
+      s"a row on the watermark folded before its batch ended: $out1")
+    val reset = TaggedPoint("a", new Timestamp(wm), 0.0, is_reset = true)
+    val (out2, held2, _) = CoreFolds.drainCounterReset(
+      "a", held1 :+ reset, st1, wm, Some(120.0))
+    assert(out2.isEmpty && held2.size == 2)
+    // the next batch's watermark is past both: reset first, interval
+    // suppressed
+    val (out3, held3, _) = CoreFolds.drainCounterReset(
+      "a", held2, st1, wm + 1000L, Some(120.0))
+    assert(held3.isEmpty && out3.isEmpty,
+      s"the reset on the watermark did not suppress the wrap: $out3")
+    // control: without the reset the wrap emits (120 - 100 + 10) / 60
+    val (ctl, _, _) = CoreFolds.drainCounterReset(
+      "a", held1, st1, wm + 1000L, Some(120.0))
+    assert(ctl.map(_.v) == Seq(0.5))
+  }
+
   test("streaming ACF sufficient statistics == batch autocorr across micro-batches") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
