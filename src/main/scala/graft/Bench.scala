@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import graft.obs.{GraftSession, Json, Meter, Reading}
 
 /** Driver-contract benchmark: run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and print ONE JSON line with per-query seconds.
@@ -13,63 +13,33 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     // native fns + the size(split)->graft_ntokens optimizer rule, installed
     // up front so every query plans identically regardless of run order
     graft.functions.GraftFunctions.register(spark)
 
-    // per-query job/task counts via listener — the machine-load-immune
-    // metric (BASELINE.md: wall seconds vary ±2-3× with load; task counts
-    // are stable). Counted OUTSIDE the timed window: the settle wait runs
-    // after the timer stops, so listener latency never bills to a query.
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    // executor CPU nanos summed across finished tasks — the load-robust
-    // currency: sandbox contention inflates wall 2-3× round-to-round at
-    // identical task counts (BENCH_r05 178.6 s vs a controlled 114.7 s),
-    // but CPU-time charged to the query's own work barely moves. In
+    // per-query jobs/tasks/executor CPU, by site (job description). Task
+    // counts are the machine-load-immune metric (BASELINE.md: wall seconds
+    // vary ±2-3× with load); executor CPU is the load-robust currency
+    // (sandbox contention inflates wall 2-3× round-to-round at identical
+    // task counts, BENCH_r05 178.6 s vs a controlled 114.7 s). In
     // local[32] a parallel query's cpu may legitimately exceed its wall.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = e.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-        ()
-      }
-    })
-    def settle(): Unit = {
-      // listener delivery is async: wait (briefly) until counters stop
-      var last = -1L
-      var spins = 0
-      while (jobs.get() + tasks.get() + cpuNs.get() != last && spins < 20) {
-        last = jobs.get() + tasks.get() + cpuNs.get(); Thread.sleep(100); spins += 1
-      }
-    }
+    // Each read drains the listener bus outside the timed window.
+    val meter = Meter.attach(spark)
 
-    case class R(sec: Double, cpuSec: Double, jobs: Long, tasks: Long)
+    case class R(sec: Double, counted: Reading) {
+      def cpuSec: Double = if (sec < 0) -1.0 else counted.cpuNs / 1e9
+    }
     def run(name: String): R = {
-      settle()
-      val (j0, k0, c0) = (jobs.get(), tasks.get(), cpuNs.get())
+      val before = meter.read()
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return R(-1.0, -1.0, 0, 0) }
+        return R(-1.0, Reading(Map.empty)) }
       val sec = (System.nanoTime() - t0) / 1e9
-      settle()
-      R(sec, (cpuNs.get() - c0) / 1e9, jobs.get() - j0, tasks.get() - k0)
+      R(sec, meter.read() - before)
     }
 
     run("q1_pricing_summary") // warmup (untimed)
@@ -82,10 +52,6 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val cpuResults = results0.map { case (n, r) => n -> r.cpuSec }
     val cpuTotal = cpuResults.map(_._2).filter(_ >= 0).sum
-    // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
-    // comma-decimal locale would corrupt the driver-parsed JSON line
-    def fmt(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // Full per-query map → local file (for BASELINE bookkeeping). The
     // stdout line itself must stay SHORT: the bench driver parses it from
     // a 2000-char tail of the run output (BENCH_r02.json shows the r2
@@ -93,19 +59,23 @@ object Bench {
     // "parsed": null). Budget the line to ~1750 chars — slowest queries
     // first so the hot spots always survive the cut — and leave room for
     // sbt's trailing "[success] Total time ..." line.
-    val fullJson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val fullJson = results.map { case (k, v) => "\"" + k + "\":" + Json.num(v) }
       .mkString("{", ",", "}")
-    val cpuJson = cpuResults.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val cpuJson = cpuResults.map { case (k, v) => "\"" + k + "\":" + Json.num(v) }
       .mkString("{", ",", "}")
-    val jobsJson = results0.map { case (k, r) => "\"" + k + "\":" + r.jobs }
+    val jobsJson = results0.map { case (k, r) => "\"" + k + "\":" + r.counted.jobs }
       .mkString("{", ",", "}")
-    val tasksJson = results0.map { case (k, r) => "\"" + k + "\":" + r.tasks }
+    val tasksJson = results0.map { case (k, r) => "\"" + k + "\":" + r.counted.tasks }
       .mkString("{", ",", "}")
-    val tasksTotal = results0.map(_._2.tasks).sum
+    // per-query site → jobs/tasks/cpu_s: each query's sites sum to its
+    // jobs and tasks above
+    val phasesJson = results0.map { case (k, r) => "\"" + k + "\":" + r.counted.toJson }
+      .mkString("{", ",", "}")
+    val tasksTotal = results0.map(_._2.counted.tasks).sum
     try Files.writeString(Paths.get("bench_full.json"),
-      s"""{"total":${fmt(total)},"cpu_total":${fmt(cpuTotal)},""" +
+      s"""{"total":${Json.num(total)},"cpu_total":${Json.num(cpuTotal)},""" +
         s""""queries":$fullJson,"cpu":$cpuJson,""" +
-        s""""jobs":$jobsJson,"tasks":$tasksJson,""" +
+        s""""jobs":$jobsJson,"tasks":$tasksJson,"phases":$phasesJson,""" +
         s""""tasks_total":$tasksTotal,"sf":"$sfDir"}""")
     catch { case e: Throwable =>
       System.err.println(s"[bench] bench_full.json write failed: $e") }
@@ -127,10 +97,10 @@ object Bench {
     def tailFor(nReported: Any) =
       s""""n_queries":${results.size},"n_reported":$nReported,""" +
         s""""queries_truncated":${nReported != results.size},""" +
-        s""""wall_total":${fmt(total)},""" +
+        s""""wall_total":${Json.num(total)},""" +
         s""""tasks_total":$tasksTotal,""" +
         s""""full_metrics":"bench_full.json","sf":"$sfDir"}"""
-    val head = s"""{"metric":"executor_cpu_total","value":${fmt(cpuTotal)},""" +
+    val head = s"""{"metric":"executor_cpu_total","value":${Json.num(cpuTotal)},""" +
       s""""unit":"sec","queries":{"""
     val wallGlue = """},"wall":{"""
     val closeGlue = "},"
@@ -138,7 +108,7 @@ object Bench {
     var room = 1750 - head.length - wallGlue.length - closeGlue.length -
       tailFor(9999).length
     val kept = cpuResults.sortBy(-_._2).iterator.map { case (k, v) =>
-      ("\"" + k + "\":" + fmt(v), "\"" + k + "\":" + fmt(wallByName(k)))
+      ("\"" + k + "\":" + Json.num(v), "\"" + k + "\":" + Json.num(wallByName(k)))
     }.takeWhile { case (c, w) => room -= c.length + w.length + 2; room >= 0 }
       .toSeq
     println(head + kept.map(_._1).mkString(",") + wallGlue +

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.obs.GraftSession
 
 /** Dev tool: dump formatted physical plans of headline queries so scan
   * pushdown (PushedFilters/ReadSchema), broadcast choices and
@@ -9,13 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     graft.functions.GraftFunctions.register(spark)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.obs.{GraftSession, Json}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,14 +9,7 @@ object Verify {
     // iteration re-check one query without a full 106-query dump.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus)
     // native fns + the size(split)->graft_ntokens optimizer rule, installed
     // up front so every query plans identically regardless of run order
     graft.functions.GraftFunctions.register(spark)
@@ -31,20 +24,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Json.str escapes every control char: a tab or CR in oracle SQL would
+    // otherwise make the oracle compare's json.load reject the whole file
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // provenance stamp (r16 ADVICE): the compare's mtime-only staleness
     // guard false-positives after a git checkout (mtimes rewritten on
@@ -61,7 +44,7 @@ object Verify {
       val (sha, dirty) =
         gitStamp((if (Files.isDirectory(loc)) loc else loc.getParent).toString)
       Files.writeString(Paths.get(s"$outDir/_verify_meta.json"),
-        s"""{"sha": ${q(sha)}, "dirty": $dirty}""")
+        s"""{"sha": ${Json.str(sha)}, "dirty": $dirty}""")
     } catch { case e: Throwable =>
       System.err.println(s"[verify] meta stamp failed: $e") }
     spark.stop()

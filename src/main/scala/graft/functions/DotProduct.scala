@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -141,100 +143,94 @@ object GraftFunctions {
             s"${if (other == null) "NULL" else other.getClass.getSimpleName}")
     }
   }
-  /** Idempotent: makes `graft_dot(a, b)`, `graft_minhash(hs, n)` and
-    * `graft_simhash(hs)` available to `expr(...)`/SQL.
+  /** One native SQL function: its name, its `DESCRIBE FUNCTION` usage and
+    * its expression builder. */
+  final case class Fn(name: String, usage: String,
+      build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo("graft.functions", null,
+      name, usage, "", "", "", "", "", "", "built-in")
+  }
+
+  /** Every native function, for [[register]] and [[GraftExtensions]] alike.
+    * Registration-time-bound integer arguments go through `litInt`.
+    */
+  val table: Seq[Fn] = Seq(
+    Fn("graft_dot", "graft_dot(a, b) - dot product of two array<double>",
+      c => DotProduct(c(0), c(1))),
+    Fn("graft_minhash",
+      "graft_minhash(hs, n) - n-lane minhash signature of array<long>",
+      c => MinHashSignature(c(0), litInt("graft_minhash", 2, c(1)))),
+    Fn("graft_simhash", "graft_simhash(hs) - 64-bit simhash of array<long>",
+      c => SimHash64(c(0))),
+    Fn("graft_md5_tokens",
+      "graft_md5_tokens(text) - 60-bit md5 hash of each space token",
+      c => Md5TokenHashes(c(0))),
+    Fn("graft_md5_ngrams",
+      "graft_md5_ngrams(text, n) - 60-bit md5 hash of each n-word window",
+      c => Md5NgramHashes(c(0), litInt("graft_md5_ngrams", 2, c(1)))),
+    Fn("graft_ngrams", "graft_ngrams(text, n) - hashed distinct word n-grams",
+      c => NgramHashes(c(0), litInt("graft_ngrams", 2, c(1)))),
+    Fn("graft_count_tokens",
+      "graft_count_tokens(text, groups) - per-group token occurrence counts",
+      c => TokenGroupCounts(c(0), c(1))),
+    Fn("graft_ntokens",
+      "graft_ntokens(text) - token count, = size(split(text, ' '))",
+      c => TokenCount(c(0))),
+    Fn("graft_freq_agg", "graft_freq_agg(item, maxMapSize) - frequent-items sketch",
+      c => FreqItemsAgg(c(0), litInt("graft_freq_agg", 2, c(1)))),
+    Fn("graft_freq_union",
+      "graft_freq_union(sketch, maxMapSize) - frequent-items sketch union",
+      c => FreqUnionAgg(c(0), litInt("graft_freq_union", 2, c(1)))),
+    Fn("graft_freq_topk",
+      "graft_freq_topk(sketch, k) - a frequent-items sketch's top-k items",
+      c => FreqTopK(c(0), litInt("graft_freq_topk", 2, c(1)))),
+    Fn("graft_theta_agg", "graft_theta_agg(x, lgK) - theta sketch of the distinct values",
+      c => ThetaAgg(c(0), litInt("graft_theta_agg", 2, c(1)))),
+    Fn("graft_theta_union",
+      "graft_theta_union(sketch, lgK) - theta sketch union",
+      c => ThetaUnionAgg(c(0), litInt("graft_theta_union", 2, c(1)))),
+    Fn("graft_theta_and", "graft_theta_and(a, b) - theta sketch intersection",
+      c => ThetaCombine(c(0), c(1), "and")),
+    Fn("graft_theta_or", "graft_theta_or(a, b) - theta sketch union",
+      c => ThetaCombine(c(0), c(1), "or")),
+    Fn("graft_theta_not", "graft_theta_not(a, b) - theta sketch a minus b",
+      c => ThetaCombine(c(0), c(1), "not")),
+    Fn("graft_theta_est", "graft_theta_est(sketch) - theta sketch estimate",
+      c => ThetaEstimate(c(0))),
+    Fn("graft_pq_encode",
+      "graft_pq_encode(subs, selfd, cb, cn2) - product-quantizer codes",
+      c => PqEncode(c(0), c(1), c(2), c(3))),
+    Fn("graft_pq_adc",
+      "graft_pq_adc(qsubs, qselfd, codes, cb, cn2) - asymmetric PQ distance",
+      c => PqAdc(c(0), c(1), c(2), c(3), c(4))),
+    Fn("graft_pairs", "graft_pairs(items) - every ordered pair (u, v), u before v",
+      c => PairCombinations(c(0))),
+    Fn("graft_signbits",
+      "graft_signbits(v, offset) - 32 sign bits of v from offset, packed",
+      c => SignBits(c(0), litInt("graft_signbits", 2, c(1)))),
+    Fn("graft_gram_agg",
+      "graft_gram_agg(emb, y, dims) - exact Gram statistics",
+      c => GramAgg(c(0), c(1), litInt("graft_gram_agg", 3, c(2)))),
+    Fn("graft_gram_multi",
+      "graft_gram_multi(emb, cls, dims, nClasses) - per-class Gram statistics",
+      c => MultiGramAgg(c(0), c(1), litInt("graft_gram_multi", 3, c(2)),
+        litInt("graft_gram_multi", 4, c(3)))))
+
+  /** Idempotent: installs every [[table]] function the session lacks (a
+    * present one is left alone, so a repeated call replaces nothing) and
+    * the size(split(x,' ')) → graft_ntokens optimizer rule once.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      (children: Seq[Expression]) => DotProduct(children(0), children(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      (children: Seq[Expression]) => MinHashSignature(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      (children: Seq[Expression]) => SimHash64(children(0)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_md5_tokens",
-      (children: Seq[Expression]) => Md5TokenHashes(children(0)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_md5_ngrams",
-      (children: Seq[Expression]) => Md5NgramHashes(children(0),
-        litInt("graft_md5_ngrams", 2, children(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_ngrams",
-      (children: Seq[Expression]) => NgramHashes(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_count_tokens",
-      (children: Seq[Expression]) => TokenGroupCounts(children(0), children(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_ntokens",
-      (children: Seq[Expression]) => TokenCount(children(0)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_freq_agg",
-      (children: Seq[Expression]) => FreqItemsAgg(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_freq_union",
-      (children: Seq[Expression]) => FreqUnionAgg(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_freq_topk",
-      (children: Seq[Expression]) => FreqTopK(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_agg",
-      (children: Seq[Expression]) => ThetaAgg(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_union",
-      (children: Seq[Expression]) => ThetaUnionAgg(children(0),
-        children(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_and",
-      (children: Seq[Expression]) => ThetaCombine(children(0), children(1), "and"),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_or",
-      (children: Seq[Expression]) => ThetaCombine(children(0), children(1), "or"),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      (children: Seq[Expression]) => PqEncode(children(0), children(1),
-        children(2), children(3)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      (children: Seq[Expression]) => PqAdc(children(0), children(1),
-        children(2), children(3), children(4)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_not",
-      (children: Seq[Expression]) => ThetaCombine(children(0), children(1), "not"),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_theta_est",
-      (children: Seq[Expression]) => ThetaEstimate(children(0)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pairs",
-      (children: Seq[Expression]) => PairCombinations(children(0)),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_signbits",
-      (children: Seq[Expression]) => SignBits(children(0),
-        litInt("graft_signbits", 2, children(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_agg",
-      (children: Seq[Expression]) => GramAgg(children(0), children(1),
-        litInt("graft_gram_agg", 3, children(2))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_multi",
-      (children: Seq[Expression]) => MultiGramAgg(children(0), children(1),
-        litInt("graft_gram_multi", 3, children(2)),
-        litInt("graft_gram_multi", 4, children(3))),
-      "built-in")
+    table.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, f.info, f.build)
+    }
     // optimizer strength reduction lives beside the functions: any session
     // the library registers into also gets size(split(x,' ')) →
-    // graft_ntokens. Keyed removal keeps repeated register() calls from
-    // stacking duplicate rules.
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_ eq ReduceSplitSizeToNTokens) :+ ReduceSplitSizeToNTokens
+    // graft_ntokens
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(ReduceSplitSizeToNTokens))
+      spark.experimental.extraOptimizations = rules :+ ReduceSplitSizeToNTokens
   }
 }

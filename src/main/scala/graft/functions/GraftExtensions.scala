@@ -2,42 +2,17 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions hook: makes the engine's native functions
   * available in ANY session created with
   * `spark.sql.extensions=graft.functions.GraftExtensions` — no explicit
   * [[GraftFunctions.register]] call needed (library code still calls
-  * register() defensively; both paths are idempotent).
+  * register() defensively; it installs only what is missing).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions", null, name, usage, "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two array<double>"),
-      (children: Seq[Expression]) => DotProduct(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      info("graft_minhash", "graft_minhash(hs, n) - n-lane minhash signature of array<long>"),
-      (children: Seq[Expression]) => MinHashSignature(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", "graft_simhash(hs) - 64-bit simhash of array<long>"),
-      (children: Seq[Expression]) => SimHash64(children(0))))
-    ext.injectFunction((FunctionIdentifier("graft_ngrams"),
-      info("graft_ngrams", "graft_ngrams(text, n) - hashed distinct word n-grams"),
-      (children: Seq[Expression]) => NgramHashes(children(0),
-        children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier("graft_count_tokens"),
-      info("graft_count_tokens",
-        "graft_count_tokens(text, groups) - per-group token occurrence counts"),
-      (children: Seq[Expression]) => TokenGroupCounts(children(0), children(1))))
-    ext.injectFunction((FunctionIdentifier("graft_ntokens"),
-      info("graft_ntokens",
-        "graft_ntokens(text) - token count, = size(split(text, ' '))"),
-      (children: Seq[Expression]) => TokenCount(children(0))))
+    GraftFunctions.table.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
     ext.injectOptimizerRule(_ => ReduceSplitSizeToNTokens)
   }
 }

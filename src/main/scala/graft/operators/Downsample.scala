@@ -64,9 +64,12 @@ object Downsample {
       sqrt(greatest(q / c - (s / c) * (s / c), lit(0.0))).as("d"),
       min(col("t_first")).as("t_first"),
       max(col("t_last")).as("t_last"),
-      // weighted mean of per-bucket mean offsets, weights = counts
+      // weighted mean of per-bucket mean offsets, weights = counts; a
+      // bucket of only null values (Σc = 0) has none: null, not an ANSI
+      // divide-by-zero
       timestamp_seconds(bucketEpoch + floor(
-        sum((unix_timestamp(col("t_mean")) - bucketEpoch) * col("c")) / c))
+        sum((unix_timestamp(col("t_mean")) - bucketEpoch) * col("c")) /
+          when(c =!= 0, c)))
         .as("t_mean"))
   }
 
@@ -134,7 +137,8 @@ object Downsample {
         min(col("t_first")).as("t_first"),
         max(col("t_last")).as("t_last"),
         timestamp_seconds(col("bucket_epoch") + floor(
-          sum((unix_timestamp(col("t_mean")) - col("bucket_epoch")) * col("c")) / c))
+          sum((unix_timestamp(col("t_mean")) - col("bucket_epoch")) * col("c")) /
+            when(c =!= 0, c)))
           .as("t_mean"))
       .withColumn("granularity", lit(target.name))
       .withColumn("t", timestamp_seconds(col("bucket_epoch")))

@@ -10,12 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * gate the driver runs (rows > 0 at sf0.001).
   */
 class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   test("Verify's git stamp runs in the given directory and fails on a non-zero git exit") {
     import java.nio.file.Files
@@ -85,6 +80,98 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("entry() flagship returns rows at sf0.001 (driver smoke gate)") {
     assume(new java.io.File("/root/testdata/sf0.001").isDirectory)
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("Meter: tagged, untagged and micro-batch sites; sites sum to Spark's own job and task counts; a read needs no wait") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.obs.Meter
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    val mem = MemoryStream[Int]
+    val before = tracker.getJobIdsForGroup(null).toSet
+    val m = Meter.attach(spark)
+    // delayed bus delivery: a slow listener behind the meter on the same
+    // queue holds back every later task-end event, so a read that did not
+    // drain the bus would miss tasks of a job that has already finished
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Thread.sleep(50)
+    }
+    sc.addSparkListener(slow)
+    val (r, streamGroup) = try {
+      sc.setJobDescription("pin:tagged")
+      try sc.parallelize(1 to 100, 7).count() finally sc.setJobDescription(null)
+      // no sleep between the action and the read: the read drains the
+      // listener bus, so every task of the job is already charged
+      val first = m.read()
+      assert(first.sites.keySet == Set("pin:tagged"), first.sites)
+      assert(first.sites("pin:tagged").jobs == 1 &&
+        first.sites("pin:tagged").tasks == 7, first.sites)
+      sc.parallelize(1 to 10, 3).count()
+      val q = mem.toDS().map(_ * 2).writeStream.format("memory")
+        .queryName("meter_pin").outputMode("append").start()
+      try Seq(Seq(1, 2, 3), Seq(4, 5)).foreach { b =>
+        mem.addData(b); q.processAllAvailable()
+      } finally q.stop()
+      (m.read(), q.runId.toString)
+    } finally { sc.removeSparkListener(slow); m.close() }
+    assert(Set("pin:tagged", Meter.Untagged, "uBatch 0", "uBatch 1")
+      .subsetOf(r.sites.keySet), r.sites)
+    assert(r.sites(Meter.Untagged).jobs == 1 &&
+      r.sites(Meter.Untagged).tasks == 3, r.sites)
+    // Spark's status store, fed by its own listener, counts the same
+    // window independently: micro-batch jobs run in the query's job group
+    val jobs = (tracker.getJobIdsForGroup(null).toSet -- before) ++
+      tracker.getJobIdsForGroup(streamGroup)
+    val stages = jobs.flatMap(j => tracker.getJobInfo(j).get.stageIds.toSeq)
+    val tasks = stages.toSeq.map(s => tracker.getStageInfo(s).fold(0)(_.numCompletedTasks))
+    assert(r.jobs == jobs.size && r.tasks == tasks.sum,
+      s"meter ${r.jobs} jobs/${r.tasks} tasks vs Spark ${jobs.size}/${tasks.sum}: ${r.sites}")
+  }
+
+  test("GraftFunctions.register is idempotent: a repeat replaces no function and adds no rule; the extension injects the same table") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.functions.{GraftExtensions, GraftFunctions,
+      ReduceSplitSizeToNTokens}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-register-pin", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    app.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(app)
+    try { GraftFunctions.register(spark); GraftFunctions.register(spark) }
+    finally { root.removeAppender(app); app.stop() }
+    import scala.jdk.CollectionConverters._
+    val replaced = seen.asScala.filter(_.contains("replaced a previously registered"))
+    assert(replaced.isEmpty, replaced)
+    assert(spark.experimental.extraOptimizations
+      .count(_ eq ReduceSplitSizeToNTokens) == 1)
+    val names = GraftFunctions.table.map(_.name)
+    assert(names.distinct.size == names.size)
+    val reg = spark.sessionState.functionRegistry
+    assert(names.forall(n => reg.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n))))
+    val injected = scala.collection.mutable.Buffer.empty[String]
+    new GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+          org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+          Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+            org.apache.spark.sql.catalyst.expressions.Expression)): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    assert(injected.toSet == names.toSet && injected.size == names.size)
   }
 
   override def afterAll(): Unit = spark.stop()

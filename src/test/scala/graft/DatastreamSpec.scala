@@ -16,12 +16,7 @@ import graft.model._
   * scenarios.
   */
 class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -391,7 +386,7 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.addSparkListener(l)
     try {
       val out = body
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
+      graft.obs.Meter.drain(spark)
       import scala.jdk.CollectionConverters._
       (out, seen.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
@@ -925,26 +920,8 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // warm up: first append full-recomputes (no marker yet), second is
     // the first incremental
     appendDay(1); appendDay(2)
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet(); ()
-      }
-    }
-    def measured(day: Int): Long = {
-      spark.sparkContext.addSparkListener(listener)
-      tasks.set(0L)
-      try {
-        appendDay(day)
-        // listener delivery is async: wait until the counter stops moving
-        var last = -1L
-        var spins = 0
-        while (tasks.get() != last && spins < 40) {
-          last = tasks.get(); Thread.sleep(250); spins += 1
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      tasks.get()
-    }
+    def measured(day: Int): Long =
+      graft.obs.Meter.measure(spark)(appendDay(day))._2.tasks
     val early = measured(3)
     (4 until 12).foreach(appendDay)
     val late = measured(12)

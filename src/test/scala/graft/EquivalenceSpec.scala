@@ -15,12 +15,7 @@ import graft.operators.{Derive, Downsample}
   * sums exact so equality is bit-level.
   */
 class EquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   val base = 1704067200L // 2024-01-01 UTC
 
@@ -250,6 +245,27 @@ class EquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(rows(0).isNullAt(11), "minutes t_mean")
     assert(rows.tail.map(_.getTimestamp(11).getTime / 1000L).toSeq == Seq(base + 5, base + 15))
+  }
+
+  test("Downsample folds: an all-null seconds10 bucket folds to c = 0 and a null t_mean (foldToCoarser, countOnlyFold)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // two seconds10 buckets of one minute, every value null: Σc = 0, so
+    // the count-weighted t_mean has no weight (ANSI would raise
+    // DIVIDE_BY_ZERO on the division)
+    val raw = Seq(("z", new Timestamp((base + 5) * 1000L)),
+        ("z", new Timestamp((base + 15) * 1000L))).toDF("stream_id", "t")
+    val num = Downsample.toGranularity(
+      raw.withColumn("v", lit(null).cast("double")), Granularity.Seconds10)
+    val nom = Downsample.countOnlyToGranularity(
+      raw.withColumn("v_json", lit(null).cast("string")), Granularity.Seconds10)
+    for ((name, folded) <- Seq(
+        "foldToCoarser" -> Downsample.foldToCoarser(num, Granularity.Minutes),
+        "countOnlyFold" -> Downsample.countOnlyFold(nom, Granularity.Minutes))) {
+      val rows = folded.select("c", "t_mean").collect()
+      assert(rows.length == 1 && rows(0).getLong(0) == 0L && rows(0).isNullAt(1),
+        s"$name: ${rows.toSeq}")
+    }
   }
 
   test("derive ops match a pure-Scala oracle on random counters (5 seeds)") {

@@ -19,12 +19,7 @@ import graft.model._
   * single File remnant reads "missing" and trips the assertions.
   */
 class FsSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   private def schemeRoot(prefix: String): String =
     "file:" + Files.createTempDirectory(prefix).toString

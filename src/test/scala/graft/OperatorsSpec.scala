@@ -11,12 +11,7 @@ import graft.operators.{Dedup, Multimodal, Similarity, TextStats}
   * multimodal plumbing, text stats.
   */
 class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   lazy val docs = {
     import spark.implicits._

@@ -7,18 +7,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.obs.Meter
+
 /** Scale-technique demonstrations with plan-level assertions: bucketed
   * co-located joins (no shuffle) and salted distinct counts (exactness).
   */
 class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val warehouse = Files.createTempDirectory("graft-wh").toString
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4,
+    "spark.sql.warehouse.dir" -> warehouse)
 
   test("rollup ladder job count stays bounded (one-pass kernel, fixed per run)") {
     import spark.implicits._
@@ -36,25 +33,13 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     } yield (id, java.sql.Timestamp.valueOf(
         f"2024-02-${10 + dayOffset}%02d $h%02d:$m%02d:00"), 1.0 * h + m))
       .toDF("stream_id", "t", "v")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     // batch 1 primes the store (first-materialization paths skip the HWM
     // scan); batch 2 is the steady-state live shape under test
     val r1 = ds.appendMultiple(batch(0), checkTimestamp = false)
     r1.maxT.foreach(hi => ds.downsampleStreams(hi))
     val r2 = ds.appendMultiple(batch(1), checkTimestamp = false)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      r2.maxT.foreach(hi => ds.downsampleStreams(hi))
-      // listener events are async; drain the bus before reading
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    val n = jobs.get()
+    val n = Meter.measure(spark)(
+      r2.maxT.foreach(hi => ds.downsampleStreams(hi)))._2.jobs
     assert(n > 0 && n <= 6, s"steady-state ladder run used $n jobs (bound 6)")
     // and the rollups are complete: day 1 is the only COMPLETED day
     // bucket (day 2's bucket ends after until=23:30, the completed-bucket
@@ -78,26 +63,16 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pass, one deferred flush, ZERO Spark jobs (catalog is driver-side)
     // and wall-bounded — the per-call ensureStream loop measured ~10 s
     // for the same 10k (BASELINE.md 10k-smoke row)
-    val declJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val declL = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        declJobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(declL)
-    val (out, declMs) = try {
+    val ((out, declMs), decl) = Meter.measure(spark) {
       val t0 = System.nanoTime()
       val o = ds.ensureStreams(
         (0 until n).map(i => graft.model.EnsureSpec(Map("m10k" -> s"s$i"))))
-      val ms = (System.nanoTime() - t0) / 1000000
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-      (o, ms)
-    } finally spark.sparkContext.removeSparkListener(declL)
+      (o, (System.nanoTime() - t0) / 1000000)
+    }
     assert(out.size == n && out.forall(o => o.created && o.error.isEmpty))
-    info(s"bulk declaration of $n streams: $declMs ms, ${declJobs.get()} jobs")
-    assert(declJobs.get() == 0,
-      s"bulk declaration scheduled ${declJobs.get()} Spark jobs")
+    info(s"bulk declaration of $n streams: $declMs ms, ${decl.jobs} jobs")
+    assert(decl.jobs == 0,
+      s"bulk declaration scheduled ${decl.jobs} Spark jobs")
     assert(declMs < 2000, s"bulk declaration took $declMs ms (bound 2000)")
     val ids = out.map(_.streamId.get)
     def batch(day: Int) = ids.flatMap(id => Seq(
@@ -107,36 +82,19 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // prime the store; batch 2 is the steady-state shape under test
     val r1 = ds.appendMultiple(batch(1), checkTimestamp = false)
     r1.maxT.foreach(hi => ds.downsampleStreams(hi))
-    val byTag = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val total = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        total.incrementAndGet()
-        val d = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        val tag = if (d == null) "untagged" else d.takeWhile(_ != ':')
-        byTag.merge(tag, 1, (a, b) => a + b)
-        ()
-      }
-    }
     val b2 = batch(2)
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val live = Meter.measure(spark) {
       val r2 = ds.appendMultiple(b2, checkTimestamp = false)
       r2.maxT.foreach(hi => ds.downsampleStreams(hi))
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    val tags = {
-      import scala.jdk.CollectionConverters._
-      byTag.asScala.map { case (k, v) => k -> v.toInt }.toMap
-    }
-    info(s"10k-stream live batch: ${total.get()} jobs by phase $tags")
+    }._2
+    // jobs by phase tag: the site up to its first ':' (ladder:fold → ladder)
+    val tags = live.sites.groupMapReduce(_._1.takeWhile(_ != ':'))(_._2.jobs.toInt)(_ + _)
+    info(s"10k-stream live batch: ${live.jobs} jobs by phase $tags")
     // (a) job counts are not a function of stream count: the ladder's
     // share stays under the same fixed bound the 4-stream ladder test
     // pins (6), the whole live batch under 30
-    assert(total.get() <= 30,
-      s"10k-stream live batch used ${total.get()} jobs ($tags)")
+    assert(live.jobs <= 30,
+      s"10k-stream live batch used ${live.jobs} jobs ($tags)")
     assert(tags.filter(_._1 == "ladder").values.sum <= 6,
       s"ladder jobs grew with stream count: $tags")
     // (b) the per-stream checks/extrema fold stays ONE job at 10k streams
@@ -201,7 +159,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       ds.appendMultiple(b2)
       spark.sparkContext.setLocalProperty("graft.phase", "ladder")
       ds.downsampleStreams(closeOf(2))
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
+      Meter.drain(spark)
     } finally {
       spark.sparkContext.setLocalProperty("graft.phase", null)
       spark.sparkContext.removeSparkListener(l)
@@ -1022,7 +980,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val m = graft.operators.Bpe.trainDistributed(words, nMerges = 10,
         minFreq = 2L)
       assert(m.length == 10)
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
+      Meter.drain(spark)
     } finally spark.sparkContext.removeSparkListener(l)
     val (j, st) = (jobs.get(), stages.get())
     // init pair count is the ONLY shuffle: 2 narrow jobs per merge plus
@@ -1110,21 +1068,9 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nCells = spark.read.parquet(s"$root/cells")
       .select("cell").distinct().count()
     assert(nCells >= 10, s"fixture should spread cells, got $nCells")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // every 3rd id: touches essentially every cell
-      graft.operators.Similarity.deleteFromIvfIndex(spark, root,
-        (0L until 400L by 3).toSeq)
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    val n = jobs.get()
+    // every 3rd id: touches essentially every cell
+    val n = Meter.measure(spark)(graft.operators.Similarity.deleteFromIvfIndex(
+      spark, root, (0L until 400L by 3).toSeq))._2.jobs
     assert(n > 0 && n <= 10,
       s"staged delete over $nCells cells used $n jobs (bound 10)")
     // and the delete is correct: only non-multiples-of-3 remain
@@ -1144,21 +1090,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(e => e._1 != e._2).distinct
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .distinct.toDF("u", "v").localCheckpoint(true)
-    def jobsOf(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(l)
-      jobs.get()
-    }
+    def jobsOf(body: => Unit): Long = Meter.measure(spark)(body)._2.jobs
     def lms(n: Int) = (0 until n).map(_.toLong).toDF("v")
     val g = graft.operators.Graphs
     for ((name, run) <- Seq[(String, Int => Unit)](
@@ -1189,21 +1121,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       S.appendToIvfPqIndex(e.where(col("vec_id") % 12 === i), root))
     val q = e.where(col("vec_id") < 4)
       .select(col("vec_id").as("qid"), col("emb").as("qemb"))
-    def tasksOf(body: => Unit): Int = {
-      val tasks = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskStart(
-            t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit = {
-          tasks.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(l)
-      tasks.get()
-    }
+    def tasksOf(body: => Unit): Long = Meter.measure(spark)(body)._2.tasks
     def search(): Unit = {
       S.ivfPqIndexTopK(spark, root, q, 3, 2).count(); ()
     }
@@ -1228,20 +1146,8 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = (0L until 4096L).map(k => (k, k * 31 % 977)).toDF("k", "v")
     val pexpr = pmod(col("k"), lit(64L))
     VersionedTable.init(spark, work, base, pexpr)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      VersionedTable.deleteMergeOnRead(spark, work,
-        Seq(7L, 99L, 1033L, 2048L, 4000L).toDF("k"), pexpr)
-      org.apache.spark.graftspec.BusDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    val n = jobs.get()
+    val n = Meter.measure(spark)(VersionedTable.deleteMergeOnRead(spark, work,
+      Seq(7L, 99L, 1033L, 2048L, 4000L).toDF("k"), pexpr))._2.jobs
     assert(n > 0 && n <= 8,
       s"merge-on-read delete of 5 rows used $n jobs (bound 8)")
     val fs = graft.core.DatapointStore.fsFor(work)

@@ -15,12 +15,7 @@ import graft.sources.Sources
   * streaming file source.
   */
 class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   val schema = StructType(Seq(
     StructField("doc_id", LongType),

@@ -10,18 +10,13 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.model.Granularity
 import graft.operators.{Derive, Downsample}
-import graft.streaming.Streaming
+import graft.streaming.{ReorderBuffers, Streaming}
 
 /** M5 batch≡streaming equivalence (SURVEY §5.4): the streaming pipelines
   * must produce exactly the batch results for completed buckets.
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -113,7 +108,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         twin: org.apache.spark.sql.Dataset[Streaming.Point] =>
           org.apache.spark.sql.Dataset[_]) = {
       val mem = MemoryStream[Streaming.Point]
-      val q = twin(Streaming.reorderBuffer(mem.toDS(), "60 seconds"))
+      val q = twin(ReorderBuffers.reorderBuffer(mem.toDS(), "60 seconds"))
         .toDF().writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -189,7 +184,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out =
         if (fused) Streaming.derivativeSkewed(mem.toDS(), "60 seconds")
         else Streaming.derivative(
-          Streaming.reorderBuffer(mem.toDS(), "60 seconds"))
+          ReorderBuffers.reorderBuffer(mem.toDS(), "60 seconds"))
       val q = out.toDF().writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       try {
@@ -216,8 +211,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (fused) Streaming.counterDerivativeWithResetsSkewed(
           memS.toDS(), memR.toDS(), "60 seconds", Some(120.0))
         else Streaming.counterDerivativeWithResets(
-          Streaming.reorderBuffer(memS.toDS(), "60 seconds"),
-          Streaming.reorderBufferResets(memR.toDS(), "60 seconds"),
+          ReorderBuffers.reorderBuffer(memS.toDS(), "60 seconds"),
+          ReorderBuffers.reorderBufferResets(memR.toDS(), "60 seconds"),
           Some(120.0))
       val q = out.toDF().writeStream.format("memory").queryName(name)
         .outputMode("append").start()

@@ -10,6 +10,9 @@ Usage:
   python3 tools/diff_bench.py <old_bench_full.json> <new_bench_full.json>
   python3 tools/diff_bench.py --cpu-band 0.5 old.json new.json
       # also flag same-task-count queries whose CPU moved > 50%
+
+When both files carry per-query "phases" (site -> jobs/tasks/cpu_s), each
+task-count move is followed by the sites whose tasks moved.
 """
 import sys, json
 
@@ -45,11 +48,21 @@ if removed:
     print(f"\nREMOVED ({len(removed)}):")
     for k in removed:
         print(f"  {k:36s} tasks={ot[k]:<6} cpu={oc.get(k, 0):.1f}")
+# per-query site -> {jobs, tasks, cpu_s} (graft.Bench "phases"); older
+# files lack it and diff by query only
+op, np_ = old.get("phases"), new.get("phases")
 if moved:
     print(f"\nTASK-COUNT MOVES ({len(moved)}):")
     for k, a, b in moved:
         print(f"  {k:36s} {a:>6} -> {b:<6} ({b - a:+d})  "
               f"cpu {oc.get(k, 0):.1f} -> {nc.get(k, 0):.1f}")
+        if op is not None and np_ is not None:
+            os_, ns = op.get(k, {}), np_.get(k, {})
+            for site in sorted(set(os_) | set(ns)):
+                x = os_.get(site, {}).get("tasks", 0)
+                y = ns.get(site, {}).get("tasks", 0)
+                if x != y:
+                    print(f"      {site[:60]:60s} {x:>6} -> {y:<6} ({y - x:+d})")
 if jmoved:
     print(f"\nJOB-COUNT MOVES ({len(jmoved)}):")
     for k, a, b in jmoved:
