@@ -180,34 +180,13 @@ object DatapointStore {
     rmTree(fs, new Path(path))
   }
 
-  /** Drop every ymd partition strictly older than `cutoffKey` under a
-    * store root — retention/TTL as pure partition-directory removal:
-    * O(#partitions) driver-side listing and no data rewrite, the only
-    * deletion shape that stays cheap at 100 TB. `depth` is the number of
-    * partition levels above ymd (1 for granularity=g/ymd=k roots, 2 for
-    * stream_id=s/granularity=g/ymd=k derived roots). Zero-padded keys make
-    * the cutoff a plain string compare.
-    */
-  def expire(path: String, cutoffKey: String, depth: Int): Unit = {
-    val fs = fsFor(path)
-    def walk(dir: Path, level: Int): Unit =
-      fs.listStatus(dir).foreach { f =>
-        if (f.isDirectory) {
-          val n = f.getPath.getName
-          if (level == 0 && n.startsWith("ymd=")) {
-            if (n.stripPrefix("ymd=") < cutoffKey) rmTree(fs, f.getPath)
-          } else if (level > 0) walk(f.getPath, level - 1)
-        }
-      }
-    val root = new Path(path)
-    if (fs.exists(root)) walk(root, depth)
-  }
-
   /** Per-granularity retention — the RRD ladder semantic (raw data kept
-    * briefly, coarser rollups kept long): like [[expire]], but the ymd
-    * cutoff is chosen by the enclosing `granularity=g` directory;
-    * granularities absent from `cutoffs` are kept whole. Still pure
-    * partition-directory removal (O(#partitions), no rewrite). `depth` is
+    * briefly, coarser rollups kept long): drop every ymd partition strictly
+    * older than the cutoff key of its enclosing `granularity=g` directory;
+    * granularities absent from `cutoffs` are kept whole. Pure
+    * partition-directory removal: O(#partitions) driver-side listing and
+    * no data rewrite, the only deletion shape that stays cheap at 100 TB.
+    * Zero-padded keys make each cutoff a plain string compare. `depth` is
     * the number of partition levels above the granularity level (0 for
     * granularity=g/ymd=k roots, 1 for stream_id=s/granularity=g/ymd=k
     * derived roots).

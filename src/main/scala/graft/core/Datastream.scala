@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
+import graft.obs.Meter
 import graft.operators.{Derive, RollupLadder}
 
 /** Spark-native re-design of the reference's frontend `Datastream` class
@@ -601,164 +602,167 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       // groupBy.agg.collect it replaced billed 3 jobs under AQE for the
       // shuffle stage, result stage, and persist materialization; this
       // runs shuffle-free and materializes the persist in the same pass)
-      spark.sparkContext.setJobDescription("append:checks")
-      val checkCols = Seq(col("stream_id"),
-        unix_timestamp(col("t")).as("_tsec")) ++
-        (if (hasV) Seq(col("v").isNotNull.as("_nv")) else Nil) ++
-        (if (hasJ) Seq(col("v_json").isNotNull.as("_nj")) else Nil)
-      val partChecks = cached.select(checkCols: _*).rdd.mapPartitions { it =>
-        // (minSec, maxSec, hasNum, hasJson) per stream
-        val m = scala.collection.mutable.HashMap[String, Array[Long]]()
-        it.foreach { r =>
-          if (r.isNullAt(1))
-            throw InvalidTimestamp("append batch contains a NULL timestamp")
-          val sec = r.getLong(1)
-          var i = 2
-          var nv = false; var nj = false
-          if (hasV) { nv = !r.isNullAt(i) && r.getBoolean(i); i += 1 }
-          if (hasJ) { nj = !r.isNullAt(i) && r.getBoolean(i) }
-          val e = m.getOrElseUpdate(r.getString(0),
-            Array(Long.MaxValue, Long.MinValue, 0L, 0L))
-          if (sec < e(0)) e(0) = sec
-          if (sec > e(1)) e(1) = sec
-          if (nv) e(2) = 1L
-          if (nj) e(3) = 1L
-        }
-        Iterator.single(m)
-      }.collect()
-      val checks = {
-        val m = scala.collection.mutable.HashMap[String, Array[Long]]()
-        partChecks.foreach(_.foreach { case (id, e) =>
-          val t = m.getOrElseUpdate(id,
-            Array(Long.MaxValue, Long.MinValue, 0L, 0L))
-          if (e(0) < t(0)) t(0) = e(0)
-          if (e(1) > t(1)) t(1) = e(1)
-          t(2) |= e(2); t(3) |= e(3)
-        })
-        m.toArray.sortBy(_._1)
-      }
-
-      // per-stream time bounds of the batch, floored to the stream's
-      // highest granularity (advance catalog bounds in finishAppend —
-      // taken from the PRE-dedup frame on purpose: on a retried delivery
-      // the timestamps are in the store either way, and a crash between
-      // last round's write and catalog persist must still advance)
-      val bounds = checks.map { case (id, e) =>
-        val d = catalog.getOrElse(id, throw StreamNotFound(id))
-        if (d.derive_op.isDefined) throw AppendToDerivedStreamNotAllowed(id)
-        if (d.value_type == ValueType.Numeric && hasJ && e(3) == 1L)
-          throw IncompatibleTypes(
-            s"value kind does not match stream $id's value_type")
-        if (d.value_type != ValueType.Numeric && hasV && e(2) == 1L)
-          throw IncompatibleTypes(
-            s"value kind does not match stream $id's value_type")
-        val gsec = Granularity(d.highest_granularity).seconds
-        // epoch seconds come from unix_timestamp (Spark's own flooring —
-        // the same function the write path rounds with), then floorDiv to
-        // the granularity: pre-epoch timestamps floor identically to the
-        // stored data, keeping the monotonicity check / dedup window in
-        // sync
-        def floorTs(sec: Long): Timestamp =
-          new Timestamp(Math.floorDiv(sec, gsec) * gsec * 1000)
-        val lo = floorTs(e(0))
-        if (checkTimestamp && d.latest_ts.exists(l => lo.getTime < l.getTime))
-          // a strict decrease versus the stream's last stored timestamp is
-          // a monotonicity violation (the reference's check_timestamp=True)
-          throw InvalidTimestamp(s"non-monotonic append for stream $id")
-        org.apache.spark.sql.Row(id, lo, floorTs(e(1)))
-      }
-      val ids = checks.map(_._1)
-
-      // per-stream config reaches the write path by the filterToStreams
-      // tiering: a SMALL batch id set inlines as literal maps (zero join,
-      // zero broadcast-exchange job — one fewer job per append); a large
-      // one joins as a BROADCAST metadata frame (never a typedLit map of
-      // the whole catalog — a million-stream literal would explode the
-      // plan). Only the WRITE path needs the per-row values
-      // (granularity name + per-row rounding).
-      val metaRows = ids.toSeq.map { id =>
-        val d = catalog(id)
-        (id, Granularity(d.highest_granularity).seconds, d.highest_granularity)
-      }
-      val withMeta =
-        if (ids.length <= 256) {
-          val gsecLit = typedLit(metaRows.map(m => m._1 -> m._2).toMap)
-          val gnameLit = typedLit(metaRows.map(m => m._1 -> m._3).toMap)
-          cached.withColumn("gsec", gsecLit(col("stream_id")))
-            .withColumn("gname", gnameLit(col("stream_id")))
-        } else
-          cached.join(broadcast(
-            metaRows.toDF("stream_id", "gsec", "gname")), "stream_id")
-      val rounded = withMeta
-        .withColumn("t", timestamp_seconds(
-          floor(unix_timestamp(col("t")) / col("gsec")) * col("gsec")))
-
-      // opt-in WITHIN-batch monotonicity (SURVEY §2.1 A2: the reference's
-      // sequential appends reject every decrease, not just batch-min vs
-      // stored-last). A DataFrame has no row order, so the caller states
-      // arrival order through a per-stream `seq` column; a (floored)
-      // timestamp decrease along seq raises InvalidTimestamp — the same
-      // rows rejected had they been appended one call at a time. One
-      // extra windowed pass over the batch, only when opted in.
-      if (strictWithinBatch) {
-        if (!cached.columns.contains("seq"))
-          throw InvalidOperatorArguments(
-            "strictWithinBatch needs a 'seq' column (per-stream arrival order)")
-        val w = Window.partitionBy("stream_id").orderBy("seq")
-        val bad = rounded
-          .withColumn("_prev_t", lag(col("t"), 1).over(w))
-          .where(col("_prev_t").isNotNull && col("t") < col("_prev_t"))
-          .select("stream_id").limit(1).collect()
-        bad.headOption.foreach { r =>
-          throw InvalidTimestamp(
-            s"non-monotonic timestamps within batch for stream ${r.getString(0)}")
-        }
-      }
-
-      val deduped =
-        if (!dedupExisting || bounds.isEmpty || !nonEmptyDir(datapointsPath)) rounded
-        else {
-          val lo = bounds.map(_.getTimestamp(1)).minBy(_.getTime)
-          val hi = bounds.map(_.getTimestamp(2)).maxBy(_.getTime)
-          val gnames = ids.map(catalog(_).highest_granularity).distinct.toSeq
-          // appends only reach source streams: their raw rows sit in the
-          // primary root's granularity directories, and only those list
-          val existing = filterToStreams(
-            DatapointStore.read(spark, datapointsPath,
-                gnames.map(sourceDir))
-              .where(col("granularity").isin(gnames: _*) &&
-                col("t") >= lo && col("t") <= hi &&
-                col("ymd") >= DatapointStore.ymdKey(lo) &&
-                col("ymd") <= DatapointStore.ymdKey(hi)),
-            ids.toSeq).select("stream_id", "t", "v_num", "v_json")
-          // drop only EXACT re-deliveries (same stream, rounded t, value):
-          // a retried micro-batch re-sends identical rows, while a
-          // genuinely new value landing in an already-seen second must
-          // still append (two distinct events in one bucket are two
-          // datapoints, same as the batch path). Null-safe equality so
-          // null-valued re-deliveries dedup too.
-          val vCond =
-            if (hasV) rounded("v").cast("double") <=> existing("v_num")
-            else existing("v_num").isNull
-          val jCond =
-            if (hasJ) rounded("v_json") <=> existing("v_json")
-            else existing("v_json").isNull
-          rounded.join(existing,
-            rounded("stream_id") === existing("stream_id") &&
-              rounded("t") === existing("t") && vCond && jCond,
-            "left_anti")
+      val (bounds, ids, toWrite) = Meter.tagged(spark.sparkContext,
+          "append:checks") {
+        val checkCols = Seq(col("stream_id"),
+          unix_timestamp(col("t")).as("_tsec")) ++
+          (if (hasV) Seq(col("v").isNotNull.as("_nv")) else Nil) ++
+          (if (hasJ) Seq(col("v_json").isNotNull.as("_nj")) else Nil)
+        val partChecks = cached.select(checkCols: _*).rdd.mapPartitions { it =>
+          // (minSec, maxSec, hasNum, hasJson) per stream
+          val m = scala.collection.mutable.HashMap[String, Array[Long]]()
+          it.foreach { r =>
+            if (r.isNullAt(1))
+              throw InvalidTimestamp("append batch contains a NULL timestamp")
+            val sec = r.getLong(1)
+            var i = 2
+            var nv = false; var nj = false
+            if (hasV) { nv = !r.isNullAt(i) && r.getBoolean(i); i += 1 }
+            if (hasJ) { nj = !r.isNullAt(i) && r.getBoolean(i) }
+            val e = m.getOrElseUpdate(r.getString(0),
+              Array(Long.MaxValue, Long.MinValue, 0L, 0L))
+            if (sec < e(0)) e(0) = sec
+            if (sec > e(1)) e(1) = sec
+            if (nv) e(2) = 1L
+            if (nj) e(3) = 1L
+          }
+          Iterator.single(m)
+        }.collect()
+        val checks = {
+          val m = scala.collection.mutable.HashMap[String, Array[Long]]()
+          partChecks.foreach(_.foreach { case (id, e) =>
+            val t = m.getOrElseUpdate(id,
+              Array(Long.MaxValue, Long.MinValue, 0L, 0L))
+            if (e(0) < t(0)) t(0) = e(0)
+            if (e(1) > t(1)) t(1) = e(1)
+            t(2) |= e(2); t(3) |= e(3)
+          })
+          m.toArray.sortBy(_._1)
         }
 
-      val withJson = if (hasJ) deduped
-                     else deduped.withColumn("v_json", lit(null).cast("string"))
-      val withV = if (hasV) withJson
-                  else withJson.withColumn("v", lit(null).cast("double"))
-      val toWrite = withV.select(
-          col("stream_id"),
-          col("gname").as("granularity"),
-          col("t"),
-          col("v").cast("double").as("v_num"),
-          col("v_json"))
+        // per-stream time bounds of the batch, floored to the stream's
+        // highest granularity (advance catalog bounds in finishAppend —
+        // taken from the PRE-dedup frame on purpose: on a retried delivery
+        // the timestamps are in the store either way, and a crash between
+        // last round's write and catalog persist must still advance)
+        val bounds = checks.map { case (id, e) =>
+          val d = catalog.getOrElse(id, throw StreamNotFound(id))
+          if (d.derive_op.isDefined) throw AppendToDerivedStreamNotAllowed(id)
+          if (d.value_type == ValueType.Numeric && hasJ && e(3) == 1L)
+            throw IncompatibleTypes(
+              s"value kind does not match stream $id's value_type")
+          if (d.value_type != ValueType.Numeric && hasV && e(2) == 1L)
+            throw IncompatibleTypes(
+              s"value kind does not match stream $id's value_type")
+          val gsec = Granularity(d.highest_granularity).seconds
+          // epoch seconds come from unix_timestamp (Spark's own flooring —
+          // the same function the write path rounds with), then floorDiv to
+          // the granularity: pre-epoch timestamps floor identically to the
+          // stored data, keeping the monotonicity check / dedup window in
+          // sync
+          def floorTs(sec: Long): Timestamp =
+            new Timestamp(Math.floorDiv(sec, gsec) * gsec * 1000)
+          val lo = floorTs(e(0))
+          if (checkTimestamp && d.latest_ts.exists(l => lo.getTime < l.getTime))
+            // a strict decrease versus the stream's last stored timestamp is
+            // a monotonicity violation (the reference's check_timestamp=True)
+            throw InvalidTimestamp(s"non-monotonic append for stream $id")
+          org.apache.spark.sql.Row(id, lo, floorTs(e(1)))
+        }
+        val ids = checks.map(_._1)
+
+        // per-stream config reaches the write path by the filterToStreams
+        // tiering: a SMALL batch id set inlines as literal maps (zero join,
+        // zero broadcast-exchange job — one fewer job per append); a large
+        // one joins as a BROADCAST metadata frame (never a typedLit map of
+        // the whole catalog — a million-stream literal would explode the
+        // plan). Only the WRITE path needs the per-row values
+        // (granularity name + per-row rounding).
+        val metaRows = ids.toSeq.map { id =>
+          val d = catalog(id)
+          (id, Granularity(d.highest_granularity).seconds, d.highest_granularity)
+        }
+        val withMeta =
+          if (ids.length <= 256) {
+            val gsecLit = typedLit(metaRows.map(m => m._1 -> m._2).toMap)
+            val gnameLit = typedLit(metaRows.map(m => m._1 -> m._3).toMap)
+            cached.withColumn("gsec", gsecLit(col("stream_id")))
+              .withColumn("gname", gnameLit(col("stream_id")))
+          } else
+            cached.join(broadcast(
+              metaRows.toDF("stream_id", "gsec", "gname")), "stream_id")
+        val rounded = withMeta
+          .withColumn("t", timestamp_seconds(
+            floor(unix_timestamp(col("t")) / col("gsec")) * col("gsec")))
+
+        // opt-in WITHIN-batch monotonicity (SURVEY §2.1 A2: the reference's
+        // sequential appends reject every decrease, not just batch-min vs
+        // stored-last). A DataFrame has no row order, so the caller states
+        // arrival order through a per-stream `seq` column; a (floored)
+        // timestamp decrease along seq raises InvalidTimestamp — the same
+        // rows rejected had they been appended one call at a time. One
+        // extra windowed pass over the batch, only when opted in.
+        if (strictWithinBatch) {
+          if (!cached.columns.contains("seq"))
+            throw InvalidOperatorArguments(
+              "strictWithinBatch needs a 'seq' column (per-stream arrival order)")
+          val w = Window.partitionBy("stream_id").orderBy("seq")
+          val bad = rounded
+            .withColumn("_prev_t", lag(col("t"), 1).over(w))
+            .where(col("_prev_t").isNotNull && col("t") < col("_prev_t"))
+            .select("stream_id").limit(1).collect()
+          bad.headOption.foreach { r =>
+            throw InvalidTimestamp(
+              s"non-monotonic timestamps within batch for stream ${r.getString(0)}")
+          }
+        }
+
+        val deduped =
+          if (!dedupExisting || bounds.isEmpty || !nonEmptyDir(datapointsPath)) rounded
+          else {
+            val lo = bounds.map(_.getTimestamp(1)).minBy(_.getTime)
+            val hi = bounds.map(_.getTimestamp(2)).maxBy(_.getTime)
+            val gnames = ids.map(catalog(_).highest_granularity).distinct.toSeq
+            // appends only reach source streams: their raw rows sit in the
+            // primary root's granularity directories, and only those list
+            val existing = filterToStreams(
+              DatapointStore.read(spark, datapointsPath,
+                  gnames.map(sourceDir))
+                .where(col("granularity").isin(gnames: _*) &&
+                  col("t") >= lo && col("t") <= hi &&
+                  col("ymd") >= DatapointStore.ymdKey(lo) &&
+                  col("ymd") <= DatapointStore.ymdKey(hi)),
+              ids.toSeq).select("stream_id", "t", "v_num", "v_json")
+            // drop only EXACT re-deliveries (same stream, rounded t, value):
+            // a retried micro-batch re-sends identical rows, while a
+            // genuinely new value landing in an already-seen second must
+            // still append (two distinct events in one bucket are two
+            // datapoints, same as the batch path). Null-safe equality so
+            // null-valued re-deliveries dedup too.
+            val vCond =
+              if (hasV) rounded("v").cast("double") <=> existing("v_num")
+              else existing("v_num").isNull
+            val jCond =
+              if (hasJ) rounded("v_json") <=> existing("v_json")
+              else existing("v_json").isNull
+            rounded.join(existing,
+              rounded("stream_id") === existing("stream_id") &&
+                rounded("t") === existing("t") && vCond && jCond,
+              "left_anti")
+          }
+
+        val withJson = if (hasJ) deduped
+                       else deduped.withColumn("v_json", lit(null).cast("string"))
+        val withV = if (hasV) withJson
+                    else withJson.withColumn("v", lit(null).cast("double"))
+        val toWrite = withV.select(
+            col("stream_id"),
+            col("gname").as("granularity"),
+            col("t"),
+            col("v").cast("double").as("v_num"),
+            col("v_json"))
+        (bounds, ids, toWrite)
+      }
       // piggyback the written-row count on the write job itself
       // (Observation = zero extra jobs): a fully-deduped re-delivery
       // writes 0 rows, which lets finishAppend skip the derive cascade
@@ -781,16 +785,16 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       val obs = org.apache.spark.sql.Observation()
       val prevAqeW = spark.conf.get("spark.sql.adaptive.enabled", "true")
       val prevPartsW = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.sparkContext.setJobDescription("append:write")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(2, prevPartsW.toInt / 16).toString)
-      try DatapointStore.append(
-        toWrite.observe(obs, count(lit(1)).as("rows")), datapointsPath)
-      finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqeW)
-        spark.conf.set("spark.sql.shuffle.partitions", prevPartsW)
-        spark.sparkContext.setJobDescription(null)
+      Meter.tagged(spark.sparkContext, "append:write") {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions",
+          math.max(2, prevPartsW.toInt / 16).toString)
+        try DatapointStore.append(
+          toWrite.observe(obs, count(lit(1)).as("rows")), datapointsPath)
+        finally {
+          spark.conf.set("spark.sql.adaptive.enabled", prevAqeW)
+          spark.conf.set("spark.sql.shuffle.partitions", prevPartsW)
+        }
       }
       // `get` returns AFTER the write's query-end event, so a missing key
       // is not a race: it means empty-relation propagation pruned the
@@ -1150,19 +1154,15 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * reference has no TTL); catalog time bounds are left untouched and are
     * advisory after expiry (earliest_ts may predate the retained data).
     */
-  def expireData(before: Timestamp): Unit = {
-    val key = DatapointStore.ymdKey(before)
-    DatapointStore.expire(datapointsPath, key, depth = 1)
-    DatapointStore.expire(derivedRawPath, key, depth = 2)
-    DatapointStore.expire(rollupsPath, key, depth = 2)
-  }
+  def expireData(before: Timestamp): Unit =
+    expireData(Granularity.ladder.map(_ -> before).toMap)
 
   /** Per-granularity retention — the RRD ladder semantic the reference's
     * multi-granularity model implies: raw seconds kept briefly, each
     * coarser rollup level kept longer (often forever). `horizons` maps a
     * granularity to its cutoff; levels not named are kept whole. Same
-    * O(#partitions) directory-drop shape as [[expireData]], applied to
-    * all three roots (raw, derived raw, rollups).
+    * O(#partitions) directory-drop shape, applied to all three roots
+    * (raw, derived raw, rollups).
     */
   def expireData(horizons: Map[Granularity, Timestamp]): Unit = {
     val cutoffs = horizons.map { case (g, t) =>
@@ -1297,16 +1297,17 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       // per ladder run, over active streams only. Levels whose partitions
       // were never materialized cost nothing (directory probe).
       val scannable = levels.map(_.name).filter(granularityExists)
-      spark.sparkContext.setJobDescription("ladder:hwm-scan")
       val hwm: Map[(String, String), Long] =
-        if (scannable.isEmpty) Map.empty
-        else filterToStreams(
-            store.where(col("granularity").isin(scannable: _*)), scanIds)
-          .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
-          .collect().iterator
-          .map(r => (r.getString(0), r.getString(1)) ->
-            Math.floorDiv(r.getTimestamp(2).getTime, 1000L))
-          .toMap
+        Meter.tagged(spark.sparkContext, "ladder:hwm-scan") {
+          if (scannable.isEmpty) Map.empty
+          else filterToStreams(
+              store.where(col("granularity").isin(scannable: _*)), scanIds)
+            .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
+            .collect().iterator
+            .map(r => (r.getString(0), r.getString(1)) ->
+              Math.floorDiv(r.getTimestamp(2).getTime, 1000L))
+            .toMap
+        }
 
       // per stream: which levels this run folds, each from its threshold
       // (high-water bucket + g.seconds: only buckets past what is on disk)
@@ -1325,9 +1326,10 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       // because the write and return_datapoints both read it.
       // localCheckpoint, NOT persist: caching under AQE materializes as
       // extra jobs/tasks per consumer (measured r2/r7)
-      spark.sparkContext.setJobDescription("ladder:fold")
-      RollupLadder.fold(store, plans, until.getTime / 1000L,
-        spark.sparkContext.defaultParallelism).localCheckpoint(true)
+      Meter.tagged(spark.sparkContext, "ladder:fold") {
+        RollupLadder.fold(store, plans, until.getTime / 1000L,
+          spark.sparkContext.defaultParallelism).localCheckpoint(true)
+      }
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -1336,38 +1338,38 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     // the whole ladder's output lands in ONE write per root; derived
     // streams' rollups go to their own root (so a later recompute never
     // touches the primary table)
-    spark.sparkContext.setJobDescription("ladder:write")
-    val derived = scanIds.filter(id => catalog(id).derive_op.isDefined)
-    if (derived.nonEmpty) {
-      DatapointStore.append(
-        folded.where(!col("stream_id").isin(derived: _*)), datapointsPath)
-      DatapointStore.appendByStream(
-        folded.where(col("stream_id").isin(derived: _*)), rollupsPath)
-    } else DatapointStore.append(folded, datapointsPath)
+    Meter.tagged(spark.sparkContext, "ladder:write") {
+      val derived = scanIds.filter(id => catalog(id).derive_op.isDefined)
+      if (derived.nonEmpty) {
+        DatapointStore.append(
+          folded.where(!col("stream_id").isin(derived: _*)), datapointsPath)
+        DatapointStore.appendByStream(
+          folded.where(col("stream_id").isin(derived: _*)), rollupsPath)
+      } else DatapointStore.append(folded, datapointsPath)
 
-    if (unrestricted) levels.foreach { g =>
-      // frontier: every bucket ending <= until is now materialized (or
-      // provably empty) — advanced only after the union write succeeded
-      ladderFrontier(g.name) = math.max(
-        ladderFrontier.getOrElse(g.name, Long.MinValue),
-        Math.floorDiv(untilSec, g.seconds) * g.seconds)
-      // pending retention: a stream whose data reaches into the bucket
-      // still OPEN at this until keeps its entry (advanced to the open
-      // bucket's start) — with a frontier parked AHEAD of event time
-      // (a wall-clock `downsampleStreams()` on a past-data store), the
-      // extent check can't re-discover it, so dropping it here would
-      // strand that final bucket forever once it completes
-      val openStart = Math.floorDiv(untilSec, g.seconds) * g.seconds
-      ladderPending(g.name) = ladderPending.getOrElse(g.name, Map.empty)
-        .flatMap { case (id, lo) =>
-          if (!catalog.contains(id)) None
-          else if (extentSec(id).exists(_ >= openStart))
-            Some(id -> math.max(lo, openStart))
-          else None
-        }
-      ()
+      if (unrestricted) levels.foreach { g =>
+        // frontier: every bucket ending <= until is now materialized (or
+        // provably empty) — advanced only after the union write succeeded
+        ladderFrontier(g.name) = math.max(
+          ladderFrontier.getOrElse(g.name, Long.MinValue),
+          Math.floorDiv(untilSec, g.seconds) * g.seconds)
+        // pending retention: a stream whose data reaches into the bucket
+        // still OPEN at this until keeps its entry (advanced to the open
+        // bucket's start) — with a frontier parked AHEAD of event time
+        // (a wall-clock `downsampleStreams()` on a past-data store), the
+        // extent check can't re-discover it, so dropping it here would
+        // strand that final bucket forever once it completes
+        val openStart = Math.floorDiv(untilSec, g.seconds) * g.seconds
+        ladderPending(g.name) = ladderPending.getOrElse(g.name, Map.empty)
+          .flatMap { case (id, lo) =>
+            if (!catalog.contains(id)) None
+            else if (extentSec(id).exists(_ >= openStart))
+              Some(id -> math.max(lo, openStart))
+            else None
+          }
+        ()
+      }
     }
-    spark.sparkContext.setJobDescription(null)
     if (returnDatapoints) Some(DatapointStore.normalize(folded)) else None
   }
 
@@ -1739,193 +1741,194 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         (srcId, w, regions.get(srcId).map(_.extentBefore)
           .getOrElse(catalog(srcId).latest_ts))
     }.toSeq
-    spark.sparkContext.setJobDescription("cascade:lookback")
-    val lookups = batchedLookbacks(lagNeeds)
-    spark.sparkContext.setJobDescription("cascade:wave")
-
-    // final plan per stream: Some((w, hiKey, cw, lookbackRows)) or None=full
-    val plan: Map[String, Option[(Timestamp, Option[String], Timestamp,
-        Array[org.apache.spark.sql.Row])]] =
-      elig.map { case (d, e) =>
-        d.stream_id -> e.flatMap { case (w, hiKey, cw) =>
-          if (d.derive_op.get == DeriveOps.Sum)
-            Some((w, hiKey, cw, Array.empty[org.apache.spark.sql.Row]))
-          else lookups((d.derive_from.head, w)) match {
-            case Some(rows) => Some((w, hiKey, cw, rows))
-            case None => None // unbounded lookback: full recompute
-          }
-        }
-      }
-
-    def gsecOf(d: StreamDescriptor) = Granularity(d.highest_granularity).seconds
-    def gnameOf(d: StreamDescriptor) = d.highest_granularity
-
-    // per-op batched job over this wave (inc + full unified; per-pair
-    // null window = full history)
-    def runGroup(group: Seq[StreamDescriptor]): Unit = {
-      if (group.isEmpty) return
-      val op = group.head.derive_op.get
-      val anyFull = group.exists(d => plan(d.stream_id).isEmpty)
-      val minW = group.flatMap(d => plan(d.stream_id)).map(_._1)
-        .sortBy(_.getTime).headOption.filter(_ => !anyFull)
-      // (src, srcGranularity, out, wOrNull, loKeyOrNull, hiKeyOrNull):
-      // exact (stream, granularity) pair match — a source's ROLLUP rows
-      // at another source's finer granularity can never leak in
-      val pairs = group.flatMap { d =>
-        val p = plan(d.stream_id)
-        // distinct: a source listed twice in derive_from must still feed
-        // its rows ONCE (the old isin() scan had set semantics; a pair
-        // join would double-count every point into a sum)
-        d.derive_from.distinct.map { src =>
-          (src, catalog(src).highest_granularity, d.stream_id,
-            p.map(_._1).orNull,
-            p.map(x => DatapointStore.ymdKey(x._1)).orNull,
-            p.flatMap(_._2).orNull)
-        }
-      }
-      val pairsDf = broadcast(pairs.toDF(
-        "__src", "__gname", "__out", "__w", "__lo", "__hi"))
-      // only the directories holding the sources' rows at their highest
-      // granularity: source-stream sources never list a derived root
-      val base = filterToStreams(
-        scanDirs(pairs.map(p => dirOf(p._1, p._2))), pairs.map(_._1).distinct)
-      val pruned = minW.fold(base)(w =>
-        base.where(col("ymd") >= DatapointStore.ymdKey(w) && col("t") >= w))
-      val joined = pruned
-        .join(pairsDf, col("stream_id") === col("__src") &&
-          col("granularity") === col("__gname"))
-      val input = (op match {
-        case DeriveOps.Sum =>
-          // per-out day-range filter (sum is bucket-local)
-          joined.where(col("__lo").isNull ||
-            (col("ymd") >= col("__lo") &&
-              (col("__hi").isNull || col("ymd") <= col("__hi"))))
-        case _ =>
-          joined.where(col("__w").isNull || col("t") >= col("__w"))
-      }).select(col("__out").as("stream_id"), col("t"),
-        col("v_num").as("v"))
-
-      // collected lookback points, re-keyed to their OUTPUT stream
-      val lbRows = group.flatMap { d =>
-        plan(d.stream_id).toSeq.flatMap(_._4.toSeq).map(r =>
-          org.apache.spark.sql.Row(d.stream_id, r.getTimestamp(1), r.get(2)))
-      }
-      val withLb =
-        if (lbRows.isEmpty) input
-        else input.unionByName(spark.createDataFrame(
-          spark.sparkContext.parallelize(lbRows, 1), lbSchema))
-
-      val res = op match {
-        case DeriveOps.Sum =>
-          val gMetaSum = broadcast(group.map(d =>
-            (d.stream_id, gsecOf(d))).toDF("stream_id", "gsec"))
-          Derive.streamSumKeyed(withLb.join(gMetaSum, "stream_id"))
-        case DeriveOps.Derivative => Derive.derivative(withLb)
-        case DeriveOps.CounterReset => Derive.counterReset(withLb)
-        case DeriveOps.CounterDerivative =>
-          val maxDf = group.map(d => (d.stream_id,
-            d.derive_args.flatMap(Json.numField(_, "max_value"))
-              .map(Double.box).orNull.asInstanceOf[java.lang.Double]))
-            .toDF("stream_id", "max_value")
-          // reset events re-key straight to the OUTPUT stream so they
-          // land in the window partition they must suppress; incremental
-          // streams only need resets at/after their lookback point
-          val resetPairs = group.flatMap { d =>
-            d.derive_args.flatMap(Json.strField(_, "reset_stream")).map { rid =>
-              val from = plan(d.stream_id).map { p =>
-                p._4.headOption.map(_.getTimestamp(1)).getOrElse(p._1)
-              }
-              (rid, catalog(rid).highest_granularity, d.stream_id,
-                from.orNull)
+    val lookups = Meter.tagged(spark.sparkContext, "cascade:lookback") {
+      batchedLookbacks(lagNeeds)
+    }
+    Meter.tagged(spark.sparkContext, "cascade:wave") {
+      // final plan per stream: Some((w, hiKey, cw, lookbackRows)) or None=full
+      val plan: Map[String, Option[(Timestamp, Option[String], Timestamp,
+          Array[org.apache.spark.sql.Row])]] =
+        elig.map { case (d, e) =>
+          d.stream_id -> e.flatMap { case (w, hiKey, cw) =>
+            if (d.derive_op.get == DeriveOps.Sum)
+              Some((w, hiKey, cw, Array.empty[org.apache.spark.sql.Row]))
+            else lookups((d.derive_from.head, w)) match {
+              case Some(rows) => Some((w, hiKey, cw, rows))
+              case None => None // unbounded lookback: full recompute
             }
           }
-          val reset = if (resetPairs.isEmpty) None else {
-            val rDf = broadcast(resetPairs.toDF(
-              "__src", "__gname", "__out", "__from"))
-            val rBase = filterToStreams(
-              scanDirs(resetPairs.map(p => dirOf(p._1, p._2))),
-              resetPairs.map(_._1).distinct)
-            val rMin = resetPairs.flatMap(p => Option(p._4))
-              .sortBy(_.getTime).headOption
-              .filter(_ => resetPairs.forall(_._4 != null))
-            Some(rMin.fold(rBase)(f =>
-                rBase.where(col("ymd") >= DatapointStore.ymdKey(f)))
-              .join(rDf, col("stream_id") === col("__src") &&
-                col("granularity") === col("__gname"))
-              .where(col("__from").isNull || col("t") >= col("__from"))
-              .select(col("__out").as("stream_id"), col("t")))
+        }
+
+      def gsecOf(d: StreamDescriptor) = Granularity(d.highest_granularity).seconds
+      def gnameOf(d: StreamDescriptor) = d.highest_granularity
+
+      // per-op batched job over this wave (inc + full unified; per-pair
+      // null window = full history)
+      def runGroup(group: Seq[StreamDescriptor]): Unit = {
+        if (group.isEmpty) return
+        val op = group.head.derive_op.get
+        val anyFull = group.exists(d => plan(d.stream_id).isEmpty)
+        val minW = group.flatMap(d => plan(d.stream_id)).map(_._1)
+          .sortBy(_.getTime).headOption.filter(_ => !anyFull)
+        // (src, srcGranularity, out, wOrNull, loKeyOrNull, hiKeyOrNull):
+        // exact (stream, granularity) pair match — a source's ROLLUP rows
+        // at another source's finer granularity can never leak in
+        val pairs = group.flatMap { d =>
+          val p = plan(d.stream_id)
+          // distinct: a source listed twice in derive_from must still feed
+          // its rows ONCE (the old isin() scan had set semantics; a pair
+          // join would double-count every point into a sum)
+          d.derive_from.distinct.map { src =>
+            (src, catalog(src).highest_granularity, d.stream_id,
+              p.map(_._1).orNull,
+              p.map(x => DatapointStore.ymdKey(x._1)).orNull,
+              p.flatMap(_._2).orNull)
           }
-          Derive.counterDerivativePerStream(withLb, maxDf, reset)
-      }
+        }
+        val pairsDf = broadcast(pairs.toDF(
+          "__src", "__gname", "__out", "__w", "__lo", "__hi"))
+        // only the directories holding the sources' rows at their highest
+        // granularity: source-stream sources never list a derived root
+        val base = filterToStreams(
+          scanDirs(pairs.map(p => dirOf(p._1, p._2))), pairs.map(_._1).distinct)
+        val pruned = minW.fold(base)(w =>
+          base.where(col("ymd") >= DatapointStore.ymdKey(w) && col("t") >= w))
+        val joined = pruned
+          .join(pairsDf, col("stream_id") === col("__src") &&
+            col("granularity") === col("__gname"))
+        val input = (op match {
+          case DeriveOps.Sum =>
+            // per-out day-range filter (sum is bucket-local)
+            joined.where(col("__lo").isNull ||
+              (col("ymd") >= col("__lo") &&
+                (col("__hi").isNull || col("ymd") <= col("__hi"))))
+          case _ =>
+            joined.where(col("__w").isNull || col("t") >= col("__w"))
+        }).select(col("__out").as("stream_id"), col("t"),
+          col("v_num").as("v"))
 
-      // round to each stream's granularity; drop anything before its
-      // rewrite window (lookback-internal pairs never emit anyway)
-      val gMeta = broadcast(group.map(d => (d.stream_id, gsecOf(d),
-          gnameOf(d), plan(d.stream_id).map(_._1).orNull))
-        .toDF("stream_id", "__gsec", "__gn", "__w0"))
-      val result = res.join(gMeta, "stream_id")
-        .withColumn("t", timestamp_seconds(
-          floor(unix_timestamp(col("t")) / col("__gsec")) * col("__gsec")))
-        .where(col("__w0").isNull || col("t") >= col("__w0"))
-        .select(col("stream_id"), col("__gn").as("granularity"),
-          col("t"), col("v").cast("double").as("v_num"))
+        // collected lookback points, re-keyed to their OUTPUT stream
+        val lbRows = group.flatMap { d =>
+          plan(d.stream_id).toSeq.flatMap(_._4.toSeq).map(r =>
+            org.apache.spark.sql.Row(d.stream_id, r.getTimestamp(1), r.get(2)))
+        }
+        val withLb =
+          if (lbRows.isEmpty) input
+          else input.unionByName(spark.createDataFrame(
+            spark.sparkContext.parallelize(lbRows, 1), lbSchema))
 
-      // per-stream deletions BEFORE the one write action runs (inputs
-      // read only earlier-wave/unchanged streams, never this group)
-      group.foreach { d =>
-        plan(d.stream_id) match {
-          case Some((w, hiKey, _, _)) =>
-            // dirty sentinel FIRST: a crash between these deletes and the
-            // group write below must not read as a consistent store
-            dfs.create(hPath(dirtyFile(d.stream_id)), true).close()
-            val wKey = DatapointStore.ymdKey(w)
-            deleteDerivedYmds(derivedRawPath, d.stream_id, wKey, hiKey)
-            // rollups: always from wKey onward — the downsample ladder's
-            // high-water mark never refills a finite mid-range hole
-            deleteDerivedYmds(rollupsPath, d.stream_id, wKey, None)
-          case None =>
-            // full mode gets the sentinel too: a missing coverage marker
-            // forces a full recompute only at the NEXT derive trigger —
-            // a crash between these deletes and the group write would
-            // serve the emptied stream to every read until then (forever,
-            // for a source that never appends again). The sentinel makes
-            // healDirtyStreams repair it at the next open instead — and it
-            // must land BEFORE the deletes (the sentinel lives inside the
-            // stream dir, so delete siblings around it rather than
-            // rmTree-then-create, which leaves a sentinel-less window for
-            // the whole O(#partitions) delete).
-            val dirty = hPath(dirtyFile(d.stream_id))
-            dfs.mkdirs(dirty.getParent)
-            dfs.create(dirty, true).close()
-            dfs.listStatus(dirty.getParent)
-              .filterNot(_.getPath.getName == dirty.getName)
-              .foreach(f => rmTree(f.getPath.toString))
-            rmTree(streamDir(rollupsPath, d.stream_id))
+        val res = op match {
+          case DeriveOps.Sum =>
+            val gMetaSum = broadcast(group.map(d =>
+              (d.stream_id, gsecOf(d))).toDF("stream_id", "gsec"))
+            Derive.streamSumKeyed(withLb.join(gMetaSum, "stream_id"))
+          case DeriveOps.Derivative => Derive.derivative(withLb)
+          case DeriveOps.CounterReset => Derive.counterReset(withLb)
+          case DeriveOps.CounterDerivative =>
+            val maxDf = group.map(d => (d.stream_id,
+              d.derive_args.flatMap(Json.numField(_, "max_value"))
+                .map(Double.box).orNull.asInstanceOf[java.lang.Double]))
+              .toDF("stream_id", "max_value")
+            // reset events re-key straight to the OUTPUT stream so they
+            // land in the window partition they must suppress; incremental
+            // streams only need resets at/after their lookback point
+            val resetPairs = group.flatMap { d =>
+              d.derive_args.flatMap(Json.strField(_, "reset_stream")).map { rid =>
+                val from = plan(d.stream_id).map { p =>
+                  p._4.headOption.map(_.getTimestamp(1)).getOrElse(p._1)
+                }
+                (rid, catalog(rid).highest_granularity, d.stream_id,
+                  from.orNull)
+              }
+            }
+            val reset = if (resetPairs.isEmpty) None else {
+              val rDf = broadcast(resetPairs.toDF(
+                "__src", "__gname", "__out", "__from"))
+              val rBase = filterToStreams(
+                scanDirs(resetPairs.map(p => dirOf(p._1, p._2))),
+                resetPairs.map(_._1).distinct)
+              val rMin = resetPairs.flatMap(p => Option(p._4))
+                .sortBy(_.getTime).headOption
+                .filter(_ => resetPairs.forall(_._4 != null))
+              Some(rMin.fold(rBase)(f =>
+                  rBase.where(col("ymd") >= DatapointStore.ymdKey(f)))
+                .join(rDf, col("stream_id") === col("__src") &&
+                  col("granularity") === col("__gname"))
+                .where(col("__from").isNull || col("t") >= col("__from"))
+                .select(col("__out").as("stream_id"), col("t")))
+            }
+            Derive.counterDerivativePerStream(withLb, maxDf, reset)
+        }
+
+        // round to each stream's granularity; drop anything before its
+        // rewrite window (lookback-internal pairs never emit anyway)
+        val gMeta = broadcast(group.map(d => (d.stream_id, gsecOf(d),
+            gnameOf(d), plan(d.stream_id).map(_._1).orNull))
+          .toDF("stream_id", "__gsec", "__gn", "__w0"))
+        val result = res.join(gMeta, "stream_id")
+          .withColumn("t", timestamp_seconds(
+            floor(unix_timestamp(col("t")) / col("__gsec")) * col("__gsec")))
+          .where(col("__w0").isNull || col("t") >= col("__w0"))
+          .select(col("stream_id"), col("__gn").as("granularity"),
+            col("t"), col("v").cast("double").as("v_num"))
+
+        // per-stream deletions BEFORE the one write action runs (inputs
+        // read only earlier-wave/unchanged streams, never this group)
+        group.foreach { d =>
+          plan(d.stream_id) match {
+            case Some((w, hiKey, _, _)) =>
+              // dirty sentinel FIRST: a crash between these deletes and the
+              // group write below must not read as a consistent store
+              dfs.create(hPath(dirtyFile(d.stream_id)), true).close()
+              val wKey = DatapointStore.ymdKey(w)
+              deleteDerivedYmds(derivedRawPath, d.stream_id, wKey, hiKey)
+              // rollups: always from wKey onward — the downsample ladder's
+              // high-water mark never refills a finite mid-range hole
+              deleteDerivedYmds(rollupsPath, d.stream_id, wKey, None)
+            case None =>
+              // full mode gets the sentinel too: a missing coverage marker
+              // forces a full recompute only at the NEXT derive trigger —
+              // a crash between these deletes and the group write would
+              // serve the emptied stream to every read until then (forever,
+              // for a source that never appends again). The sentinel makes
+              // healDirtyStreams repair it at the next open instead — and it
+              // must land BEFORE the deletes (the sentinel lives inside the
+              // stream dir, so delete siblings around it rather than
+              // rmTree-then-create, which leaves a sentinel-less window for
+              // the whole O(#partitions) delete).
+              val dirty = hPath(dirtyFile(d.stream_id))
+              dfs.mkdirs(dirty.getParent)
+              dfs.create(dirty, true).close()
+              dfs.listStatus(dirty.getParent)
+                .filterNot(_.getPath.getName == dirty.getName)
+                .foreach(f => rmTree(f.getPath.toString))
+              rmTree(streamDir(rollupsPath, d.stream_id))
+          }
+        }
+        DatapointStore.appendByStream(result, derivedRawPath)
+        // markers last: a crash before this re-runs as full recompute
+        group.foreach(d => writeCoverage(d.stream_id, coverageNow(d)))
+        group.foreach(d =>
+          dfs.delete(hPath(dirtyFile(d.stream_id)), false))
+        group.foreach { d =>
+          plan(d.stream_id) match {
+            case Some((w, hiKey, cw, _)) =>
+              regions(d.stream_id) = Region(w, hiKey, Some(cw))
+              // the rewrite dropped this stream's rollups from w onward —
+              // the next ladder run must revisit every level whose buckets
+              // from w complete, even if `until` crosses no new boundary
+              noteDataWritten(Math.floorDiv(w.getTime, 1000L), Seq(d.stream_id))
+            case None =>
+              regions.remove(d.stream_id)
+              // full rewrite: all history is "new"
+              noteDataWritten(0L, Seq(d.stream_id))
+          }
         }
       }
-      DatapointStore.appendByStream(result, derivedRawPath)
-      // markers last: a crash before this re-runs as full recompute
-      group.foreach(d => writeCoverage(d.stream_id, coverageNow(d)))
-      group.foreach(d =>
-        dfs.delete(hPath(dirtyFile(d.stream_id)), false))
-      group.foreach { d =>
-        plan(d.stream_id) match {
-          case Some((w, hiKey, cw, _)) =>
-            regions(d.stream_id) = Region(w, hiKey, Some(cw))
-            // the rewrite dropped this stream's rollups from w onward —
-            // the next ladder run must revisit every level whose buckets
-            // from w complete, even if `until` crosses no new boundary
-            noteDataWritten(Math.floorDiv(w.getTime, 1000L), Seq(d.stream_id))
-          case None =>
-            regions.remove(d.stream_id)
-            // full rewrite: all history is "new"
-            noteDataWritten(0L, Seq(d.stream_id))
-        }
-      }
+
+      DeriveOps.all.foreach(op =>
+        runGroup(wave.filter(_.derive_op.contains(op))))
     }
-
-    DeriveOps.all.foreach(op =>
-      runGroup(wave.filter(_.derive_op.contains(op))))
   }
 
   def backprocessStreams(queryTags: Map[String, String] = Map.empty): Unit = {

@@ -1,8 +1,6 @@
 package graft.model
 
 import java.sql.Timestamp
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** The reference's fixed seven-level granularity ladder.
   *
@@ -34,14 +32,6 @@ sealed abstract class Granularity(val name: String, val seconds: Long) extends S
 
   /** Spark window duration string, e.g. "10 seconds". */
   def windowDuration: String = s"$seconds seconds"
-
-  /** Column expression flooring a timestamp column to the bucket start.
-    * Pure arithmetic on epoch seconds — stays inside whole-stage codegen
-    * (no UDF), and is identical to what a DuckDB oracle computes with
-    * to_timestamp(epoch(ts)//N*N).
-    */
-  def bucketCol(t: Column): Column =
-    timestamp_seconds(floor(unix_timestamp(t) / seconds) * seconds)
 
   override def toString: String = name
 }

@@ -90,6 +90,15 @@ object Meter {
       else { val br = d.indexOf("<br/>"); if (br >= 0) d.take(br) else d }
   }
 
+  /** `body` run with `site` as the description of the jobs it starts on
+    * this thread; the description set before is restored afterwards, also
+    * when `body` throws, so a phase's tag never reaches later jobs. */
+  def tagged[T](sc: SparkContext, site: String)(body: => T): T = {
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(site)
+    try body finally sc.setJobDescription(outer)
+  }
+
   /** Waits until every listener event posted so far has been delivered. */
   def drain(spark: SparkSession): Unit = BusDrain.drain(spark.sparkContext)
 

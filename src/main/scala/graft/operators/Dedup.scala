@@ -37,18 +37,6 @@ object Dedup {
            |          i -> concat_ws(' ', slice(split($textCol, ' '), i + 1, $n)))"""
           .stripMargin)).as("shingles"))
 
-  /** MinHash signature per document: an array of `numHashes` minimum hash
-    * values. One base xxhash64 per shingle, then the native
-    * [[graft.functions.MinHashSignature]] codegen loop applies the whole
-    * affine hash family in a single fused pass.
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
-    sh.select(col("doc_id"),
-        expr("transform(shingles, s -> xxhash64(s))").as("hs"))
-      .select(col("doc_id"), expr(s"graft_minhash(hs, $numHashes)").as("sig"))
-  }
-
   /** 60-bit SimHash per document: bit i of the fingerprint is the majority
     * vote of bit i across the token hashes (ties set the bit) — one fused
     * codegen pass via the native [[graft.functions.SimHash64]] expression

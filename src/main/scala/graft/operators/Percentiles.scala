@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *  1. distinct-value counts — `groupBy(group, value).count` (partial
   *     map-side aggregation, the only corpus-wide shuffle);
   *  2. a running-count CDF over the DISTINCT table only (per-group sort
-  *     window, O(1) memory per row — the [[graft.SparkEntry]]
+  *     window, O(1) memory per row — the [[graft.gates.PipeGates]]
   *     pipe_quantile_norm discipline; per-group DISTINCT cardinality is
   *     the sort span, never the row count);
   *  3. target ranks per (group, p) from broadcast group totals —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.obs.Meter
+
 /** Keyword + hybrid retrieval over the document corpus — the lexical
   * complement to [[Similarity]]'s ANN lanes, used in training-data
   * curation for hard-negative mining and retrieval-augmented filtering.
@@ -951,15 +953,13 @@ object Retrieval {
     // EAGER phases so regressions are attributable (the lazy scoring
     // lanes execute at the caller's sink). Tags only, no plan changes.
     val sc = spark.sparkContext
-    sc.setJobDescription("bm25-audit:sample")
-    val q =
-      try {
-        val n = docs.count()
-        val st = math.max(1L, (n + sampleBudget - 1) / sampleBudget)
-        docs.where(col(idCol) % st === 0)
-          .select(col(idCol).as("qid"), col(textCol).as("qtext"))
-          .localCheckpoint(true) // feeds both lanes
-      } finally sc.setJobDescription(null)
+    val q = Meter.tagged(sc, "bm25-audit:sample") {
+      val n = docs.count()
+      val st = math.max(1L, (n + sampleBudget - 1) / sampleBudget)
+      docs.where(col(idCol) % st === 0)
+        .select(col(idCol).as("qid"), col(textCol).as("qtext"))
+        .localCheckpoint(true) // feeds both lanes
+    }
     val direct = bm25TopK(docs, q, k, idCol = idCol, textCol = textCol)
     val indexed = bm25TopKIndexed(spark, root, q, k, nBuckets)
     val rr = direct.where(col("rnk") === 1).select(col("qid"), col("doc_id"))
@@ -981,14 +981,13 @@ object Retrieval {
       val dlDir = s"$root/doclens"
       if (!afs.exists(new org.apache.hadoop.fs.Path(dlDir))) (0L, 0L)
       else {
-        sc.setJobDescription("bm25-audit:doclens-recount")
-        val r =
-          try spark.read.schema(StructType(Seq(
+        val r = Meter.tagged(sc, "bm25-audit:doclens-recount") {
+          spark.read.schema(StructType(Seq(
               StructField("doc_id", LongType), StructField("dl", LongType))))
             .parquet(dlDir)
             .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
             .head()
-          finally sc.setJobDescription(null)
+        }
         (r.getLong(0), r.getLong(1))
       }
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.obs.Meter
 
 /** Embedding similarity search (driver north-star scope).
   *
@@ -315,10 +316,6 @@ object Similarity {
     }
     expr(bits.mkString(" + "))
   }
-
-  def lshBuckets(corpus: DataFrame, dim: Int, planes: Int = 16): DataFrame =
-    corpus.withColumn("bucket", lshBucketCol(dim, planes))
-      .select(col("vec_id"), col("bucket"))
 
   /** IVF-style ANN cosine top-k — the second 100 TB scale path next to
     * [[annTopK]] (LSH). Every `stride`-th vector stands in for a trained
@@ -899,32 +896,28 @@ object Similarity {
     val sc = spark.sparkContext
     val gen = ivfCurrentGen(spark, base)
     val cur = s"$base/gen=$gen"
-    sc.setJobDescription(s"ivf-maintain:apply b$batchId")
-    val applied =
-      try applyIvfBatch(spark, cur, batch, batchId, cents)
-      finally sc.setJobDescription(null)
-    if (!applied) return false
-    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-      sc.setJobDescription(s"ivf-maintain:compact b$batchId")
-      try compactIvfIndex(spark, cur, maxFilesPerCell = 2)
-      finally sc.setJobDescription(null)
+    val applied = Meter.tagged(sc, s"ivf-maintain:apply b$batchId") {
+      applyIvfBatch(spark, cur, batch, batchId, cents)
     }
+    if (!applied) return false
+    if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+      Meter.tagged(sc, s"ivf-maintain:compact b$batchId") {
+        compactIvfIndex(spark, cur, maxFilesPerCell = 2)
+      }
     if (auditEvery > 0 && batchId % auditEvery == auditEvery - 1) {
-      sc.setJobDescription(s"ivf-maintain:audit b$batchId")
-      val a =
-        try auditIvfIndex(spark, cur, k, nprobe, sampleBudget,
+      val a = Meter.tagged(sc, s"ivf-maintain:audit b$batchId") {
+        auditIvfIndex(spark, cur, k, nprobe, sampleBudget,
           minRecallBp, maxCellPpm).head()
-        finally sc.setJobDescription(null)
+      }
       if (a.getBoolean(6)) {
         val fs = hadoopFs(spark, base)
         val next = s"$base/gen=${gen + 1}"
         // a crashed earlier attempt leaves an unmarked half-built dir —
         // clear it or the rebuild's appends would double its content
         fs.delete(new org.apache.hadoop.fs.Path(next), true)
-        sc.setJobDescription(s"ivf-maintain:rebuild b$batchId")
-        try rebuildIvfIndex(spark, cur, next, rebuildStride, 2,
-          centroidBudget)
-        finally sc.setJobDescription(null)
+        Meter.tagged(sc, s"ivf-maintain:rebuild b$batchId") {
+          rebuildIvfIndex(spark, cur, next, rebuildStride, 2, centroidBudget)
+        }
         // carry the exactly-once horizon into the new generation BEFORE
         // it becomes visible (a re-delivered pre-flip batch must skip)
         fs.create(new org.apache.hadoop.fs.Path(next,

@@ -31,13 +31,6 @@ object Skew {
       .agg(sum("__partial").as("n_distinct"))
   }
 
-  /** Salted key column for manual skew-spreading of a hot aggregation
-    * key: append a deterministic per-row salt, aggregate on (key, salt)
-    * with partial-mergeable aggregates, then merge on key.
-    */
-  def saltKey(key: Column, buckets: Int, entropy: Column): Column =
-    concat_ws("#", key, pmod(xxhash64(entropy), lit(buckets)))
-
   /** Skew-safe equi-join: spread a HOT join key across `buckets` salt
     * shards. The big (probe) side salts each row deterministically from
     * a caller-named `entropy` column (any well-distributed per-row

@@ -206,6 +206,23 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((ts("2024-01-01 00:00:01"), 11.0), (ts("2024-01-01 00:00:02"), 2.0)))
   }
 
+  test("phase tags end with their phase: a read after the derive cascade is not charged to cascade:*") {
+    import spark.implicits._
+    val ds = freshDs()
+    val src = ds.ensureStream(Map("name" -> "tag-src"))
+    val sum = ds.ensureStream(Map("name" -> "tag-sum"),
+      deriveFrom = Seq(src), deriveOp = Some(DeriveOps.Sum))
+    ds.appendMultiple(Seq(
+      (src, ts("2024-01-01 00:00:01"), 1.0),
+      (src, ts("2024-01-01 00:00:02"), 2.0)).toDF("stream_id", "t", "v"))
+    val (rows, read) = graft.obs.Meter.measure(spark) {
+      ds.getData(sum, Granularity.Seconds).collect()
+    }
+    assert(rows.map(_.getDouble(1)).toSeq == Seq(1.0, 2.0))
+    assert(read.jobs > 0 && !read.sites.keys.exists(_.startsWith("cascade:")),
+      read.sites)
+  }
+
   test("derive: chained derived streams recompute in dependency order") {
     val ds = freshDs()
     import spark.implicits._
@@ -1093,19 +1110,26 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val ds = freshDs()
     val id = ds.ensureStream(Map("name" -> "ttl"))
+    // a derived stream keeps its raw points and rollups in their own
+    // roots: expiry must reach both
+    val sum = ds.ensureStream(Map("name" -> "ttl-sum"),
+      deriveFrom = Seq(id), deriveOp = Some(DeriveOps.Sum))
     ds.appendMultiple(Seq(
       (id, ts("2024-01-01 00:00:01"), 1.0),
       (id, ts("2024-01-05 00:00:01"), 2.0),
       (id, ts("2024-01-09 00:00:01"), 3.0)).toDF("stream_id", "t", "v"),
       checkTimestamp = false)
     ds.downsampleStreams(ts("2024-02-01 00:00:00"))
-    val daysBefore = ds.getData(id, Granularity.Days).count()
-    assert(daysBefore == 3)
+    Seq(id, sum).foreach { s =>
+      assert(ds.getData(s, Granularity.Days).count() == 3)
+    }
     ds.expireData(ts("2024-01-05 00:00:00"))
     // Jan 1 gone at every granularity; Jan 5 and 9 retained
-    assert(ds.getData(id, Granularity.Seconds).collect()
-      .map(_.getDouble(1)).sorted.toSeq == Seq(2.0, 3.0))
-    assert(ds.getData(id, Granularity.Days).count() == 2)
+    Seq(id, sum).foreach { s =>
+      assert(ds.getData(s, Granularity.Seconds).collect()
+        .map(_.getDouble(1)).sorted.toSeq == Seq(2.0, 3.0))
+      assert(ds.getData(s, Granularity.Days).count() == 2)
+    }
     // the store keeps appending after expiry
     ds.appendMultiple(Seq((id, ts("2024-01-10 00:00:01"), 4.0))
       .toDF("stream_id", "t", "v"), checkTimestamp = false)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.gates.Fixtures
 import graft.operators.{Dedup, Multimodal, Similarity, TextStats}
 
 /** North-star operator suites: dedup (minhash/simhash), similarity,
@@ -150,7 +151,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (path <- dirs) {
       // the SAME injected-variant recipe the gate queries use — via the
       // shared helper so the pinned recall can't diverge from production
-      val corpus = SparkEntry.withInjectedVariants(
+      val corpus = Fixtures.withInjectedVariants(
         spark.read.parquet(path).select("doc_id", "text"))
       val sh = Dedup.shingles(corpus).localCheckpoint(true)
       val sizes = sh.select(col("doc_id"), size(col("shingles")).as("n"))
@@ -186,7 +187,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assume(dirs.nonEmpty)
     for (path <- dirs) {
       val docs = spark.read.parquet(path).select("doc_id", "text")
-      val batch = SparkEntry.incrementalGateBatch(docs)
+      val batch = Fixtures.incrementalGateBatch(docs)
       val shC = Dedup.shingles(docs).localCheckpoint(true)
       val shB = Dedup.shingles(batch).localCheckpoint(true)
       val sizesC = shC.select(col("doc_id").as("cid"), size(col("shingles")).as("nc"))
@@ -222,7 +223,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (path <- dirs) {
       val e = spark.read.parquet(path)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val all = SparkEntry.withInjectedEmbVariants(e)
+      val all = Fixtures.withInjectedEmbVariants(e)
       def pairSet(df: org.apache.spark.sql.DataFrame) = df
         .select("id_a", "id_b")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -251,7 +252,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (path <- dirs) {
       val e = spark.read.parquet(path)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-      val all = SparkEntry.withInjectedEmbVariants(e)
+      val all = Fixtures.withInjectedEmbVariants(e)
       val cents = Similarity.strideCentroids(e, 50)
       val out = Similarity.semDedup(all, cents, 0.95)
         .select("vec_id", "cell", "dup_of").collect()
@@ -279,7 +280,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // against the pre-assigned BASE cell index must reproduce exactly
       // what the full corpus run decided for them (organics never pair
       // with each other at tau, so the base index is the only dup source)
-      val batch = SparkEntry.withInjectedEmbVariants(e)
+      val batch = Fixtures.withInjectedEmbVariants(e)
         .where(col("vec_id") >= 100000)
       val idx = Similarity.assignCells(e, cents).localCheckpoint(true)
       val inc = Similarity.semDedupIncremental(idx, batch, cents, 0.95)
@@ -703,7 +704,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hll rollup: folded sketches ≡ direct sketches, estimates near exact") {
     import graft.operators.HllRollup
-    val ev = graft.SparkEntry.events(spark, "/root/testdata/sf0.001")
+    val ev = Fixtures.events(spark, "/root/testdata/sf0.001")
       .select(col("event_type"), col("ts"), col("user_id"))
     val hours = HllRollup.sketchBuckets(ev, "user_id", "ts", 3600L,
       Seq("event_type"))
@@ -1112,7 +1113,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hist rollup: fold is EXACT (≡ direct coarse build), quantiles within a bin width") {
     import graft.operators.HistRollup
     val spec = HistRollup.HistSpec(0.0, 512.0, 64)
-    val ev = graft.SparkEntry.events(spark, "/root/testdata/sf0.001")
+    val ev = Fixtures.events(spark, "/root/testdata/sf0.001")
       .select(col("event_type"), unix_timestamp(col("ts")).as("sec"),
         col("value").as("v"))
     val hours = HistRollup.histBuckets(ev, "v", "sec", 3600L,
@@ -1299,7 +1300,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(p => new java.io.File(p).exists())
     assume(dirs.nonEmpty)
     for (path <- dirs) {
-      val corpus = SparkEntry.withInjectedVariants(
+      val corpus = Fixtures.withInjectedVariants(
         spark.read.parquet(path).select("doc_id", "text"))
       val pairs = Dedup.nearDuplicates(corpus, threshold = 0.3)
         .localCheckpoint(true)

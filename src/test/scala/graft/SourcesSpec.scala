@@ -8,6 +8,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.gates.Fixtures
 import graft.model.Granularity
 import graft.sources.Sources
 
@@ -184,7 +185,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$microsDir/events.parquet")
-    def dump(dir: String) = SparkEntry.events(spark, dir)
+    def dump(dir: String) = Fixtures.events(spark, dir)
       .orderBy("event_id").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2),
         r.getString(3), r.getDouble(4), r.getString(5))).toSeq
@@ -194,8 +195,8 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == rows, s"decoded rows drifted from fixture:\n$n")
     // schema parity: downstream is pinned on (long, TIMESTAMP_LTZ, long,
     // string, double, string) regardless of source encoding
-    assert(SparkEntry.events(spark, nanosDir).schema ==
-      SparkEntry.events(spark, microsDir).schema)
+    assert(Fixtures.events(spark, nanosDir).schema ==
+      Fixtures.events(spark, microsDir).schema)
   }
 
   override def afterAll(): Unit = spark.stop()

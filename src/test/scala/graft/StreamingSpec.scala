@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.gates.Fixtures
 import graft.model.Granularity
 import graft.operators.{Derive, Downsample}
 import graft.streaming.{ReorderBuffers, Streaming}
@@ -1133,7 +1134,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val ctx = spark.sqlContext
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val all = SparkEntry.withInjectedEmbVariants(e)
+    val all = Fixtures.withInjectedEmbVariants(e)
     val cents = graft.operators.Similarity.strideCentroids(e, 50)
     def decisions(df: org.apache.spark.sql.DataFrame) = df
       .select("vec_id", "cell", "dup_of").collect()
