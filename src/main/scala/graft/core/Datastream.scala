@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
-import graft.obs.Meter
+import graft.obs.{GraftSession, Meter}
 import graft.operators.{Derive, RollupLadder}
 
 /** Spark-native re-design of the reference's frontend `Datastream` class
@@ -32,7 +32,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   import spark.implicits._
 
   private val streamsPath = s"$rootDir/streams"
-  private val hwmPath = s"$rootDir/streams.hwm"
+  private val hwmSegDir = s"$rootDir/streams.hwm.d"
   private val datapointsPath = s"$rootDir/datapoints"
 
   // ---- catalog (stream metadata) -------------------------------------
@@ -42,7 +42,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * would be an O(#streams) driver-side rewrite per micro-batch. Instead
     * `finishAppend` marks the touched streams' SHARDS dirty and records
     * the batch's per-stream time bounds in an append-only sidecar
-    * (`streams.hwm`, one JSONL line per stream per batch — O(batch), no
+    * (`streams.hwm.d/`, one JSONL line per stream per batch — O(batch), no
     * Spark job, the coverage-marker pattern applied to the primary root).
     * `flush()` persists only the dirty shards and truncates the sidecar;
     * `loadCatalog` replays a surviving sidecar so a crash between append
@@ -56,9 +56,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * On disk the catalog is HASH-SHARDED: `<root>/streams/shard=KKK/`
     * (256 shards), so a flush rewrites O(changed streams + touched
     * shards), never the whole catalog — at 10⁶ streams a single-stream
-    * tag update rewrites ~1/256th of the metastore. Pre-shard stores
-    * (one flat parquet dir) load transparently and migrate to the
-    * sharded layout on their next flush.
+    * tag update rewrites ~1/256th of the metastore.
     */
   // DECLARED BEFORE `catalog`: `loadCatalog()` runs in the constructor, so
   // anything it reads or writes must already be initialized — a later
@@ -80,9 +78,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * `catalog`: loadCatalog()/replayHwm() run in the constructor. */
   private var hwmBytes: Long = 0L
   private[graft] final val catalogShards = 256
-  /** True while the on-disk catalog is still the pre-shard flat layout —
-    * the next flush rewrites every shard and removes the legacy files. */
-  private var legacyCatalogLayout = false
   private var catalog: Map[String, StreamDescriptor] = loadCatalog()
   /** Inverted (tag key, value) → stream-id index over the FLAT tag maps —
     * what makes A1's existing-stream check and A5's find O(matched ids)
@@ -161,7 +156,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     scala.collection.mutable.Map.empty[String, Option[Long]]
   private def catalogDirty: Boolean = dirtyShards.nonEmpty
   private def markDirty(id: String): Unit = { dirtyShards += shardOf(id); () }
-  private def markAllDirty(): Unit = { dirtyShards ++= (0 until catalogShards); () }
   // stream ids created since the last persist — their descriptors exist
   // only in memory, so data writes keyed by them must force a flush first
   private var unpersisted: Set[String] = Set.empty
@@ -197,37 +191,13 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       else if (nonEmptyDir(shardBakPath(k))) Some(shardBakPath(k))
       else None
     }
-    val raw =
-      if (shardPaths.nonEmpty) spark.read.parquet(shardPaths: _*)
-      else {
-        // legacy flat layout (or its whole-dir rename-aside backup)
-        val hasFiles = hList(streamsPath)
-          .exists(f => f.isFile && !f.getPath.getName.startsWith("."))
-        val src = if (hasFiles) streamsPath
-                  else if (hExists(s"$streamsPath.old")) s"$streamsPath.old"
-                  else return Map.empty
-        legacyCatalogLayout = true
-        spark.read.parquet(src)
-      }
-    // catalogs persisted before value_type_options existed self-migrate
-    // (the column is absent from their parquet schema)
-    val migrated =
-      if (raw.columns.contains("value_type_options")) raw
-      else raw.withColumn("value_type_options", lit(null).cast("string"))
-    val loaded = migrated.as[StreamDescriptor]
-      .collect()
-      // tags_json is always derivable from the flat dotted map: rebuild
-      // it on load so catalogs persisted before the nested-document form
-      // (flat JSON with literal dotted keys) self-migrate; an
-      // unrepresentable legacy key set keeps its stored document
-      .map(d => d.copy(tags_json =
-        scala.util.Try(Json.nested(d.tags)).getOrElse(d.tags_json)))
-      .map(d => d.stream_id -> d).toMap
-    replayHwm(loaded)
+    if (shardPaths.isEmpty) return Map.empty
+    replayHwm(spark.read.parquet(shardPaths: _*).as[StreamDescriptor]
+      .collect().map(d => d.stream_id -> d).toMap)
   }
 
   /** Self-heal time bounds from the append sidecar: a crash between an
-    * append and the next catalog flush leaves `streams.hwm` lines the
+    * append and the next catalog flush leaves `streams.hwm.d` lines the
     * persisted catalog doesn't cover. Widening is idempotent (min/max), so
     * replaying lines a later flush DID cover is a no-op; a torn final line
     * from a mid-write crash is skipped (its batch crashed before the data
@@ -256,9 +226,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         case _ => // torn tail line — skip
       } finally in.close()
     }
-    // legacy single-file sidecar (pre-r13 stores), then the segment dir
-    if (hExists(hwmPath))
-      replayFile(hPath(hwmPath), dfs.getFileStatus(hPath(hwmPath)).getLen)
     hList(hwmSegDir)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
@@ -296,8 +263,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     if (hwmBytes > hwmFlushBytes) flush()
   }
 
-  private def hwmSegDir: String = s"$hwmPath.d"
-
   /** Sidecar flush threshold SCALES with catalog size: a fixed cap would
     * quietly reintroduce a per-batch catalog rewrite once one micro-batch
     * touches enough streams to cross it (one line is ~60 B, so 1 MiB ≈
@@ -318,7 +283,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     // backup (never a window where a complete copy of a shard isn't on
     // disk; loadCatalog falls back to `.old_shard=KKK`). Flush cost is
     // O(streams in changed shards), not O(catalog).
-    if (legacyCatalogLayout) markAllDirty()
     val dirty = dirtyShards.toSet
     val shardU = udf((s: String) => f"${(s.hashCode & Int.MaxValue) % catalogShards}%03d")
     val rows = catalog.values.filter(d => dirty(shardOf(d.stream_id))).toSeq
@@ -329,47 +293,23 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         .repartition(math.min(dirty.size, 32), col("shard"))
         .write.mode(SaveMode.Overwrite).partitionBy("shard")
         .parquet(tmpRoot)
-    if (legacyCatalogLayout) {
-      // migration off the flat layout: every shard just wrote into
-      // tmpRoot, so swap the WHOLE directory (the pre-shard crash
-      // contract) — per-shard swaps would strand unswapped shards on a
-      // mid-migration crash, because the loader prefers shard dirs the
-      // moment any exist. loadCatalog's flat fallback covers the
-      // (streams -> streams.old) window.
-      if (!hExists(tmpRoot)) dfs.mkdirs(hPath(tmpRoot)) // fully-emptied catalog
-      val dst = hPath(streamsPath)
-      val bak = hPath(s"$streamsPath.old")
+    dfs.mkdirs(hPath(streamsPath))
+    dirty.toSeq.sorted.foreach { k =>
+      val cur = hPath(shardDirPath(k)); val bak = hPath(shardBakPath(k))
+      val tmp = hPath(s"$tmpRoot/${shardKey(k)}")
       if (dfs.exists(bak)) rmTree(bak.toString)
-      if (dfs.exists(dst) && !dfs.rename(dst, bak))
-        throw new java.io.IOException(s"failed to move catalog aside: $dst -> $bak")
-      if (!dfs.rename(hPath(tmpRoot), dst))
-        throw new java.io.IOException(s"failed to move catalog into place: $tmpRoot -> $dst")
+      if (dfs.exists(cur) && !dfs.rename(cur, bak))
+        throw new java.io.IOException(s"failed to move shard aside: $cur -> $bak")
+      // a dirty shard with no surviving streams has no tmp dir: the
+      // rename-aside + backup drop below IS its deletion
+      if (dfs.exists(tmp) && !dfs.rename(tmp, cur))
+        throw new java.io.IOException(s"failed to move shard into place: $tmp -> $cur")
       if (dfs.exists(bak)) rmTree(bak.toString)
-      // drop the Spark write artifacts (_SUCCESS) that rode along in the
-      // whole-dir swap — the sharded layout holds only shard=KKK dirs
-      hList(streamsPath).filter(_.isFile)
-        .foreach(f => dfs.delete(f.getPath, false))
-      legacyCatalogLayout = false
-    } else {
-      dfs.mkdirs(hPath(streamsPath))
-      dirty.toSeq.sorted.foreach { k =>
-        val cur = hPath(shardDirPath(k)); val bak = hPath(shardBakPath(k))
-        val tmp = hPath(s"$tmpRoot/${shardKey(k)}")
-        if (dfs.exists(bak)) rmTree(bak.toString)
-        if (dfs.exists(cur) && !dfs.rename(cur, bak))
-          throw new java.io.IOException(s"failed to move shard aside: $cur -> $bak")
-        // a dirty shard with no surviving streams has no tmp dir: the
-        // rename-aside + backup drop below IS its deletion
-        if (dfs.exists(tmp) && !dfs.rename(tmp, cur))
-          throw new java.io.IOException(s"failed to move shard into place: $tmp -> $cur")
-        if (dfs.exists(bak)) rmTree(bak.toString)
-      }
-      if (hExists(tmpRoot)) rmTree(tmpRoot)
     }
+    if (hExists(tmpRoot)) rmTree(tmpRoot)
     // the persisted catalog covers every in-memory bound, so the sidecar
     // is now redundant — truncate it AFTER the swap (a crash in between
     // just replays already-covered lines, a no-op)
-    dfs.delete(hPath(hwmPath), false)
     dfs.delete(hPath(hwmSegDir), true)
     hwmBytes = 0L
     // only mark clean once the data is durably in place — a failed write
@@ -783,18 +723,9 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       // spark.cloneSession() (confs are per-clone; the store paths are
       // the shared state, not the session).
       val obs = org.apache.spark.sql.Observation()
-      val prevAqeW = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevPartsW = spark.conf.get("spark.sql.shuffle.partitions")
       Meter.tagged(spark.sparkContext, "append:write") {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(2, prevPartsW.toInt / 16).toString)
-        try DatapointStore.append(
-          toWrite.observe(obs, count(lit(1)).as("rows")), datapointsPath)
-        finally {
-          spark.conf.set("spark.sql.adaptive.enabled", prevAqeW)
-          spark.conf.set("spark.sql.shuffle.partitions", prevPartsW)
-        }
+        staticNarrow(DatapointStore.append(
+          toWrite.observe(obs, count(lit(1)).as("rows")), datapointsPath))
       }
       // `get` returns AFTER the write's query-end event, so a missing key
       // is not a race: it means empty-relation propagation pruned the
@@ -896,6 +827,14 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   }
 
   private def rmTree(p: String): Unit = DatapointStore.rmTree(dfs, hPath(p))
+
+  /** `body` planned statically (AQE off) on a 1/16 slice of the session's
+    * shuffle width, which stands in for AQE's coalescing: the scope of the
+    * append write and of the ladder's hwm-scan and fold. */
+  private def staticNarrow[T](body: => T): T = GraftSession.withConf(spark,
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> math.max(2,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt / 16).toString)(body)
 
   /** Derived streams live in two SHARED roots partitioned by stream_id
     * first (raw level and rollups): recomputing one stream deletes its two
@@ -1283,14 +1222,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     // the session with ad-hoc readers should run ladders on a cloned
     // session (SparkSession.cloneSession gives a separate conf over the
     // same shared state) if concurrent planning matters.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // a 1/16 slice of the session's shuffle width stands in for AQE's
-    // coalescing on the metadata-scale hwm aggregate
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.max(2, prevParts.toInt / 16).toString)
-    val folded = try {
+    val folded = staticNarrow {
       // ONE scan resolves every level's per-stream high-water marks (max
       // materialized bucket) up front — granularity is a partition column
       // and the union of active sets prunes stream_id, so this is one job
@@ -1330,9 +1262,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         RollupLadder.fold(store, plans, until.getTime / 1000L,
           spark.sparkContext.defaultParallelism).localCheckpoint(true)
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
 
     // the whole ladder's output lands in ONE write per root; derived

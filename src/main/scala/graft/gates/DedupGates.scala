@@ -4,6 +4,7 @@ package gates
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Near-duplicate gates (`dedup_*`): exact, MinHash, SimHash, n-gram,
@@ -28,9 +29,7 @@ object DedupGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, java.sql.Timestamp, String)]
       val name = s"dexact_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming
           .dedupExact(mem.toDF.toDF("doc_id", "ts", "text"))
           .writeStream.format("memory").queryName(name)
@@ -51,7 +50,7 @@ object DedupGates {
           mem.addData(rows) // full re-delivery
           q.processAllAvailable()
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).select("doc_id", "content_hash").orderBy("doc_id")
     },
       """WITH k AS (SELECT min(doc_id) AS doc_id, text FROM documents
@@ -248,9 +247,7 @@ object DedupGates {
         .map(r => (r.getLong(0), r.getString(1)))
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val src = mem.toDF.toDF("doc_id", "text")
         val q = graft.streaming.Streaming
           .dedupNear(src, s"$work/state", s"$work/out", threshold = 0.3)
@@ -263,7 +260,7 @@ object DedupGates {
           mem.addData(b3.toSeq); q.processAllAvailable()
           mem.addData(b3.toSeq); q.processAllAvailable() // re-sent data
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(s"$work/out").select("doc_id").orderBy("doc_id")
     },
       // streaming near-dedup survivors, recomputed batch-style: with

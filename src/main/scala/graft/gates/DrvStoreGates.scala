@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Granularity
 import graft.operators.{Derive, Percentiles}
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Derive-operator gates (`drv_*`: derivative, counter reset, EWMA, Holt,
@@ -666,9 +667,7 @@ object DrvStoreGates {
       // the replay uses few, large batches and a narrow shuffle; a real
       // deployment sizes its trigger the same way (batch work >> fixed
       // per-batch work)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = mem.toDF.toDF("k", "t", "v")
           .select(uuidOf(col("k")).as("stream_id"), col("t"), col("v"))
         // compactEvery exercises the selective leaf compaction inside the
@@ -688,7 +687,7 @@ object DrvStoreGates {
           // leave the store byte-identical
           mem.addData(b2); q.processAllAvailable()
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       val drv = ds.datapoints.where(col("granularity") === "seconds")
         .join(ds.streams.where(element_at(col("tags"), "drv").isNotNull)
           .select(col("stream_id"), element_at(col("tags"), "drv").as("name")),
@@ -807,9 +806,7 @@ object DrvStoreGates {
       val memR = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.ResetEvent]
       val name = s"cdrst_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming
           .counterDerivativeWithResets(memS.toDS(), memR.toDS(), Some(1000.0))
           .writeStream.format("memory").queryName(name)
@@ -843,7 +840,7 @@ object DrvStoreGates {
             lo = hi
           }
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).orderBy("stream_id", "t")
     },
       // the batch V4 reset-suppression core verbatim (union + running
@@ -873,9 +870,7 @@ object DrvStoreGates {
         .MemoryStream[graft.streaming.Streaming.ResetEvent]
       val name = s"cdrst_skew_${System.nanoTime()}"
       val sentinelKey = "zzz_wm_sentinel"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val ctr = counterStreams(s, dir).localCheckpoint(true)
         val rnd = new scala.util.Random(13)
         def jitter(tMs: Long) =
@@ -924,7 +919,7 @@ object DrvStoreGates {
             q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).where(col("stream_id") =!= sentinelKey)
         .orderBy("stream_id", "t")
     }, counterDerivV4StreamOracleSql),

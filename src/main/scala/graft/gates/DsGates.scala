@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.Granularity
 import graft.operators.{Downsample, FreqRollup, HistRollup, Percentiles}
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Datastream analytics gates (`ds_*`): per-stream aggregates, rollup
@@ -929,9 +930,7 @@ object DsGates {
       // 8 shards is plenty for the replay's state volume and quarters the
       // per-micro-batch state-store commit overhead (a real deployment
       // sizes this to its executor count)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming
           .downsample(mem.toDF.toDF("stream_id", "t", "v"), Granularity.Minutes)
           .writeStream.format("memory").queryName(name)
@@ -942,7 +941,7 @@ object DsGates {
           mem.addData(rows.toSeq)
           q.processAllAvailable()
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name)
         .select("stream_id", "t", "c", "s", "q", "l", "u", "m", "d",
           "t_first", "t_last", "t_mean")
@@ -977,9 +976,7 @@ object DsGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.Point]
       val name = s"burst_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming.burstinessStats(mem.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
@@ -991,7 +988,7 @@ object DsGates {
             mem.addData(b.toSeq); q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name)
         .groupBy("stream_id")
         .agg(max(struct(col("total_events"), col("n_minutes"),
@@ -1030,9 +1027,7 @@ object DsGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, java.sql.Timestamp, Double)]
       val name = s"sess_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming
           .sessionize(mem.toDF.toDF("stream_id", "t", "v"), "30 minutes")
           .writeStream.format("memory").queryName(name)
@@ -1043,7 +1038,7 @@ object DsGates {
           mem.addData(rows.toSeq)
           q.processAllAvailable()
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name)
         .select("stream_id", "sess_start", "sess_end", "n_events", "v_sum")
         .orderBy("stream_id", "sess_start")
@@ -1082,9 +1077,7 @@ object DsGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.Point]
       val name = s"gapf_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming.gapFillHours(mem.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
@@ -1101,7 +1094,7 @@ object DsGates {
             mem.addData(b.toSeq); q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).orderBy("stream_id", "hr")
     },
       // the batch gap-fill SQL with an END-EXCLUSIVE grid (range(h0, h1)):
@@ -1133,19 +1126,19 @@ object DsGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.Point]
       val name = s"down_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val rows = pointStreams(s, dir).orderBy("t", "stream_id").collect()
-        .map(r => graft.streaming.Streaming.Point(
-          r.getString(0), r.getTimestamp(1), r.getDouble(2)))
-      try {
+      val rows = GraftSession.withConf(s,
+          "spark.sql.shuffle.partitions" -> "8") {
+        val pts = pointStreams(s, dir).orderBy("t", "stream_id").collect()
+          .map(r => graft.streaming.Streaming.Point(
+            r.getString(0), r.getTimestamp(1), r.getDouble(2)))
         val q = graft.streaming.Streaming.downtime(mem.toDS(), 3600L)
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
-        try rows.grouped(rows.length / 3 + 1).foreach { b =>
+        try pts.grouped(pts.length / 3 + 1).foreach { b =>
           mem.addData(b.toSeq); q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        pts
+      }
       val universe = rows.map(_.stream_id).distinct.toSeq.toDF("stream_id")
       val agg = s.table(name).groupBy("stream_id")
         .agg(count(lit(1)).as("n"), max("outage_sec").as("mx"),
@@ -1177,9 +1170,7 @@ object DsGates {
       val memR = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, java.sql.Timestamp, Double)]
       val name = s"sjoin_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val joined = graft.streaming.Streaming.intervalJoin(
           memL.toDF.toDF("stream_id", "t", "v"),
           memR.toDF.toDF("stream_id", "rt", "rv"),
@@ -1197,7 +1188,7 @@ object DsGates {
           memR.addData(side("purchase").toSeq)
           q.processAllAvailable()
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).orderBy("stream_id", "t", "rt", "v", "rv")
     },
       // the batch interval join the single-batch streaming replay must

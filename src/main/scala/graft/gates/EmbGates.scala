@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.obs.Meter
 import graft.operators.{Dedup, Similarity}
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Embedding gates (`emb_*`): exact and approximate nearest neighbours
@@ -326,9 +327,7 @@ object EmbGates {
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Double])]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val src = mem.toDF.toDF("vec_id", "emb")
         val q = graft.streaming.Streaming
           .semDedupStream(src, cents, s"$work/state", s"$work/out", 0.95)
@@ -341,7 +340,7 @@ object EmbGates {
           mem.addData(b3.toSeq); q.processAllAvailable()
           mem.addData(b3.toSeq); q.processAllAvailable() // re-sent data
         } finally q.stop() // never leak a running query into later queries
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       // re-sent rows duplicate their vec_ids in the decision log (new
       // batch_id, all marked dup): keep each vector's FIRST decision
       s.read.parquet(s"$work/out")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graphs, Retrieval, Similarity}
+import graft.obs.GraftSession
 
 /** Shared gate fixtures: the table readers, the events-as-streams
   * builders, the MemoryStream replay harness, the per-JVM memo maps and
@@ -139,19 +140,17 @@ object Fixtures {
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[graft.streaming.Streaming.Point]
     val name = s"replay_${System.nanoTime()}"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val rows = input.select("stream_id", "t", "v")
-      .orderBy("t", "stream_id").collect()
-      .map(r => graft.streaming.Streaming.Point(
-        r.getString(0), r.getTimestamp(1), r.getDouble(2)))
-    try {
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      val rows = input.select("stream_id", "t", "v")
+        .orderBy("t", "stream_id").collect()
+        .map(r => graft.streaming.Streaming.Point(
+          r.getString(0), r.getTimestamp(1), r.getDouble(2)))
       val q = op(mem.toDS()).toDF().writeStream.format("memory")
         .queryName(name).outputMode("append").start()
       try rows.grouped(rows.length / nBatches + 1).foreach { b =>
         mem.addData(b.toSeq); q.processAllAvailable()
       } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.table(name)
   }
 
@@ -177,26 +176,24 @@ object Fixtures {
       .MemoryStream[graft.streaming.Streaming.Point]
     val name = s"replay_skew_${System.nanoTime()}"
     val sentinelKey = "zzz_wm_sentinel"
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val rnd = new scala.util.Random(7)
-    val rows = input.select("stream_id", "t", "v")
-      .orderBy("t", "stream_id").collect()
-      .map(r => graft.streaming.Streaming.Point(
-        r.getString(0), r.getTimestamp(1), r.getDouble(2)))
-      // bounded-skew delivery order; safety: a point's arrival can trail
-      // the observed max event time by <= 2*skewSec, and the buffer's
-      // maxDelay exceeds that, so nothing is ever watermark-late
-      .map(p => (p, p.t.getTime + (rnd.nextInt(2 * skewSec + 1) - skewSec) * 1000L))
-      .sortBy { case (p, jt) => (jt, p.stream_id, p.t.getTime) }
-      .map(_._1)
-    val maxT = rows.map(_.t.getTime).max
-    val sentinels = Seq(
-      graft.streaming.Streaming.Point(sentinelKey,
-        new java.sql.Timestamp(maxT + 3600000L), 0.0),
-      graft.streaming.Streaming.Point(sentinelKey,
-        new java.sql.Timestamp(maxT + 7200000L), 1.0))
-    try {
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+      val rnd = new scala.util.Random(7)
+      val rows = input.select("stream_id", "t", "v")
+        .orderBy("t", "stream_id").collect()
+        .map(r => graft.streaming.Streaming.Point(
+          r.getString(0), r.getTimestamp(1), r.getDouble(2)))
+        // bounded-skew delivery order; safety: a point's arrival can trail
+        // the observed max event time by <= 2*skewSec, and the buffer's
+        // maxDelay exceeds that, so nothing is ever watermark-late
+        .map(p => (p, p.t.getTime + (rnd.nextInt(2 * skewSec + 1) - skewSec) * 1000L))
+        .sortBy { case (p, jt) => (jt, p.stream_id, p.t.getTime) }
+        .map(_._1)
+      val maxT = rows.map(_.t.getTime).max
+      val sentinels = Seq(
+        graft.streaming.Streaming.Point(sentinelKey,
+          new java.sql.Timestamp(maxT + 3600000L), 0.0),
+        graft.streaming.Streaming.Point(sentinelKey,
+          new java.sql.Timestamp(maxT + 7200000L), 1.0))
       val q = op(mem.toDS())
         .toDF().writeStream.format("memory")
         .queryName(name).outputMode("append").start()
@@ -206,7 +203,7 @@ object Fixtures {
         }
         sentinels.foreach { p => mem.addData(Seq(p)); q.processAllAvailable() }
       } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     s.table(name).where(col("stream_id") =!= sentinelKey)
   }
 

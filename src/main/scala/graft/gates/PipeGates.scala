@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Dataset-assembly pipeline gates (`pipe_*`): splits, sampling, redaction,
@@ -368,9 +369,7 @@ object PipeGates {
         .map(r => (r.getLong(0), r.getString(1)))
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val src = mem.toDF.toDF("doc_id", "text")
         val q = graft.streaming.Streaming
           .winnowContaminationStream(src, docs.where(col("doc_id") < 5),
@@ -383,7 +382,7 @@ object PipeGates {
             mem.addData(bd.toSeq); q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(s"$work/out")
         .select("doc_id", "n_shared_fps", "n_eval_docs")
         .orderBy(desc("n_shared_fps"), col("doc_id"))

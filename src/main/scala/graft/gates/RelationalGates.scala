@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Percentiles
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Relational gates (`q*`): the TPC-H queries and the SQL surface over
@@ -1225,9 +1226,7 @@ object RelationalGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.KeyDay]
       val name = s"decay_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming.decayPopularity(mem.toDS())
           .writeStream.format("memory").queryName(name)
           .outputMode("append").start()
@@ -1243,7 +1242,7 @@ object RelationalGates {
             mem.addData(b.toSeq); q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       val fin = s.table(name)
         .groupBy("key")
         .agg(max(struct(col("version"), col("packed"))).as("snap"))

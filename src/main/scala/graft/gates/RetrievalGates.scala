@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Retrieval, Similarity}
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Retrieval and index gates (`q_*`): BM25, query-likelihood, phrase,
@@ -1230,9 +1231,7 @@ object RetrievalGates {
       val b2 = cdcRows(VersionedTable.changes(s, work, schema, Seq("k"), 1L, 2L))
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String, Option[Long], Option[Long])]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val src = mem.toDF
           .toDF("k", "change_op", "before_cents", "after_cents")
         val q = graft.streaming.Streaming
@@ -1244,7 +1243,7 @@ object RetrievalGates {
           mem.addData(b1.toSeq); q.processAllAvailable()
           mem.addData(b2.toSeq); q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       Mutations.readMv(s, mvRoot).orderBy("bucket")
     }, mvOracleSql),
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextStats
+import graft.obs.GraftSession
 import Fixtures._
 
 /** Text statistics gates (`text_*`): token distributions, language models,
@@ -482,9 +483,7 @@ object TextGates {
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.streaming.Streaming.TokenRow]
       val name = s"kmv_replay_${System.nanoTime()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = graft.streaming.Streaming.kmvDistinct(mem.toDS(), 16)
           .toDF().writeStream.format("memory").queryName(name)
           .outputMode("append").start()
@@ -502,7 +501,7 @@ object TextGates {
             shuffled.take(300)) // cross-batch duplicate re-delivery
             .foreach { b => mem.addData(b); q.processAllAvailable() }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.table(name).groupBy("g")
         .agg(min(struct(col("kth_hash"), col("est_floor"))).as("s"))
         .select(col("g").as("source"), col("s.kth_hash").as("kth_hash"),
@@ -736,9 +735,7 @@ object TextGates {
         .map(r => (r.getLong(0), r.getString(1)))
       val mem = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)]
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
         val src = mem.toDF.toDF("doc_id", "text")
         val q = graft.streaming.Streaming
           .ngramNoveltyStream(src, s"$work/state", s"$work/out")
@@ -750,7 +747,7 @@ object TextGates {
             mem.addData(bd.toSeq); q.processAllAvailable()
           }
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       s.read.parquet(s"$work/out")
         .select("doc_id", "n_grams", "n_novel", "novelty_bp")
         .orderBy("doc_id")

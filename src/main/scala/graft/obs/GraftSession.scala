@@ -26,4 +26,21 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** `body` run with each `k -> v` set on `spark`'s session conf. Each key
+    * gets back the value it had before, or is unset again if it had none,
+    * also when `body` throws — as [[Meter.tagged]] does for job
+    * descriptions. The pairs are evaluated before any of them is set. */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll // the explicitly set keys, not the defaults
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    try {
+      kvs.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }

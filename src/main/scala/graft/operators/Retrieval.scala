@@ -279,8 +279,8 @@ object Retrieval {
       graft.operators.IndexGen.checkLease(fs, root, lease)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/positions"), true)
     }
-    // the legacy-index case: appending to an index that predates the
-    // stats sidecar — delta-maintenance has no base, so recount after
+    // a populated index whose stats marker is missing (lost or deleted):
+    // delta-maintenance has no base, so recount after
     val mustRecount = !overwrite && readStats(fs, root).isEmpty &&
       fs.exists(new org.apache.hadoop.fs.Path(s"$root/doclens"))
     // durable append intent BEFORE data lands (data-first would leave
@@ -313,8 +313,6 @@ object Retrieval {
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(nBuckets.toLong)))
       .repartition(col("bucket"))
       .write.mode(mode).partitionBy("bucket").parquet(s"$root/postings")
-    // witness the dl-bearing layout so heal never footer-probes this root
-    fs.create(new org.apache.hadoop.fs.Path(root, DlV2Marker), true).close()
     // a missing Observation key means AQE pruned the empty subtree ⇒ 0
     val got = obs.get
     val dn = got.get("dn").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -416,7 +414,7 @@ object Retrieval {
   }
 
   /** Full recount from doclens + fresh publish — the crash-recovery /
-    * legacy-migration lane only, never the serving path.
+    * missing-marker lane only, never the serving path.
     */
   private def recountStats(spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
@@ -446,12 +444,6 @@ object Retrieval {
   private val PosStageDir = ".bm25_posstage"
   private val PendingTmp = ".bm25_pending_tmp"
   private val PendingDelete = "_bm25_pending_delete"
-  // whole-tree swap states for the pre-r13 postings dl migration
-  private val DlMigStage = ".bm25_dlmig_stage"
-  private val DlMigOld = ".bm25_dlmig_old"
-  // zero-byte witness that the postings rows carry the denormalized dl
-  // column — lets heal skip the per-index footer probe after the first
-  private val DlV2Marker = "_bm25_dlv2"
 
   /** Delete documents from a [[buildIndex]] index — the takedown /
     * dedup-purge lane that completes the append-only lifecycle, same
@@ -547,7 +539,7 @@ object Retrieval {
       dlTouched, lease = lease.map(root -> _))
     stagedBucketDelete(spark, fs, s"$root/positions", s"$root/$PosStageDir",
       ids, lease = lease.map(root -> _)) // no-op on non-positional indexes
-    if (stats.isEmpty) recountStats(spark, fs, root) // pre-sidecar index
+    if (stats.isEmpty) recountStats(spark, fs, root) // missing marker
     else cleanupStats(fs, root) // swaps published — retire the old gen
     fs.delete(marker, true)
   }
@@ -686,8 +678,6 @@ object Retrieval {
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$newRoot/postings")
-    retrievalFs(spark, newRoot).create(new org.apache.hadoop.fs.Path(
-      newRoot, DlV2Marker), true).close()
     // (n_docs, sum_dl) piggybacked on the rewrite job it already runs
     val obs = org.apache.spark.sql.Observation()
     maskDocTombstones(spark, oldRoot,
@@ -774,9 +764,6 @@ object Retrieval {
     // Serve the published state untouched; heal runs only on lease-free
     // or expired-lease roots (begin() breaks expired ones).
     if (graft.operators.IndexGen.leaseHeld(fs, root)) return
-    // interrupted postings-dl migration first: its old/stage states must
-    // resolve before anything reads or rewrites the postings tree
-    healDlMigration(fs, root)
     // leftover stage/pending-tmp trees = pre-publish state of an
     // interrupted batched delete — dropping them rolls that phase back
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/$StageDir"), true)
@@ -797,18 +784,13 @@ object Retrieval {
     healDir(new org.apache.hadoop.fs.Path(s"$root/postings"))
     healDir(new org.apache.hadoop.fs.Path(s"$root/doclens"))
     healDir(new org.apache.hadoop.fs.Path(s"$root/positions"))
-    // pre-r13 postings rows carry no dl column — the pinned-schema
-    // serving read would return NULL dl and silently garbage every
-    // score. One-time whole-tree self-migration, witnessed by a marker
-    // so the steady-state cost is one fs.exists
-    ensurePostingsDl(spark, fs, root)
     if (fs.exists(new org.apache.hadoop.fs.Path(root, PendingDelete)))
       runPendingDelete(spark, root)
     // stats sidecar heal (after any pending delete completed, so the
     // recount reflects final state): a durable append intent means the
     // sidecar may disagree with the trees — one full doclens recount
-    // republishes it; a missing marker on a populated index is a
-    // pre-sidecar layout self-migrating on first read
+    // republishes it, as it does for a populated index whose marker is
+    // missing
     val names = rootNames(fs, root)
     val appendPendings = names.filter(_.startsWith(AppendPending))
     if (appendPendings.nonEmpty ||
@@ -818,80 +800,6 @@ object Retrieval {
       appendPendings.foreach(n =>
         fs.delete(new org.apache.hadoop.fs.Path(root, n), false))
     } else cleanupStats(fs, root) // interrupted rotation: keep the max
-  }
-
-  /** Resolve an interrupted [[migratePostingsDl]] whole-tree swap.
-    * States: old + no postings ⇒ the crash fell between retiring the
-    * live tree and publishing the stage, and the stage was written
-    * COMPLETE before the retire — publish it (or roll the old tree back
-    * if the stage is somehow gone); old + postings ⇒ published — drop
-    * leftovers; stage alone ⇒ pre-publish (possibly incomplete) — drop
-    * it, the migration re-detects and re-runs.
-    */
-  private def healDlMigration(fs: org.apache.hadoop.fs.FileSystem,
-      root: String): Unit = {
-    val post = new org.apache.hadoop.fs.Path(s"$root/postings")
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$DlMigStage")
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DlMigOld")
-    if (fs.exists(old)) {
-      if (!fs.exists(post)) {
-        if (fs.exists(stage)) {
-          if (!fs.rename(stage, post))
-            throw new java.io.IOException(s"dl migration: cannot publish")
-          fs.delete(old, true)
-        } else {
-          if (!fs.rename(old, post)) // defensive rollback
-            throw new java.io.IOException(s"dl migration: cannot roll back")
-        }
-      } else { fs.delete(old, true); fs.delete(stage, true) }
-    } else fs.delete(stage, true)
-  }
-
-  /** One-time self-migration gate: indexes whose postings predate the
-    * dl denormalization (pre-r13 layouts — including ones whose stats
-    * sidecar an earlier heal already created) rewrite the postings tree
-    * once with dl joined in from doclens; everything after the witness
-    * marker exists is one fs.exists per heal.
-    */
-  private def ensurePostingsDl(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    val post = new org.apache.hadoop.fs.Path(s"$root/postings")
-    if (!fs.exists(post)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(root, DlV2Marker))) return
-    if (!spark.read.parquet(post.toString)
-        .schema.fieldNames.contains("dl"))
-      migratePostingsDl(spark, fs, root)
-    fs.create(new org.apache.hadoop.fs.Path(root, DlV2Marker), true).close()
-  }
-
-  /** Rewrite the whole postings tree with dl joined in from doclens,
-    * under the whole-tree swap heal states of [[healDlMigration]]
-    * (stage written complete → live tree retired → stage published) so
-    * a MIXED tree — some buckets migrated, some not, poisoning the
-    * pinned-schema read — can never exist. Docs mid-deletion whose
-    * doclens witness rows are already swapped away drop out via the
-    * inner join; the pending delete that owns them removes their
-    * postings rows right after.
-    */
-  private def migratePostingsDl(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: String): Unit = {
-    val postDir = s"$root/postings"
-    val dl = spark.read.parquet(s"$root/doclens").select("doc_id", "dl")
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$DlMigStage")
-    spark.read.parquet(postDir)
-      .select(col("doc_id"), col("tok"), col("tf"),
-        col("bucket").cast("long").as("bucket"))
-      .join(dl, "doc_id")
-      .select("doc_id", "tok", "tf", "dl", "bucket")
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    val post = new org.apache.hadoop.fs.Path(postDir)
-    val old = new org.apache.hadoop.fs.Path(s"$root/$DlMigOld")
-    if (!fs.rename(post, old))
-      throw new java.io.IOException(s"dl migration: cannot retire $post")
-    if (!fs.rename(stage, post))
-      throw new java.io.IOException(s"dl migration: cannot publish $stage")
-    fs.delete(old, true)
   }
 
   /** Per-bucket observability for a [[buildIndex]] index — the postings
@@ -1002,7 +910,7 @@ object Retrieval {
   }
 
   /** The stats sidecar's (n_docs, sum_dl) for a [[buildIndex]] index —
-    * heals first, so a crashed append/delete or a pre-sidecar layout
+    * heals first, so a crashed append/delete or a missing marker
     * resolves before the numbers are read. Zero jobs on the clean path.
     */
   def corpusStats(spark: org.apache.spark.sql.SparkSession,
@@ -1168,7 +1076,7 @@ object Retrieval {
     val df = postingsCk.groupBy("tok").agg(countDistinct("doc_id").as("df"))
     // (N, avgdl) from the sidecar marker — two numbers off a filename,
     // zero jobs (healIndex above guarantees the marker on any index
-    // with a doclens tree, including pre-sidecar layouts)
+    // with a doclens tree, including one whose marker went missing)
     val (n, sdl) = readStats(bfs, root)
       .map(s => (s._2, s._3)).getOrElse((0L, 0L))
     val avgdl = if (n > 0) sdl.toDouble / n else 0.0

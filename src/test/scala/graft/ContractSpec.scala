@@ -36,10 +36,12 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rows-only means the op is genuinely not SQL-expressible in DuckDB.
     // Since r5 the multimodal stub codec is md5-derived, so even mm_* are
     // oracled. The list is EMPTY since r11: emb_pca left in r10 via
-    // run-captured eigenvector literals (pcaOracle), and text_bpe_encode
-    // left in r11 the same way — the trained merge table rides into the
-    // oracle as literals and a chr(31)-framed replace chain replays the
-    // encode (bpeOracle); only the TRAINING argmax has no SQL mirror,
+    // run-captured eigenvector literals (its `Gate.captured` oracle in
+    // EmbGates), and text_bpe_encode left in r11 the same way — the
+    // trained merge table rides into the oracle as literals and a
+    // chr(31)-framed replace chain replays the encode (its
+    // `Gate.captured` oracle in TextGates); only the TRAINING argmax has
+    // no SQL mirror,
     // and the oracle doesn't need it once the table is literal. Growing
     // this list is a deliberate decision, not a silent default. Verify
     // dumps oracle_sql.json after the queries run, which this test
@@ -61,17 +63,17 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("registry construction rejects duplicate keys (no silent last-wins)") {
-    // Both registries build via distinctToMap from a Seq of pairs — a Map
-    // literal with a repeated key silently last-wins and LOSES a gate (the
-    // r14 mm_frames collision; caught then only by a schema mismatch).
-    // Inject a duplicate and require the throw.
+    // The one gate list builds via distinctToMap from a Seq of pairs — a
+    // Map literal with a repeated key silently last-wins and LOSES a gate
+    // (the r14 mm_frames collision; caught then only by a schema
+    // mismatch). Inject a duplicate and require the throw.
     val ex = intercept[IllegalArgumentException] {
       SparkEntry.distinctToMap("probe",
         Seq("a" -> 1, "b" -> 2, "a" -> 3))
     }
     assert(ex.getMessage.contains("duplicate probe keys: a"))
-    // And the real registries pass the same gate at their full size: the
-    // map cardinality must equal the backing Seq cardinality (each map
+    // And the real gate list passes the same check at its full size: the
+    // map cardinality must equal the backing Seq cardinality (the map
     // materializes through distinctToMap, so reaching here means no dups).
     assert(SparkEntry.queries.size >= 351,
       s"queries registry shrank: ${SparkEntry.queries.size}")
@@ -130,6 +132,30 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tasks = stages.toSeq.map(s => tracker.getStageInfo(s).fold(0)(_.numCompletedTasks))
     assert(r.jobs == jobs.size && r.tasks == tasks.sum,
       s"meter ${r.jobs} jobs/${r.tasks} tasks vs Spark ${jobs.size}/${tasks.sum}: ${r.sites}")
+  }
+
+  test("GraftSession.withConf restores a set key, unsets an unset key, also when the body throws") {
+    import graft.obs.GraftSession
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val before = spark.conf.get(set)
+    spark.conf.unset(unset)
+    def check(): Unit = {
+      assert(spark.conf.get(set) == before)
+      assert(!spark.conf.getAll.contains(unset), spark.conf.getOption(unset))
+    }
+    val seen = GraftSession.withConf(spark, set -> "3", unset -> "2MB") {
+      (spark.conf.get(set), spark.conf.get(unset))
+    }
+    assert(seen == ("3", "2MB"))
+    check()
+    intercept[IllegalStateException] {
+      GraftSession.withConf(spark, set -> "5", unset -> "4MB") {
+        assert(spark.conf.get(set) == "5")
+        throw new IllegalStateException("body fails")
+      }
+    }
+    check()
   }
 
   test("GraftFunctions.register is idempotent: a repeat replaces no function and adds no rule; the extension injects the same table") {

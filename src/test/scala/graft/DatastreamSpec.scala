@@ -1377,8 +1377,15 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("stream_id", "t", "v"))
     ds.appendMultiple(Seq((id, ts("2024-01-02 00:00:00"), 2.0))
       .toDF("stream_id", "t", "v"))
-    // simulate a crash mid-sidecar-append: torn partial JSON tail
-    val w = new java.io.FileWriter(s"$root/streams.hwm", true)
+    // simulate a crash mid-segment-write: a torn partial JSON line in a
+    // segment named to sort after the real ones ('~' > any digit)
+    val segDir = new java.io.File(s"$root/streams.hwm.d")
+    val real = Option(segDir.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("seg-"))
+    assert(real.nonEmpty, "the second append must leave a sidecar segment")
+    val torn = "seg-~torn"
+    assert(real.forall(_ < torn), "the torn segment must replay last")
+    val w = new java.io.FileWriter(new java.io.File(segDir, torn))
     try w.write(s"""{"id":"$id","lo":17""") finally w.close()
     val d2 = new Datastream(spark, root)
     intercept[InvalidTimestamp] { d2.append(id, 9.0, ts("2024-01-01 12:00:00")) }
@@ -1438,41 +1445,6 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[InvalidTimestamp] {
       d2.append(ids.head, 0.0, ts("2024-01-01 00:10:00"))
     }
-  }
-
-  test("pre-shard flat catalog loads and migrates on next flush") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft-shard-mig").toString
-    val ds = new Datastream(spark, root)
-    val a = ds.ensureStream(Map("name" -> "mig-a"))
-    val b = ds.ensureStream(Map("name" -> "mig-b"))
-    ds.flush()
-    // rewrite the store as the PRE-SHARD layout: one flat parquet dir
-    val streamsDir = new java.io.File(s"$root/streams")
-    val flat = spark.read.parquet(
-      Option(streamsDir.listFiles()).get.filter(f =>
-        f.isDirectory && f.getName.startsWith("shard=")).map(_.getPath): _*)
-    val tmp = Files.createTempDirectory("graft-flat").toString
-    flat.coalesce(1).write.mode("overwrite").parquet(tmp)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    rm(streamsDir)
-    assert(new java.io.File(tmp).renameTo(streamsDir))
-    // loads transparently...
-    val d2 = new Datastream(spark, root)
-    assert(d2.streams.count() == 2)
-    assert(d2.getTags(a) == Map("name" -> "mig-a"))
-    // ...and the next flush migrates to shards (legacy files gone)
-    d2.updateTags(b, Map("post" -> "migration"))
-    assert(Option(streamsDir.listFiles()).get
-      .exists(f => f.isDirectory && f.getName.startsWith("shard=")))
-    assert(!Option(streamsDir.listFiles()).get.exists(_.isFile),
-      "flat-layout files must be cleaned up after migration")
-    val d3 = new Datastream(spark, root)
-    assert(d3.streams.count() == 2)
-    assert(d3.getTags(b) == Map("name" -> "mig-b", "post" -> "migration"))
   }
 
   test("crash between shard rename-aside and swap-in falls back per shard") {

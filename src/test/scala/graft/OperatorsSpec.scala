@@ -3792,11 +3792,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!fs.listStatus(new org.apache.hadoop.fs.Path(root))
       .exists(_.getPath.getName.startsWith("_bm25_append_pending_")),
       "heal must clear the resolved append intent")
-    // legacy pre-sidecar index: no marker at all → heal self-migrates
+    // a lost or deleted marker: no marker at all → heal recounts
     fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath)
       .filter(_.getName.startsWith("_bm25_stats_"))
       .foreach(p => fs.delete(p, false))
-    pin("legacy self-migration")
+    pin("missing marker")
   }
 
   test("ivf rebuild: retrained v2 index search == ad-hoc exact-Lloyd search") {
@@ -4177,64 +4177,6 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("doc_id") === victim).count() == 0,
       "the crashed delete must have completed, not been lost")
     assert(recount._1 == 79L, s"79 docs expected, got $recount")
-  }
-
-  test("pre-dl postings layout self-migrates on heal: search scores exact, rebuild works") {
-    import spark.implicits._
-    val R = graft.operators.Retrieval
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").where(col("doc_id") < 60)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bm25-dlmig").toString + "/idx"
-    R.buildIndex(d, root, nBuckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // devolve to the pre-r13 layout: postings without the dl column,
-    // no stats marker, no dl witness
-    val legacy = spark.read.parquet(s"$root/postings")
-      .select(col("doc_id"), col("tok"), col("tf"),
-        col("bucket").cast("long").as("bucket"))
-      .localCheckpoint(true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/postings"), true)
-    legacy.write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$root/postings")
-    fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath)
-      .filter(n => n.getName.startsWith("_bm25_stats_") ||
-        n.getName == "_bm25_dlv2")
-      .foreach(p => fs.delete(p, false))
-    // first read self-migrates: scores must equal the direct lane
-    val q = d.where(col("doc_id") < 3)
-      .select(col("doc_id").as("qid"), col("text").as("qtext"))
-    val direct = R.bm25TopK(d, q, 5)
-      .select("qid", "doc_id", "score", "rnk")
-      .collect().map(_.toSeq).toSet
-    val indexed = R.bm25TopKIndexed(spark, root, q, 5, nBuckets = 4)
-      .select("qid", "doc_id", "score", "rnk")
-      .collect().map(_.toSeq).toSet
-    assert(indexed == direct,
-      "migrated legacy index must score exactly like the direct lane")
-    assert(spark.read.parquet(s"$root/postings")
-      .schema.fieldNames.contains("dl"), "postings must carry dl now")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(root, "_bm25_dlv2")))
-    // rebuild from the migrated index (pre-r14 its dl projection threw)
-    val v2 = java.nio.file.Files
-      .createTempDirectory("graft-bm25-dlmig-v2").toString + "/idx"
-    R.rebuildIndex(spark, root, v2, nBuckets = 8)
-    assert(R.bm25TopKIndexed(spark, v2, q, 5, nBuckets = 8)
-      .select("qid", "doc_id", "score", "rnk")
-      .collect().map(_.toSeq).toSet == direct)
-    // interrupted-migration heal states: old tree + no postings ⇒ the
-    // complete stage publishes (never data loss)
-    val post = new org.apache.hadoop.fs.Path(s"$root/postings")
-    assert(fs.rename(post,
-      new org.apache.hadoop.fs.Path(s"$root/.bm25_dlmig_old")))
-    spark.read.parquet(s"$root/.bm25_dlmig_old")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$root/.bm25_dlmig_stage")
-    assert(R.bm25TopKIndexed(spark, root, q, 5, nBuckets = 4)
-      .select("qid", "doc_id", "score", "rnk")
-      .collect().map(_.toSeq).toSet == direct,
-      "heal must publish the complete stage after a mid-swap crash")
   }
 
   test("non-positional overwrite clears a stale positions tree") {
