@@ -82,18 +82,16 @@ object Bench {
     // Primary stdout metric is executor CPU seconds (load-robust; see the
     // listener comment); wall total + task counts ride along as secondary
     // fields. The per-query map reports CPU seconds for the same reason.
-    // r17 (verdict item 2, measurement-contract fix — documented in
-    // OPTIMIZATION_r17.md): a per-query "wall" map over the SAME kept
-    // queries now rides along, because the driver's low-core scaling
-    // sweep divided CPU by CPU — core-count-invariant by construction,
-    // blind to serial/driver-bound queries; wall(c8)/wall(c32) is the
-    // currency that actually measures parallelism. The two maps split
-    // the same stdout budget (the line must survive a 2000-char tail
-    // parse), so n_reported drops from ~58 to ~28 of 362 — a truncation
-    // artifact, not removals (r16 verdict); the FULL per-query
-    // wall/cpu/jobs/tasks maps are in bench_full.json ("full_metrics").
-    // tail is sized with a worst-case n_reported width so the room
-    // budget stays valid once the real count is substituted in
+    // A per-query wall rides along too — wall(c8)/wall(c32) is the
+    // parallelism currency a CPU/CPU ratio cannot show. It is packed as
+    // a list in the order of the "queries" keys, 1 decimal, so a query
+    // costs its name once: ~48 of 362 queries fit a 1900-char line
+    // (line + sbt's ~80-char "[success] Total time" line must survive a
+    // 2000-char tail parse), slowest CPU first.
+    // The FULL per-query wall/cpu/jobs/tasks maps are in bench_full.json
+    // ("full_metrics"). The tail is sized with a worst-case n_reported
+    // width so the room budget stays valid once the real count is
+    // substituted in.
     def tailFor(nReported: Any) =
       s""""n_queries":${results.size},"n_reported":$nReported,""" +
         s""""queries_truncated":${nReported != results.size},""" +
@@ -102,13 +100,14 @@ object Bench {
         s""""full_metrics":"bench_full.json","sf":"$sfDir"}"""
     val head = s"""{"metric":"executor_cpu_total","value":${Json.num(cpuTotal)},""" +
       s""""unit":"sec","queries":{"""
-    val wallGlue = """},"wall":{"""
-    val closeGlue = "},"
+    val wallGlue = """},"wall":["""
+    val closeGlue = "],"
     val wallByName = results.toMap
-    var room = 1750 - head.length - wallGlue.length - closeGlue.length -
+    var room = 1900 - head.length - wallGlue.length - closeGlue.length -
       tailFor(9999).length
     val kept = cpuResults.sortBy(-_._2).iterator.map { case (k, v) =>
-      ("\"" + k + "\":" + Json.num(v), "\"" + k + "\":" + Json.num(wallByName(k)))
+      ("\"" + k + "\":" + Json.num(v),
+        String.format(java.util.Locale.ROOT, "%.1f", Double.box(wallByName(k))))
     }.takeWhile { case (c, w) => room -= c.length + w.length + 2; room >= 0 }
       .toSeq
     println(head + kept.map(_._1).mkString(",") + wallGlue +

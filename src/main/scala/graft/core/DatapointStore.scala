@@ -55,6 +55,9 @@ object DatapointStore {
     * when one exists (it carries the deployment's fs.* settings), a default
     * Configuration otherwise (driver-side tools before a session starts).
     */
+  private[graft] def fsFor(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private[graft] def fsFor(path: String): FileSystem = {
     val conf = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
@@ -104,10 +107,11 @@ object DatapointStore {
     * _SUCCESS after an empty write) read as zero rows instead of failing
     * schema inference.
     *
-    * The root's crash recovery runs first, so a stranded backup is swung
-    * back before the existence check; directories that do not exist (a
-    * granularity never materialized) are skipped, and a read of none is
-    * [[empty]] rather than "Path does not exist".
+    * The root's [[DirSwap.heal]] runs first, so a leaf stranded in the
+    * backup by a crashed publish is back before the existence check
+    * (schema-pinned reads would otherwise serve a hole); directories
+    * that do not exist (a granularity never materialized) are skipped,
+    * and a read of none is [[empty]] rather than "Path does not exist".
     */
   def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
     scan(spark, root, dirs).getOrElse(empty(spark))
@@ -115,26 +119,13 @@ object DatapointStore {
   /** [[read]], or None when none of `dirs` exists. */
   private[graft] def scan(spark: SparkSession, root: String,
       dirs: Seq[String]): Option[DataFrame] = {
-    recoverIfNeeded(root)
-    recoverParts(root)
     val fs = fsFor(root)
+    // heal only: a stage tree may belong to a compaction about to publish
+    DirSwap.heal(fs, new Path(root))
     val present = dirs.distinct.filter(d => fs.exists(new Path(d)))
     if (present.isEmpty) None
     else Some(spark.read.option("basePath", root).schema(schema)
       .parquet(present: _*))
-  }
-
-  /** Read-side half of replace()'s crash safety: a crash between the two
-    * renames leaves only `<path>.graft-old`. Because reads are
-    * schema-pinned they would otherwise silently see an EMPTY table (not
-    * an error), so every read first swings a stranded backup into place.
-    */
-  def recoverIfNeeded(path: String): Unit = {
-    val fs = fsFor(path)
-    val dst = new Path(path)
-    val bak = new Path(s"$path.graft-old")
-    if (!fs.exists(dst) && fs.exists(bak) && !fs.rename(bak, dst))
-      throw new java.io.IOException(s"failed to recover $bak -> $path")
   }
 
   def append(df: DataFrame, path: String): Unit =
@@ -169,7 +160,7 @@ object DatapointStore {
   /** Recursive delete that REFUSES to fail silently: a delete that leaves
     * files behind (held handle, permissions) would make a partition or
     * backup half-disappear with no error — subsequent reads would return a
-    * silently partial table. Shared by replace(), expire() and Datastream.
+    * silently partial table. Shared by [[DirSwap]], expire() and Datastream.
     */
   private[graft] def rmTree(fs: FileSystem, p: Path): Unit =
     if (!fs.delete(p, true) && fs.exists(p))
@@ -239,33 +230,26 @@ object DatapointStore {
     * size. This rewrites only leaves holding >= `minFiles` parquet files
     * — cost proportional to fragmentation, never an O(store) rewrite —
     * as ONE Spark job for all selected leaves (single basePath scan,
-    * repartition on the partition keys → one sorted file per leaf),
-    * followed by driver-side renames. The OPTIMIZE step a 100 TB
-    * deployment schedules off-peak.
+    * repartition on the partition keys → one sorted file per leaf) into
+    * the root's stage, then [[DirSwap.publish]]es the staged leaves: a
+    * crash at any point leaves every leaf old or new, healed by the next
+    * read.
     *
-    * Crash safety mirrors replace(), per leaf: the new file lands in a
-    * tmp tree outside the root, the live leaf swings aside into a backup
-    * tree, tmp swings in, backup dropped. A crash in any window leaves
-    * either the old leaf, or a backup that [[recoverParts]] (invoked by
-    * every [[read]]) restores — reads never see a hole or a double.
-    */
-  /** `lenient=true` (the in-loop streaming-ingest cadence) downgrades a
+    * `lenient=true` (the in-loop streaming-ingest cadence) downgrades a
     * per-leaf rename failure (held handle on some filesystems) from an
-    * exception to a skipped leaf: compaction is maintenance, and failing
-    * the ingest micro-batch over it would trade data progress for file
-    * hygiene. The skipped leaf is left either intact or as a backup that
-    * [[recoverParts]] (run by every read and the next compact) restores —
-    * never a hole. The explicit off-peak maintenance call keeps the
-    * throw, so operators still see persistent filesystem trouble.
+    * exception to a skipped leaf, put back at once: compaction is
+    * maintenance, and failing the ingest micro-batch over it would trade
+    * data progress for file hygiene. The explicit off-peak maintenance
+    * call keeps the throw, so operators still see persistent filesystem
+    * trouble.
     */
   def compact(spark: SparkSession, path: String, partCols: Seq[String],
       minFiles: Int = 2, lenient: Boolean = false): Unit = {
     val fs = fsFor(path)
     val root = new Path(path)
     if (!fs.exists(root)) return
-    recoverParts(path)
-    val tmpRoot = new Path(s"$path.graft-parts-tmp")
-    if (fs.exists(tmpRoot)) rmTree(fs, tmpRoot) // stale from a mid-write crash
+    DirSwap.heal(fs, root)
+    DirSwap.dropStage(fs, root) // stale from a mid-write crash
     val frag = leaves(fs, root).filter(_._2 >= minFiles).map(_._1)
     if (frag.isEmpty) return
     // basePath keeps the partition columns; the pinned schema supplies
@@ -274,94 +258,35 @@ object DatapointStore {
       .parquet(frag.map(r => s"$path/$r"): _*)
     val sortCols =
       if (partCols.contains("stream_id")) Seq("t") else Seq("stream_id", "t")
+    val staged = DirSwap.stage(root)
     df.repartition(partCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(tmpRoot.toString)
-    val bakRoot = new Path(s"$path.graft-parts-bak")
-    leaves(fs, tmpRoot).map(_._1).foreach { rel =>
-      val live = new Path(s"$path/$rel")
-      val tmp = new Path(s"$tmpRoot/$rel")
-      val bak = new Path(s"$bakRoot/$rel")
-      fs.mkdirs(bak.getParent)
-      try {
-        if (fs.exists(live) && !fs.rename(live, bak))
-          throw new java.io.IOException(s"failed to move leaf aside: $live")
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"failed to move leaf in: $tmp -> $live")
-        if (fs.exists(bak)) rmTree(fs, bak)
-      } catch {
-        case e: java.io.IOException if lenient =>
-          // best effort to put the old leaf back immediately; if even that
-          // fails, recoverParts heals it at the next read
-          if (!fs.exists(live) && fs.exists(bak)) { fs.rename(bak, live); () }
-          System.err.println(
-            s"[graft] compact: skipping leaf $rel (${e.getMessage})")
-      }
-    }
-    try {
-      rmTree(fs, tmpRoot)
-      if (fs.exists(bakRoot)) {
-        // lenient skips can leave restored-backup leftovers; recoverParts
-        // both restores them and drops the backup tree. Strict mode only
-        // reaches here with every swap landed — plain cleanup.
-        if (lenient) recoverParts(path) else rmTree(fs, bakRoot)
-      }
-    } catch {
+      .parquet(staged.toString)
+    try DirSwap.publish(fs, root, leaves(fs, staged).map(_._1))
+    catch {
       case e: java.io.IOException if lenient =>
         System.err.println(
-          s"[graft] compact: deferred cleanup under $path (${e.getMessage})")
+          s"[graft] compact: skipped leaves under $path (${e.getMessage})")
     }
   }
 
-  /** Read-side half of [[compact]]'s crash safety: restore any leaf
-    * stranded in the backup tree (crash between swing-aside and swing-in
-    * — without this, schema-pinned reads would silently serve a HOLE, not
-    * an error); drop backups whose live leaf exists (crash after swing-in,
-    * where the live data is the newer compacted file). No-op (one exists()
-    * check) when no compaction ever crashed.
-    */
-  def recoverParts(path: String): Unit = {
-    val fs = fsFor(path)
-    val bakRoot = new Path(s"$path.graft-parts-bak")
-    if (!fs.exists(bakRoot)) return
-    leaves(fs, bakRoot).map(_._1).foreach { rel =>
-      val live = new Path(s"$path/$rel")
-      val bak = new Path(s"$bakRoot/$rel")
-      if (fs.exists(live)) rmTree(fs, bak)
-      else {
-        fs.mkdirs(live.getParent)
-        if (!fs.rename(bak, live))
-          throw new java.io.IOException(s"failed to recover leaf $bak")
-      }
-    }
-    rmTree(fs, bakRoot)
-  }
-
-  /** Replace the table contents with `df`, crash-safely: write tmp, rename
-    * the current table ASIDE (never delete-then-rename — a crash in that
-    * window loses the table), swap tmp in, then drop the backup. A crash
-    * mid-swap leaves either the old table or a recoverable `.graft-old`.
+  /** Replace the table contents with `df`, crash-safely: the rows land in
+    * the root's stage, then every leaf [[DirSwap.publish]]es — a leaf
+    * with no staged rows is retired. Each leaf reads wholly old or wholly
+    * new at every crash point.
     */
   def replace(df: DataFrame, path: String): Unit = {
-    val tmp = s"$path.graft-tmp"
+    val fs = fsFor(path)
+    val root = new Path(path)
+    DirSwap.heal(fs, root)
+    DirSwap.dropStage(fs, root)
+    val staged = DirSwap.stage(root)
     normalize(df).repartition(col("granularity"), col("ymd"))
       .sortWithinPartitions("stream_id", "t")
       .write.mode(SaveMode.Overwrite)
-      .partitionBy("granularity", "ymd").parquet(tmp)
-    val fs = fsFor(path)
-    val dst = new Path(path)
-    val bak = new Path(s"$path.graft-old")
-    // a stranded backup from a previous mid-swap crash must be restored,
-    // not deleted — after recovery, bak only exists alongside a complete
-    // dst (crash after swap, before cleanup), where dropping it is safe
-    recoverIfNeeded(path)
-    if (fs.exists(bak)) rmTree(fs, bak)
-    Option(dst.getParent).foreach(fs.mkdirs)
-    if (fs.exists(dst) && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"failed to move table aside: $path -> $bak")
-    if (!fs.rename(new Path(tmp), dst))
-      throw new java.io.IOException(s"failed to move table into place: $tmp -> $path")
-    if (fs.exists(bak)) rmTree(fs, bak)
+      .partitionBy("granularity", "ymd").parquet(staged.toString)
+    DirSwap.publish(fs, root,
+      (leaves(fs, root) ++ leaves(fs, staged)).map(_._1).distinct)
   }
 }

@@ -65,8 +65,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   // is silently false/empty on any non-local FS — the store must run
   // against HDFS/S3A as written. Lazy: safe under any init order.
   private lazy val dfs: org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(rootDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DatapointStore.fsFor(spark, rootDir)
   private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
   private def hExists(p: String): Boolean = dfs.exists(hPath(p))
   private def hList(p: String): Array[org.apache.hadoop.fs.FileStatus] =
@@ -180,17 +179,14 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
 
   private def shardOf(id: String): Int = (id.hashCode & Int.MaxValue) % catalogShards
   private def shardKey(k: Int): String = f"shard=$k%03d"
-  private def shardDirPath(k: Int) = s"$streamsPath/${shardKey(k)}"
-  // dot-prefixed so no Spark file index ever lists a mid-swap backup
-  private def shardBakPath(k: Int) = s"$streamsPath/.old_${shardKey(k)}"
   private def loadCatalog(): Map[String, StreamDescriptor] = {
-    val shardPaths = (0 until catalogShards).flatMap { k =>
-      // per-shard rename-aside fallback: a crash between (shard ->
-      // .old_shard) and (tmp -> shard) must not read as a lost shard
-      if (nonEmptyDir(shardDirPath(k))) Some(shardDirPath(k))
-      else if (nonEmptyDir(shardBakPath(k))) Some(shardBakPath(k))
-      else None
-    }
+    // a shard stranded in the backup by a crashed flush is restored
+    // first; every shard dir then holds a complete published write, so
+    // one listing finds them all
+    DirSwap.heal(dfs, hPath(streamsPath))
+    val shardPaths = hList(streamsPath)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
+      .map(_.getPath.toString).toSeq
     if (shardPaths.isEmpty) return Map.empty
     replayHwm(spark.read.parquet(shardPaths: _*).as[StreamDescriptor]
       .collect().map(d => d.stream_id -> d).toMap)
@@ -278,35 +274,22 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
 
   private def persistCatalog(): Unit = {
     // shard-selective crash-safe swap: only DIRTY shards rewrite — one
-    // Spark job writes their surviving descriptors partitioned by shard,
-    // then each shard directory swaps in with its own rename-aside
-    // backup (never a window where a complete copy of a shard isn't on
-    // disk; loadCatalog falls back to `.old_shard=KKK`). Flush cost is
-    // O(streams in changed shards), not O(catalog).
+    // Spark job writes their surviving descriptors partitioned by shard
+    // into the catalog's stage, then each shard directory
+    // DirSwap.publishes (a dirty shard with no surviving streams has no
+    // staged copy and retires). Flush cost is O(streams in changed
+    // shards), not O(catalog).
     val dirty = dirtyShards.toSet
     val shardU = udf((s: String) => f"${(s.hashCode & Int.MaxValue) % catalogShards}%03d")
     val rows = catalog.values.filter(d => dirty(shardOf(d.stream_id))).toSeq
-    val tmpRoot = s"$streamsPath.tmp"
-    if (hExists(tmpRoot)) rmTree(tmpRoot)
+    val table = hPath(streamsPath)
+    DirSwap.dropStage(dfs, table)
     if (rows.nonEmpty)
       rows.toDS().withColumn("shard", shardU(col("stream_id")))
         .repartition(math.min(dirty.size, 32), col("shard"))
         .write.mode(SaveMode.Overwrite).partitionBy("shard")
-        .parquet(tmpRoot)
-    dfs.mkdirs(hPath(streamsPath))
-    dirty.toSeq.sorted.foreach { k =>
-      val cur = hPath(shardDirPath(k)); val bak = hPath(shardBakPath(k))
-      val tmp = hPath(s"$tmpRoot/${shardKey(k)}")
-      if (dfs.exists(bak)) rmTree(bak.toString)
-      if (dfs.exists(cur) && !dfs.rename(cur, bak))
-        throw new java.io.IOException(s"failed to move shard aside: $cur -> $bak")
-      // a dirty shard with no surviving streams has no tmp dir: the
-      // rename-aside + backup drop below IS its deletion
-      if (dfs.exists(tmp) && !dfs.rename(tmp, cur))
-        throw new java.io.IOException(s"failed to move shard into place: $tmp -> $cur")
-      if (dfs.exists(bak)) rmTree(bak.toString)
-    }
-    if (hExists(tmpRoot)) rmTree(tmpRoot)
+        .parquet(DirSwap.stage(table).toString)
+    DirSwap.publish(dfs, table, dirty.toSeq.sorted.map(shardKey))
     // the persisted catalog covers every in-memory bound, so the sidecar
     // is now redundant — truncate it AFTER the swap (a crash in between
     // just replays already-covered lines, a no-op)
@@ -1071,7 +1054,9 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       rmTree(streamDir(rollupsPath, id))
     }
     // raw streams share the primary table: rewrite it (rare admin op) —
-    // scan ONLY the primary root, never the union view
+    // scan ONLY the primary root, never the union view. Each leaf
+    // publishes on its own: after a crash mid-publish the catalog still
+    // lists the victims and a re-run finishes the delete
     if (rawVictims.nonEmpty && nonEmptyDir(datapointsPath)) {
       val kept = spark.read.parquet(datapointsPath)
         .where(!col("stream_id").isin(rawVictims.toSeq: _*))
@@ -1119,7 +1104,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     * instead of replacing the stream wholesale, one file per append.
     * Selective per-leaf rewrite: cost follows fragmentation, not store
     * size, and a crash at any point is healed by the next read
-    * (DatapointStore.recoverParts).
+    * ([[DirSwap.heal]]).
     */
   def compactStore(minFiles: Int = 2, lenient: Boolean = false): Unit = {
     DatapointStore.compact(spark, datapointsPath,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.core.DatapointStore
+import graft.core.{DatapointStore, DirSwap}
 
 /** MERGE INTO / upsert semantics over immutable parquet — the lakehouse
   * row-mutation primitive a training-data pipeline needs for label fixes,
@@ -19,11 +19,10 @@ import graft.core.DatapointStore
   *    merged, and swapped; untouched partitions see zero I/O. The bucket
   *    column must be a pure function of the merge key (the standard
   *    upsert-table layout) — that is exactly what makes the affected set
-  *    computable from the changes alone, with no base-table scan. Swap
-  *    reuses the store's crash-safe leaf protocol (write tmp, swing the
-  *    old leaf aside, swing the new one in; `recoverParts` heals a
-  *    mid-swap crash on next access), so a crash anywhere leaves a
-  *    readable table and the merge re-runs idempotently.
+  *    computable from the changes alone, with no base-table scan. The
+  *    swap is the store's [[DirSwap]] (stage, publish, heal on next
+  *    access), so a crash anywhere leaves a readable table and the merge
+  *    re-runs idempotently.
   */
 object Mutations {
 
@@ -185,7 +184,10 @@ object Mutations {
       changes: DataFrame, keyCols: Seq[String], partExpr: Column,
       partCol: String = "bucket", opCol: String = "op",
       versionCol: String = "version"): Int = {
-    DatapointStore.recoverParts(root)
+    val mfs = DatapointStore.fsFor(root)
+    val table = new org.apache.hadoop.fs.Path(root)
+    DirSwap.heal(mfs, table)
+    DirSwap.dropStage(mfs, table)
     // changelog is consumed three times (affected list, merge, write) —
     // checkpoint per the self-join re-run rule; changelogs are small
     // relative to the table by the premise of a merge
@@ -195,7 +197,6 @@ object Mutations {
     if (affected.isEmpty) return 0
     val payloadSchema = StructType(
       changes.schema.filterNot(f => f.name == opCol || f.name == versionCol))
-    val mfs = DatapointStore.fsFor(root)
     val liveDirs = affected.map(v => s"$root/$partCol=$v")
       .filter(d => mfs.exists(new org.apache.hadoop.fs.Path(d)))
     val base =
@@ -208,29 +209,12 @@ object Mutations {
           .parquet(liveDirs: _*).drop(partCol)
     val merged = mergeFrame(base, ch.drop(partCol), keyCols, opCol, versionCol)
       .withColumn(partCol, partExpr)
-    val tmpRoot = new org.apache.hadoop.fs.Path(s"$root.graft-parts-tmp")
-    if (mfs.exists(tmpRoot)) DatapointStore.rmTree(mfs, tmpRoot)
     merged.repartition(col(partCol)).sortWithinPartitions(keyCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(tmpRoot.toString)
-    // crash-safe per-leaf swap, compact's protocol: aside → in → drop.
-    // An affected bucket absent from tmp was fully deleted — its live
-    // leaf swings aside and is dropped with the backups.
-    val bakRoot = new org.apache.hadoop.fs.Path(s"$root.graft-parts-bak")
-    affected.foreach { v =>
-      val rel = s"$partCol=$v"
-      val live = new org.apache.hadoop.fs.Path(s"$root/$rel")
-      val tmp = new org.apache.hadoop.fs.Path(s"$tmpRoot/$rel")
-      val bak = new org.apache.hadoop.fs.Path(s"$bakRoot/$rel")
-      mfs.mkdirs(bak.getParent)
-      if (mfs.exists(live) && !mfs.rename(live, bak))
-        throw new java.io.IOException(s"failed to move leaf aside: $live")
-      if (mfs.exists(tmp) && !mfs.rename(tmp, live))
-        throw new java.io.IOException(s"failed to move leaf in: $tmp -> $live")
-      if (mfs.exists(bak)) DatapointStore.rmTree(mfs, bak)
-    }
-    DatapointStore.rmTree(mfs, tmpRoot)
-    if (mfs.exists(bakRoot)) DatapointStore.rmTree(mfs, bakRoot)
+      .parquet(DirSwap.stage(table).toString)
+    // an affected bucket absent from the stage was fully deleted: it
+    // retires
+    DirSwap.publish(mfs, table, affected.map(v => s"$partCol=$v"))
     affected.length
   }
 
@@ -240,9 +224,10 @@ object Mutations {
     */
   def readPartitioned(spark: SparkSession, root: String,
       payloadSchema: StructType, partCol: String = "bucket"): DataFrame = {
-    DatapointStore.recoverParts(root)
-    if (!DatapointStore.fsFor(root)
-        .exists(new org.apache.hadoop.fs.Path(root)))
+    val fs = DatapointStore.fsFor(root)
+    val table = new org.apache.hadoop.fs.Path(root)
+    DirSwap.heal(fs, table)
+    if (!fs.exists(table))
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), payloadSchema)
     spark.read.option("basePath", root)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.{DatapointStore, DirSwap}
 import graft.obs.Meter
 
 /** Keyword + hybrid retrieval over the document corpus — the lexical
@@ -186,7 +187,7 @@ object Retrieval {
     val postSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("tok", StringType), StructField("tf", LongType),
       StructField("dl", LongType)))
-    val bfs = retrievalFs(spark, root)
+    val bfs = DatapointStore.fsFor(spark, root)
     val dirs = buckets.map(v => s"$root/postings/bucket=$v")
       .filter(d => bfs.exists(new org.apache.hadoop.fs.Path(d)))
     val postings =
@@ -252,7 +253,7 @@ object Retrieval {
     // the removed totals a second time, leaving (N, avgdl) permanently
     // wrong. Healing completes the delete before this write plans.
     healIndex(spark, root)
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     // appends extend the positions tree iff the build created it
     val writePos = positional ||
       (!overwrite &&
@@ -429,19 +430,16 @@ object Retrieval {
     publishStats(fs, root, r.getLong(0), r.getLong(1))
   }
 
-  private def retrievalFs(spark: org.apache.spark.sql.SparkSession,
-      root: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The index's bucket-partitioned trees, each a [[DirSwap]] table of
+    * `bucket=<b>` units (positions only on positional indexes). */
+  private def trees(root: String): Seq[String] =
+    Seq("postings", "doclens", "positions").map(t => s"$root/$t")
 
-  /** Hidden pre-publish trees + the durable delete-intent marker. A
-    * leftover stage/tmp tree is pre-publish state (healed away = rolled
-    * back); the PENDING marker is post-publish intent (healed = the
-    * delete COMPLETES — see [[healIndex]]).
+  /** The hidden pending-tmp tree + the durable delete-intent marker. A
+    * leftover stage or pending-tmp tree is pre-publish state (healed
+    * away = rolled back); the PENDING marker is post-publish intent
+    * (healed = the delete COMPLETES — see [[healIndex]]).
     */
-  private val StageDir = ".bm25_stage"
-  private val DlStageDir = ".bm25_dlstage"
-  private val PosStageDir = ".bm25_posstage"
   private val PendingTmp = ".bm25_pending_tmp"
   private val PendingDelete = "_bm25_pending_delete"
 
@@ -467,7 +465,7 @@ object Retrieval {
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, idsDf: DataFrame): Unit = {
     healIndex(spark, root) // completes any prior pending delete first
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/postings"))) return
     val gen = graft.operators.IndexGen.begin(fs, root)
     val tmp = new org.apache.hadoop.fs.Path(root, PendingTmp)
@@ -493,7 +491,7 @@ object Retrieval {
     */
   private def runPendingDelete(spark: org.apache.spark.sql.SparkSession,
       root: String, lease: Option[String] = None): Unit = {
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val marker = new org.apache.hadoop.fs.Path(root, PendingDelete)
     val ids = spark.read.parquet(marker.toString).localCheckpoint(true)
     // stats delta staged FIRST, durable as a gen+1 marker coexisting
@@ -533,12 +531,8 @@ object Retrieval {
       fs.delete(marker, true)
       return
     }
-    stagedBucketDelete(spark, fs, s"$root/postings", s"$root/$StageDir", ids,
-      lease = lease.map(root -> _))
-    stagedBucketDelete(spark, fs, s"$root/doclens", s"$root/$DlStageDir", ids,
-      dlTouched, lease = lease.map(root -> _))
-    stagedBucketDelete(spark, fs, s"$root/positions", s"$root/$PosStageDir",
-      ids, lease = lease.map(root -> _)) // no-op on non-positional indexes
+    trees(root).foreach(t => stagedBucketDelete(spark, fs, root, t, ids,
+      if (t.endsWith("/doclens")) dlTouched else None, lease))
     if (stats.isEmpty) recountStats(spark, fs, root) // missing marker
     else cleanupStats(fs, root) // swaps published — retire the old gen
     fs.delete(marker, true)
@@ -546,51 +540,31 @@ object Retrieval {
 
   /** Shared staged COW delete over one bucket-partitioned tree: find the
     * touched buckets (bounded by nBuckets by construction), rewrite them
-    * minus `ids` into `stagePath` in one job, swap each live. A bucket
-    * fully emptied by the rewrite is absent from the stage and retires
-    * through the healable old state.
+    * minus `ids` into the tree's stage in one job, [[DirSwap.publish]]
+    * each. A bucket fully emptied by the rewrite is absent from the
+    * stage and retires.
     */
   private def stagedBucketDelete(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      stagePath: String, ids: DataFrame,
-      preTouched: Option[Seq[Long]] = None,
-      lease: Option[(String, String)] = None): Unit = {
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tableDir))) return
+      fs: org.apache.hadoop.fs.FileSystem, root: String, tableDir: String,
+      ids: DataFrame, preTouched: Option[Seq[Long]],
+      lease: Option[String]): Unit = {
+    val table = new org.apache.hadoop.fs.Path(tableDir)
+    if (!fs.exists(table)) return
     val touched = preTouched.getOrElse(spark.read.parquet(tableDir)
       .join(ids, Seq("doc_id"), "left_semi")
       .select(col("bucket").cast("long")).distinct().collect()
       .map(_.getLong(0)).toSeq)
     if (touched.isEmpty) return
-    val stage = new org.apache.hadoop.fs.Path(stagePath)
     spark.read.parquet(tableDir)
       .where(col("bucket").isin(touched: _*))
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    touched.foreach { b =>
-      // TTL fence per swap: a holder stalled past its lease must not
-      // rename over state a successor now owns (heal-time completions —
-      // lease = None — run only on lease-free roots by construction)
-      lease.foreach { case (r, tok) =>
-        graft.operators.IndexGen.checkLease(fs, r, tok) }
-      val live = new org.apache.hadoop.fs.Path(s"$tableDir/bucket=$b")
-      val tmp = new org.apache.hadoop.fs.Path(s"$tableDir/.bm25_tmp_$b")
-      val old = new org.apache.hadoop.fs.Path(s"$tableDir/.bm25_old_$b")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"bucket=$b")
-      if (fs.exists(staged)) {
-        if (!fs.rename(staged, tmp))
-          throw new java.io.IOException(s"bm25 delete: cannot move $staged")
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"bm25 delete: cannot stage $live")
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"bm25 delete: cannot publish $tmp")
-        fs.delete(old, true)
-      } else {
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"bm25 delete: cannot retire $live")
-        fs.delete(old, true)
-      }
-    }
-    fs.delete(stage, true)
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(DirSwap.stage(table).toString)
+    // TTL fence per swap: a holder stalled past its lease must not rename
+    // over state a successor now owns (heal-time completions — lease =
+    // None — run only on lease-free roots by construction)
+    DirSwap.publish(fs, table, touched.map(b => s"bucket=$b"),
+      () => lease.foreach(IndexGen.checkLease(fs, root, _)))
   }
 
   /** Merge small files inside hot postings buckets — the small-file
@@ -599,32 +573,28 @@ object Retrieval {
     * long-maintained index pays a task per tiny file). Buckets holding
     * more than `maxFilesPerBucket` data files rewrite through the same
     * staged COW machinery as [[deleteFromIndex]]: one partition-pruned,
-    * repartition-by-bucket job, then rename swaps. Content-preserving;
-    * crash-safe via the stage/tmp/old heal states.
+    * repartition-by-bucket job, then [[DirSwap]] swaps.
+    * Content-preserving; crash-safe via [[healIndex]].
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, maxFilesPerBucket: Int = 4): Unit = {
     healIndex(spark, root)
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     // CAS baseline before observing either tree; advance here rather
     // than per-tree — compaction is content-preserving, so the earliest
     // publish point keeps it one generation
     val gen = graft.operators.IndexGen.begin(fs, root)
     val lease = graft.operators.IndexGen.advance(fs, root, gen)
-    compactTree(spark, fs, s"$root/postings", s"$root/$StageDir",
-      maxFilesPerBucket, root -> lease)
-    // appends grow doclens one file per bucket per batch too
-    compactTree(spark, fs, s"$root/doclens", s"$root/$DlStageDir",
-      maxFilesPerBucket, root -> lease)
-    compactTree(spark, fs, s"$root/positions", s"$root/$PosStageDir",
-      maxFilesPerBucket, root -> lease) // no-op on non-positional indexes
+    // appends grow doclens and positions one file per bucket per batch
+    // too (positions: a no-op on non-positional indexes)
+    trees(root).foreach(t =>
+      compactTree(spark, fs, root, t, maxFilesPerBucket, lease))
     graft.operators.IndexGen.release(fs, root, lease)
   }
 
   private def compactTree(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, tableDir: String,
-      stagePath: String, maxFilesPerBucket: Int,
-      lease: (String, String)): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, root: String, tableDir: String,
+      maxFilesPerBucket: Int, lease: String): Unit = {
     val dir = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(dir)) return
     val hot = fs.listStatus(dir)
@@ -633,26 +603,13 @@ object Retrieval {
         .count(f => f.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket)
       .map(_.getPath.getName.stripPrefix("bucket=").toLong).toSeq
     if (hot.isEmpty) return
-    val stage = new org.apache.hadoop.fs.Path(stagePath)
     spark.read.parquet(tableDir)
       .where(col("bucket").isin(hot: _*))
       .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(stage.toString)
-    hot.foreach { b =>
-      graft.operators.IndexGen.checkLease(fs, lease._1, lease._2) // TTL fence
-      val live = new org.apache.hadoop.fs.Path(s"$tableDir/bucket=$b")
-      val tmp = new org.apache.hadoop.fs.Path(s"$tableDir/.bm25_tmp_$b")
-      val old = new org.apache.hadoop.fs.Path(s"$tableDir/.bm25_old_$b")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"bucket=$b")
-      if (!fs.rename(staged, tmp))
-        throw new java.io.IOException(s"bm25 compact: cannot move $staged")
-      if (!fs.rename(live, old))
-        throw new java.io.IOException(s"bm25 compact: cannot stage $live")
-      if (!fs.rename(tmp, live))
-        throw new java.io.IOException(s"bm25 compact: cannot publish $tmp")
-      fs.delete(old, true)
-    }
-    fs.delete(stage, true)
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(DirSwap.stage(dir).toString)
+    DirSwap.publish(fs, dir, hot.map(b => s"bucket=$b"),
+      () => graft.operators.IndexGen.checkLease(fs, root, lease)) // TTL fence
   }
 
   /** Re-shard the index into `newRoot` with a different bucket count —
@@ -690,11 +647,11 @@ object Retrieval {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$newRoot/doclens")
     val got = obs.get
-    publishStats(retrievalFs(spark, newRoot), newRoot,
+    publishStats(DatapointStore.fsFor(spark, newRoot), newRoot,
       got.get("n").map(_.asInstanceOf[Long]).getOrElse(0L),
       got.get("sdl").map(_.asInstanceOf[Long]).getOrElse(0L))
     // a positional index re-buckets its positions tree too
-    val fs = retrievalFs(spark, oldRoot)
+    val fs = DatapointStore.fsFor(spark, oldRoot)
     if (fs.exists(new org.apache.hadoop.fs.Path(s"$oldRoot/positions")))
       maskDocTombstones(spark, oldRoot,
           spark.read.parquet(s"$oldRoot/positions")
@@ -718,7 +675,7 @@ object Retrieval {
   def applyIndexBatch(spark: org.apache.spark.sql.SparkSession,
       root: String, batch: DataFrame, batchId: Long,
       nBuckets: Int = 64): Boolean = {
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val committed = {
       val dir = new org.apache.hadoop.fs.Path(root)
       if (!fs.exists(dir)) -1L
@@ -743,20 +700,19 @@ object Retrieval {
     true
   }
 
-  /** Finish or roll back an interrupted [[deleteFromIndex]] /
-    * [[compactIndex]] swap — the IVF heal state machine verbatim per
-    * bucket, on both trees: tmp + live ⇒ swap never started (tmp may be
-    * incomplete — drop it); tmp alone ⇒ live was staged away after a
-    * complete write — publish tmp; old (± live) ⇒ publish happened —
-    * drop old. Then, if a durable `_bm25_pending_delete` marker remains,
+  /** Roll back an interrupted [[deleteFromIndex]] / [[compactIndex]]
+    * swap on every tree: drop its stage (pre-publish state) and
+    * [[DirSwap.heal]] it (a bucket caught between its two renames is
+    * restored). Then, if a durable `_bm25_pending_delete` marker remains,
     * the delete crashed between publishing its intent and finishing its
     * swaps: COMPLETE it (idempotent — already-swapped buckets no longer
     * match any pending id), so a partial delete can never persist
-    * silently across the two trees. Idempotent, one listing per level.
+    * silently across the two trees. Idempotent; two `exists` per tree
+    * when nothing crashed.
     */
   def healIndex(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     // a LIVE writer's unexpired publish lease means its stage trees and
     // markers are not crash leftovers — repairing them here would delete
     // an in-flight publication out from under it (the r13 residual:
@@ -766,24 +722,11 @@ object Retrieval {
     if (graft.operators.IndexGen.leaseHeld(fs, root)) return
     // leftover stage/pending-tmp trees = pre-publish state of an
     // interrupted batched delete — dropping them rolls that phase back
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$StageDir"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$DlStageDir"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$PosStageDir"), true)
     fs.delete(new org.apache.hadoop.fs.Path(root, PendingTmp), true)
-    def healDir(dir: org.apache.hadoop.fs.Path): Unit = {
-      if (!fs.exists(dir)) return
-      fs.listStatus(dir).map(_.getPath).foreach { p =>
-        val n = p.getName
-        if (n.startsWith(".bm25_tmp_")) {
-          val live = new org.apache.hadoop.fs.Path(dir,
-            s"bucket=${n.stripPrefix(".bm25_tmp_")}")
-          if (fs.exists(live)) fs.delete(p, true) else fs.rename(p, live)
-        } else if (n.startsWith(".bm25_old_")) fs.delete(p, true)
-      }
+    trees(root).map(new org.apache.hadoop.fs.Path(_)).foreach { t =>
+      DirSwap.dropStage(fs, t)
+      DirSwap.heal(fs, t)
     }
-    healDir(new org.apache.hadoop.fs.Path(s"$root/postings"))
-    healDir(new org.apache.hadoop.fs.Path(s"$root/doclens"))
-    healDir(new org.apache.hadoop.fs.Path(s"$root/positions"))
     if (fs.exists(new org.apache.hadoop.fs.Path(root, PendingDelete)))
       runPendingDelete(spark, root)
     // stats sidecar heal (after any pending delete completed, so the
@@ -822,7 +765,7 @@ object Retrieval {
     // bytes via the Hadoop FS like everything else in this file — a
     // java.io.File listing is silently empty on any non-local FS and
     // would report bytes=0 (ivfIndexStats' getContentSummary discipline)
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val bytes = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/postings"))
       .filter(_.isDirectory).map(_.getPath)
       .filter(_.getName.startsWith("bucket="))
@@ -881,7 +824,7 @@ object Retrieval {
     // BM25 score, so a deployment needs the integer diff in the audit
     // row, not just in the test suite. bm25TopKIndexed above healed, so
     // the marker exists on any populated index.
-    val afs = retrievalFs(spark, root)
+    val afs = DatapointStore.fsFor(spark, root)
     val (mn, msdl) = readStats(afs, root)
       .map(s => (s._2, s._3)).getOrElse((0L, 0L))
     val (rn, rsdl) = {
@@ -916,7 +859,7 @@ object Retrieval {
   def corpusStats(spark: org.apache.spark.sql.SparkSession,
       root: String): (Long, Long) = {
     healIndex(spark, root)
-    readStats(retrievalFs(spark, root), root)
+    readStats(DatapointStore.fsFor(spark, root), root)
       .map(s => (s._2, s._3)).getOrElse((0L, 0L))
   }
 
@@ -940,7 +883,7 @@ object Retrieval {
     */
   private def indexTombstones(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[DataFrame] = {
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     if (!fs.exists(p)) None
     else {
@@ -978,7 +921,7 @@ object Retrieval {
   def deleteFromIndexMor(spark: org.apache.spark.sql.SparkSession,
       root: String, idsDf: DataFrame): Unit = {
     healIndex(spark, root)
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/postings"))) return
     val gen = graft.operators.IndexGen.begin(fs, root)
     val lease = graft.operators.IndexGen.advance(fs, root, gen)
@@ -1001,7 +944,7 @@ object Retrieval {
     */
   def compactIndexTombstones(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     if (!fs.exists(p)) return
     val files = fs.listStatus(p).filter { st =>
@@ -1063,7 +1006,7 @@ object Retrieval {
     // existence via the Hadoop FS, not java.io.File — on any non-local
     // FS a File check is silently false and every probed bucket would
     // be skipped (the indexStats bytes-listing bug class, fixed r12)
-    val bfs = retrievalFs(spark, root)
+    val bfs = DatapointStore.fsFor(spark, root)
     val dirs = buckets.map(v => s"$root/postings/bucket=$v")
       .filter(d => bfs.exists(new org.apache.hadoop.fs.Path(d)))
     val postings =
@@ -1122,7 +1065,7 @@ object Retrieval {
     val posSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("tok", StringType),
       StructField("positions", ArrayType(LongType))))
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     def tokLane(t: String, i: Int): DataFrame = {
       // bucket via the same xxhash64 the writer used — computed with a
       // 1-row Spark expression so the two sides can never disagree
@@ -1238,7 +1181,7 @@ object Retrieval {
     val posSchema = StructType(Seq(StructField("doc_id", LongType),
       StructField("tok", StringType),
       StructField("positions", ArrayType(LongType))))
-    val fs = retrievalFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val dirs = buckets.map(v => s"$root/positions/bucket=$v")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     val posRows =

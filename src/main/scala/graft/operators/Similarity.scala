@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.{DatapointStore, DirSwap}
 import graft.functions.GraftFunctions
 import graft.obs.Meter
 
@@ -508,7 +509,7 @@ object Similarity {
   /** Assign `batch` to the index's persisted centroids and append its
     * vectors into their home-cell partition dirs. */
   def appendToIvfIndex(batch: DataFrame, root: String): Unit = {
-    val fs = hadoopFs(batch.sparkSession, root)
+    val fs = DatapointStore.fsFor(batch.sparkSession, root)
     val gen = IndexGen.begin(fs, root)
     val cents = readIvfCentroids(batch.sparkSession, root)
     // attribute columns beyond (vec_id, emb) land in the cell rows —
@@ -538,13 +539,11 @@ object Similarity {
     * COW lane: one column-pruned scan of (vec_id, cell) locates the
     * touched cells (parquet row-group stats skip untouched files), then
     * ONLY those cell dirs are rewritten without the deleted ids. I/O is
-    * ∝ touched cells, never the index. The swap per cell is crash-safe
-    * in the VersionedTable discipline (new data first, then a rename
-    * window healable from either side): data lands complete in a hidden
-    * `.ivf_tmp_<cell>` dir, the live dir moves to `.ivf_old_<cell>`, tmp
-    * moves in, old is dropped — [[healIvfIndex]] (run by every search)
-    * finishes or rolls back any interrupted swap, and the hidden names
-    * keep partition discovery from ever seeing a half-state.
+    * ∝ touched cells, never the index. The swap per cell is the
+    * [[DirSwap]] protocol: data lands complete in the cells' hidden
+    * stage, then each cell publishes — [[healIvfIndex]] (run by every
+    * search) rolls back any interrupted swap, and the hidden names keep
+    * partition discovery from ever seeing a half-state.
     */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, ids: Seq[Long]): Unit = {
@@ -576,7 +575,7 @@ object Similarity {
   def deleteFromIvfIndexFrame(spark: org.apache.spark.sql.SparkSession,
       root: String, idsDf: DataFrame): Unit = {
     healIvfIndex(spark, root)
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/cells"))) return
     val gen = IndexGen.begin(fs, root) // CAS baseline: state as planned
     // consumed by the touch scan and the staged rewrite — checkpoint
@@ -591,52 +590,23 @@ object Similarity {
     // per-cell read+write loop billed 2-3 jobs per touched cell (152
     // jobs / 1603 tasks on the sf0.1 maintained gate fixture); staged,
     // the job count is constant in touched-cell count and only renames
-    // remain per cell. The stage dir is pre-publish state: heal deletes
-    // it wholesale, so a crash before any swap rolls the delete back.
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$IvfStageDir")
+    // remain per cell. The stage is pre-publish state: heal deletes it
+    // wholesale, so a crash before any swap rolls the delete back.
     spark.read.parquet(s"$root/cells")
       .where(col("cell").isin(touched: _*))
       .join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(DirSwap.stage(ivfCells(root)).toString)
     // publish gate: if another mutation advanced the generation since we
     // planned against it, raise with only hidden stage state written —
     // the next heal-on-read rolls it back; live cells were never touched
     val lease = IndexGen.advance(fs, root, gen)
-    publishStagedCells(fs, root, stage, touched, Some(lease))
+    // a cell ABSENT from the stage was fully emptied by the rewrite and
+    // retires; TTL fence per cell: a holder stalled past its lease must
+    // not rename over state a successor now owns
+    DirSwap.publish(fs, ivfCells(root), touched.map(c => s"cell=$c"),
+      () => IndexGen.checkLease(fs, root, lease))
     IndexGen.release(fs, root, lease)
-  }
-
-  /** Swap every staged cell dir live (tmp/old crash windows heal from
-    * either side); a cell ABSENT from the stage tree was fully emptied
-    * by the rewrite and retires through the healable old state. Shared
-    * by the batched delete and [[compactIvfIndex]].
-    */
-  private def publishStagedCells(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, stage: org.apache.hadoop.fs.Path,
-      cells: Seq[Long], lease: Option[String] = None): Unit = {
-    cells.foreach { cellId =>
-      // TTL fence: a holder stalled past its lease must not rename over
-      // state a successor now owns
-      lease.foreach(IndexGen.checkLease(fs, root, _))
-      val live = new org.apache.hadoop.fs.Path(s"$root/cells/cell=$cellId")
-      val tmp = new org.apache.hadoop.fs.Path(s"$root/cells/.ivf_tmp_$cellId")
-      val old = new org.apache.hadoop.fs.Path(s"$root/cells/.ivf_old_$cellId")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"cell=$cellId")
-      if (fs.exists(staged)) {
-        if (!fs.rename(staged, tmp))
-          throw new java.io.IOException(s"ivf publish: cannot move $staged")
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"ivf publish: cannot stage $live")
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"ivf publish: cannot publish $tmp")
-        fs.delete(old, true)
-      } else {
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"ivf publish: cannot retire $live")
-        fs.delete(old, true)
-      }
-    }
-    fs.delete(stage, true)
   }
 
   /** Merge small files inside hot cell dirs — the small-file remedy for
@@ -646,13 +616,13 @@ object Similarity {
     * `maxFilesPerCell` data files rewrite through the SAME staged COW
     * machinery as the batched delete: one partition-pruned,
     * repartition-by-cell job → one file per compacted cell → rename
-    * swaps. Content-preserving by construction; crash-safe via the
-    * stage/tmp/old heal states.
+    * swaps. Content-preserving by construction; crash-safe via
+    * [[healIvfIndex]].
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, maxFilesPerCell: Int = 4): Unit = {
     healIvfIndex(spark, root)
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val cellsDir = new org.apache.hadoop.fs.Path(s"$root/cells")
     if (!fs.exists(cellsDir)) return
     val gen = IndexGen.begin(fs, root) // CAS baseline BEFORE observing
@@ -662,13 +632,14 @@ object Similarity {
         .count(f => f.getPath.getName.endsWith(".parquet")) > maxFilesPerCell)
       .map(_.getPath.getName.stripPrefix("cell=").toLong).toSeq
     if (hot.isEmpty) return
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$IvfStageDir")
     spark.read.parquet(s"$root/cells")
       .where(col("cell").isin(hot: _*))
       .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(stage.toString)
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(DirSwap.stage(ivfCells(root)).toString)
     val lease = IndexGen.advance(fs, root, gen) // same gate as the delete
-    publishStagedCells(fs, root, stage, hot, Some(lease))
+    DirSwap.publish(fs, ivfCells(root), hot.map(c => s"cell=$c"),
+      () => IndexGen.checkLease(fs, root, lease))
     IndexGen.release(fs, root, lease)
   }
 
@@ -695,34 +666,21 @@ object Similarity {
       kmeansCentroidsExact(content, stride, iters, centroidBudget))
   }
 
-  /** Finish or roll back an interrupted [[deleteFromIvfIndex]] swap.
-    * States (per cell): tmp + live ⇒ the swap never started its rename —
-    * tmp may be incomplete, drop it; tmp alone ⇒ data was complete and
-    * the live dir was already staged away — publish tmp; old alone or
-    * old + live ⇒ the publish succeeded — drop old. Idempotent; cheap
-    * (one directory listing) so every reader runs it.
+  /** Roll back an interrupted [[deleteFromIvfIndex]] /
+    * [[compactIvfIndex]]: drop the cells' stage (pre-publish state) and
+    * [[DirSwap.heal]] the cells (a cell caught between its two renames
+    * is restored). Idempotent; cheap (two `exists` when nothing
+    * crashed) so every reader runs it.
     */
   def healIvfIndex(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     // a LIVE writer's unexpired lease ⇒ its stage tree is an in-flight
     // publication, not a crash leftover — serve the published cells
     // untouched and repair nothing (reader-vs-writer, the r13 residual)
     if (IndexGen.leaseHeld(fs, root)) return
-    // a leftover stage tree is pre-publish state from an interrupted
-    // batched delete — dropping it rolls that delete back wholesale
-    // (per-cell dirs already swapped out of it heal below as usual)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$IvfStageDir"), true)
-    val cellsDir = new org.apache.hadoop.fs.Path(s"$root/cells")
-    if (!fs.exists(cellsDir)) return
-    fs.listStatus(cellsDir).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith(".ivf_tmp_")) {
-        val live = new org.apache.hadoop.fs.Path(cellsDir,
-          s"cell=${n.stripPrefix(".ivf_tmp_")}")
-        if (fs.exists(live)) fs.delete(p, true) else fs.rename(p, live)
-      } else if (n.startsWith(".ivf_old_")) fs.delete(p, true)
-    }
+    DirSwap.dropStage(fs, ivfCells(root))
+    DirSwap.heal(fs, ivfCells(root))
   }
 
   /** Per-cell observability for the persisted index — the stats a 100×
@@ -737,7 +695,7 @@ object Similarity {
     val counts = spark.read.parquet(s"$root/cells")
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_vecs"))
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val cellsDir = new org.apache.hadoop.fs.Path(s"$root/cells")
     val bytes = fs.listStatus(cellsDir).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith("cell="))
@@ -816,7 +774,7 @@ object Similarity {
   def applyIvfBatch(spark: org.apache.spark.sql.SparkSession, root: String,
       batch: DataFrame, batchId: Long,
       cents: Array[(Long, Seq[Double])]): Boolean = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val committed = {
       val dir = new org.apache.hadoop.fs.Path(root)
       if (!fs.exists(dir)) -1L
@@ -860,7 +818,7 @@ object Similarity {
 
   private def ivfCurrentGen(spark: org.apache.spark.sql.SparkSession,
       base: String): Long = {
-    val fs = hadoopFs(spark, base)
+    val fs = DatapointStore.fsFor(spark, base)
     val dir = new org.apache.hadoop.fs.Path(base)
     if (!fs.exists(dir)) 0L
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -910,7 +868,7 @@ object Similarity {
           minRecallBp, maxCellPpm).head()
       }
       if (a.getBoolean(6)) {
-        val fs = hadoopFs(spark, base)
+        val fs = DatapointStore.fsFor(spark, base)
         val next = s"$base/gen=${gen + 1}"
         // a crashed earlier attempt leaves an unmarked half-built dir —
         // clear it or the rebuild's appends would double its content
@@ -931,14 +889,10 @@ object Similarity {
     applied
   }
 
-  /** Hidden staging tree for the batched COW delete — pre-publish state,
-    * healed away wholesale. */
-  private val IvfStageDir = ".ivf_stage"
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-      root: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The IVF index's cell table: `cell=<id>` units swapped by
+    * [[DirSwap]]. */
+  private def ivfCells(root: String) =
+    new org.apache.hadoop.fs.Path(s"$root/cells")
 
   private def readIvfCentroids(
       spark: org.apache.spark.sql.SparkSession,
@@ -992,7 +946,7 @@ object Similarity {
     */
   private def ivfTombstones(spark: org.apache.spark.sql.SparkSession,
       root: String): Option[DataFrame] = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     if (!fs.exists(p)) None
     else {
@@ -1031,7 +985,7 @@ object Similarity {
   def deleteFromIvfIndexMor(spark: org.apache.spark.sql.SparkSession,
       root: String, idsDf: DataFrame): Unit = {
     healIvfIndex(spark, root)
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/cells"))) return
     val gen = IndexGen.begin(fs, root)
     val lease = IndexGen.advance(fs, root, gen)
@@ -1056,7 +1010,7 @@ object Similarity {
     */
   def compactIvfTombstones(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/tombstones")
     if (!fs.exists(p)) return
     val files = fs.listStatus(p).filter { st =>
@@ -1375,7 +1329,7 @@ object Similarity {
     * the loser with ConcurrentCommit before any files land.
     */
   def appendToIvfPqIndex(batch: DataFrame, root: String): Unit = {
-    val fs = hadoopFs(batch.sparkSession, root)
+    val fs = DatapointStore.fsFor(batch.sparkSession, root)
     val gen = IndexGen.begin(fs, root)
     val enc = encodeIvfPqBatch(batch, root)
     val lease = IndexGen.advance(fs, root, gen)
@@ -1391,12 +1345,10 @@ object Similarity {
     IndexGen.release(fs, root, lease)
   }
 
-  /** Hidden pre-publish trees + the durable compaction intent marker
-    * for the PQ index — the BM25/IVF discipline on the (batch, cell)
-    * layout: stage trees heal into ROLLBACK, the compact marker heals
-    * into COMPLETION (stage is written complete before the marker).
+  /** Hidden compaction stage + the durable compaction intent marker for
+    * the PQ index: a bare stage heals into ROLLBACK, the marker into
+    * COMPLETION (the stage is written complete before the marker).
     */
-  private val PqStageDir = ".ivfpq_stage"
   private val PqCompactStage = ".ivfpq_cstage"
   private val PqCompactMarker = "_ivfpq_compact_"
 
@@ -1412,14 +1364,14 @@ object Similarity {
     * a full re-encode). The flat lane's staged COW verbatim, applied to
     * the two-level (batch, cell) layout: one column-pruned scan locates
     * the touched (batch, cell) dirs, ONE partition-pruned anti-join job
-    * rewrites them all into a hidden stage tree, and per-dir tmp/old
-    * rename swaps publish — I/O ∝ touched dirs, never the index.
+    * rewrites them all into a hidden stage tree, and per-dir
+    * [[DirSwap]] swaps publish — I/O ∝ touched dirs, never the index.
     * Crash-safe via [[healIvfPqIndex]] (run by every search).
     */
   def deleteFromIvfPqIndexFrame(spark: org.apache.spark.sql.SparkSession,
       root: String, idsDf: DataFrame): Unit = {
     healIvfPqIndex(spark, root)
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/pqcells"))) return
     val gen = IndexGen.begin(fs, root) // CAS baseline BEFORE observing
     val ids = idsDf.select(col("vec_id")).localCheckpoint(true)
@@ -1434,35 +1386,17 @@ object Similarity {
     val pred = byBatch.map { case (b, cs) =>
       col("batch") === b && col("cell").isin(cs: _*)
     }.reduce(_ || _)
-    val stage = new org.apache.hadoop.fs.Path(s"$root/$PqStageDir")
+    val pqcells = new org.apache.hadoop.fs.Path(s"$root/pqcells")
     spark.read.schema(pqCellsSchema).parquet(s"$root/pqcells")
       .where(pred)
       .join(broadcast(ids), Seq("vec_id"), "left_anti")
       .write.mode("overwrite").partitionBy("batch", "cell")
-      .parquet(stage.toString)
+      .parquet(DirSwap.stage(pqcells).toString)
     val lease = IndexGen.advance(fs, root, gen) // publish gate
-    touched.foreach { case (b, c) =>
-      IndexGen.checkLease(fs, root, lease) // TTL fence per swap
-      val bdir = s"$root/pqcells/batch=$b"
-      val live = new org.apache.hadoop.fs.Path(s"$bdir/cell=$c")
-      val tmp = new org.apache.hadoop.fs.Path(s"$bdir/.ivfpq_tmp_$c")
-      val old = new org.apache.hadoop.fs.Path(s"$bdir/.ivfpq_old_$c")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"batch=$b/cell=$c")
-      if (fs.exists(staged)) {
-        if (!fs.rename(staged, tmp))
-          throw new java.io.IOException(s"ivfpq delete: cannot move $staged")
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"ivfpq delete: cannot stage $live")
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"ivfpq delete: cannot publish $tmp")
-        fs.delete(old, true)
-      } else { // (batch, cell) fully emptied — retires via healable old
-        if (!fs.rename(live, old))
-          throw new java.io.IOException(s"ivfpq delete: cannot retire $live")
-        fs.delete(old, true)
-      }
-    }
-    fs.delete(stage, true)
+    // a (batch, cell) fully emptied has no staged copy and retires; the
+    // TTL fence runs before each swap
+    DirSwap.publish(fs, pqcells, touched.map { case (b, c) =>
+      s"batch=$b/cell=$c" }, () => IndexGen.checkLease(fs, root, lease))
     IndexGen.release(fs, root, lease)
   }
 
@@ -1481,7 +1415,7 @@ object Similarity {
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
     healIvfPqIndex(spark, root)
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val pq = new org.apache.hadoop.fs.Path(s"$root/pqcells")
     if (!fs.exists(pq)) return
     val gen = IndexGen.begin(fs, root) // CAS baseline BEFORE observing
@@ -1529,15 +1463,15 @@ object Similarity {
   }
 
   /** Finish or roll back interrupted PQ mutations — the IVF heal state
-    * machine on the (batch, cell) layout: a compact marker is
+    * discipline on the (batch, cell) layout: a compact marker is
     * post-publish intent (COMPLETE it), leftover stage trees are
-    * pre-publish state (roll back), per-batch tmp/old dirs heal from
-    * either side of their rename window. Idempotent; run by every
-    * search and mutation.
+    * pre-publish state (roll back), and [[DirSwap.heal]] restores a
+    * (batch, cell) caught between its two renames. Idempotent; run by
+    * every search and mutation.
     */
   def healIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val rootP = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(rootP)) return
     // live writer mid-publication: serve published state, repair nothing
@@ -1551,21 +1485,9 @@ object Similarity {
       case None =>
         fs.delete(new org.apache.hadoop.fs.Path(s"$root/$PqCompactStage"), true)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/$PqStageDir"), true)
-    val pq = new org.apache.hadoop.fs.Path(s"$root/pqcells")
-    if (!fs.exists(pq)) return
-    fs.listStatus(pq)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .foreach { bd =>
-        fs.listStatus(bd.getPath).map(_.getPath).foreach { p =>
-          val n = p.getName
-          if (n.startsWith(".ivfpq_tmp_")) {
-            val live = new org.apache.hadoop.fs.Path(bd.getPath,
-              s"cell=${n.stripPrefix(".ivfpq_tmp_")}")
-            if (fs.exists(live)) fs.delete(p, true) else fs.rename(p, live)
-          } else if (n.startsWith(".ivfpq_old_")) fs.delete(p, true)
-        }
-      }
+    val pqcells = new org.apache.hadoop.fs.Path(s"$root/pqcells")
+    DirSwap.dropStage(fs, pqcells)
+    DirSwap.heal(fs, pqcells)
   }
 
   /** Per-cell observability for the persisted PQ index — (cell,
@@ -1580,7 +1502,7 @@ object Similarity {
     val counts = spark.read.schema(pqCellsSchema).parquet(s"$root/pqcells")
       .groupBy("cell").agg(count(lit(1)).as("n_codes"),
         countDistinct("batch").as("n_batches"))
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val pq = new org.apache.hadoop.fs.Path(s"$root/pqcells")
     val bytes = fs.listStatus(pq).filter(_.isDirectory)
       .map(_.getPath).filter(_.getName.startsWith("batch="))
@@ -1704,7 +1626,7 @@ object Similarity {
 
   private def ivfPqCurrentGen(spark: org.apache.spark.sql.SparkSession,
       base: String): Long = {
-    val fs = hadoopFs(spark, base)
+    val fs = DatapointStore.fsFor(spark, base)
     val dir = new org.apache.hadoop.fs.Path(base)
     if (!fs.exists(dir)) 0L
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -1741,7 +1663,7 @@ object Similarity {
       val a = auditIvfPqIndex(spark, cur, corpus, k, nprobe, sampleBudget,
         minRecallBp, maxCellPpm).head()
       if (a.getBoolean(6)) {
-        val fs = hadoopFs(spark, base)
+        val fs = DatapointStore.fsFor(spark, base)
         val next = s"$base/gen=${gen + 1}"
         // a crashed earlier attempt leaves an unmarked half-built dir —
         // clear it or the re-encode would double its content
@@ -1847,7 +1769,7 @@ object Similarity {
     */
   def applyIvfPqBatch(spark: org.apache.spark.sql.SparkSession,
       root: String, batch: DataFrame, batchId: Long): Boolean = {
-    val fs = hadoopFs(spark, root)
+    val fs = DatapointStore.fsFor(spark, root)
     val rootP = new org.apache.hadoop.fs.Path(root)
     healIvfPqIndex(spark, root) // complete/roll back a crashed mutation
     // gen read BEFORE observing any state (the documented CAS

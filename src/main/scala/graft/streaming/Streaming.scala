@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
   ValueState}
 
+import graft.core.{DatapointStore, DirSwap}
 import graft.model.Granularity
 import graft.operators.Downsample
 
@@ -1248,7 +1249,7 @@ object Streaming {
                 sinceCompact.incrementAndGet() >= compactEvery) {
               sinceCompact.set(0)
               // lenient: a maintenance-only rename failure must not fail
-              // the data micro-batch (recoverParts heals at next read)
+              // the data micro-batch (a skipped leaf is put back at once)
               store.compactStore(lenient = true)
             }
           }
@@ -1326,36 +1327,27 @@ object Streaming {
       .dropDuplicatesWithinWatermark("content_hash")
   }
 
-  /** Resolve a streaming-dedup state subdirectory for reading: the live
-    * dir, or the `.compact_old` backup a crashed [[compactDedupState]]
-    * swap left behind, or empty. Rows of batches >= `maxBatchExclusive`
-    * are filtered out (re-delivery: a batch must not see its own earlier
-    * write); the compacted base partition (batch_id = -1) survives every
-    * filter because -1 < any real batch id.
+  /** Resolve a streaming-dedup state subdirectory for reading, after
+    * healing its state dir (a sub a crashed [[compactDedupState]] left
+    * in the backup is restored), or empty. Rows of batches >=
+    * `maxBatchExclusive` are filtered out (re-delivery: a batch must not
+    * see its own earlier write); the compacted base partition
+    * (batch_id = -1) survives every filter because -1 < any real batch
+    * id.
     */
-  private def stateFs(s: SparkSession,
-      dir: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
   private def stateOrEmpty(s: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
       maxBatchExclusive: Long): DataFrame = {
     // Hadoop FS, never java.io.File: a File check is silently FALSE on
     // any non-local FS, and "no state yet" here would re-admit every
     // duplicate (the worst failure mode of this lane — silent)
-    val fs = stateFs(s, dir)
+    val fs = DatapointStore.fsFor(s, dir)
     val live = new org.apache.hadoop.fs.Path(dir)
-    val bak = new org.apache.hadoop.fs.Path(s"$dir.compact_old")
-    val src = if (fs.exists(live)) Some(dir)
-      else if (fs.exists(bak)) Some(bak.toString)
-      else None
-    src match {
-      case Some(p) => s.read.schema(schema).parquet(p)
-        .where(col("batch_id") < maxBatchExclusive)
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    DirSwap.heal(fs, live.getParent)
+    if (fs.exists(live)) s.read.schema(schema).parquet(dir)
+      .where(col("batch_id") < maxBatchExclusive)
+    else s.createDataFrame(
+      s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** Compact the per-batch state partitions of a streaming-dedup query
@@ -1378,49 +1370,30 @@ object Streaming {
     * it). The default (MaxValue) is the original stopped-query fold-all.
     * Re-compacting at the same horizon is idempotent.
     *
-    * Crash safety (unchanged): the new layout is fully written to
-    * `<sub>.compact_tmp` first, then the live dir swaps away to
-    * `<sub>.compact_old`, the tmp promotes, and the backup is deleted. A
-    * crash at any point leaves either the live dir or the backup intact —
-    * readers fall back to `.compact_old` when the live dir is missing,
-    * and the next compactDedupState call heals the half-swap before
-    * re-compacting.
+    * Crash safety: every sub is rewritten into the state dir's stage,
+    * then the subs [[DirSwap.publish]] together — each sub reads wholly
+    * old or wholly new at every crash point, and readers and the next
+    * compaction heal a half-swap first.
     */
   def compactDedupState(s: SparkSession, stateDir: String,
       keepSince: Long = Long.MaxValue): Unit = {
-    val fs = stateFs(s, stateDir)
+    val fs = DatapointStore.fsFor(s, stateDir)
     val root = new org.apache.hadoop.fs.Path(stateDir)
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) return
-    // discover subs from live dirs AND orphaned .compact_old backups — a
-    // crash between the two swap renames leaves ONLY the backup, which
-    // must still be found so the heal below can promote it
+    DirSwap.heal(fs, root)
+    DirSwap.dropStage(fs, root) // an incomplete write from a crash
     val subs = fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filterNot(_.endsWith(".compact_tmp"))
-      .map(_.stripSuffix(".compact_old"))
-      .distinct
-      .map(n => new org.apache.hadoop.fs.Path(root, n))
+      .map(_.getPath.getName).toSeq
     subs.foreach { sub =>
-      val tmp = new org.apache.hadoop.fs.Path(s"$sub.compact_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$sub.compact_old")
-      // heal a half-swap: promote the backup if the live dir vanished,
-      // drop an incomplete tmp from a crashed write
-      if (!fs.exists(sub) && fs.exists(old) && !fs.rename(old, sub))
-        throw new java.io.IOException(s"cannot heal $old")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(old)) fs.delete(old, true)
-      s.read.parquet(sub.toString)
+      s.read.parquet(new org.apache.hadoop.fs.Path(root, sub).toString)
         .withColumn("batch_id",
           when(col("batch_id").cast("long") < keepSince, lit(-1L))
             .otherwise(col("batch_id").cast("long")))
         .write.partitionBy("batch_id").mode("overwrite")
-        .parquet(tmp.toString)
-      if (!fs.rename(sub, old))
-        throw new java.io.IOException(s"cannot back up $sub")
-      if (!fs.rename(tmp, sub))
-        throw new java.io.IOException(s"cannot promote $tmp")
-      fs.delete(old, true)
+        .parquet(new org.apache.hadoop.fs.Path(DirSwap.stage(root), sub)
+          .toString)
     }
+    DirSwap.publish(fs, root, subs)
   }
 
   /** Streaming SEMANTIC dedup — [[graft.operators.Similarity.semDedup]]'s

@@ -62,6 +62,32 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"stale rows-only entries: ${rowsOnly -- unoracled}")
   }
 
+  test("directory renames live only in DirSwap and the single-path publishes") {
+    // every crash-safe directory swap goes through graft.core.DirSwap;
+    // the others are one-path publishes (the coverage marker, the BM25
+    // delete intent, the PQ compaction's marker-committed stage) and
+    // Bpe's session-scratch table, which needs no crash safety. A new
+    // hand-rolled swap fails here: route it through DirSwap instead.
+    val allowed = Map(
+      "core/Datastream.scala" -> 1, "operators/Retrieval.scala" -> 1,
+      "operators/Similarity.scala" -> 1, "operators/Bpe.scala" -> 1)
+    val base = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(base), s"no sources at $base")
+    val found = java.nio.file.Files.walk(base).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map { f =>
+        // ISO-8859-1: Bpe.scala carries raw control bytes
+        val text = new String(java.nio.file.Files.readAllBytes(f),
+          java.nio.charset.StandardCharsets.ISO_8859_1)
+        base.relativize(f).toString -> (text.split(
+          java.util.regex.Pattern.quote(".rename("), -1).length - 1)
+      }.filter(_._2 > 0).toMap
+    assert(found.getOrElse("core/DirSwap.scala", 0) > 0)
+    assert(found - "core/DirSwap.scala" == allowed,
+      s"rename sites outside DirSwap: $found")
+  }
+
   test("registry construction rejects duplicate keys (no silent last-wins)") {
     // The one gate list builds via distinctToMap from a Seq of pairs — a
     // Map literal with a repeated key silently last-wins and LOSES a gate

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.core.{Datastream, DatapointStore}
+import graft.core.{Datastream, DatapointStore, DirSwap}
 import graft.model._
 
 /** t1-style integration suite over the full API surface (SURVEY §2.1 A1–A11
@@ -19,6 +19,10 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = graft.obs.GraftSession.local(4)
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** Local file of a [[DirSwap]] path helper (stage, backup, backupOf). */
+  def local(p: org.apache.hadoop.fs.Path): java.io.File =
+    new java.io.File(p.toUri.getPath)
 
   def freshDs(): Datastream =
     new Datastream(spark, Files.createTempDirectory("graft-test").toString)
@@ -481,25 +485,20 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val drvRows = rows(drv)
     assert(srcRows.size == 3 && drvRows.size == 2)
 
-    // a compaction crashed between swinging a derived leaf aside and
-    // swinging its replacement in: the leaf sits only in the backup tree
+    // a compaction crashed between moving a derived leaf into the backup
+    // and moving its replacement in: the leaf sits only in the backup
     val rawRoot = s"$root/derived_raw"
+    val rawTable = new org.apache.hadoop.fs.Path(rawRoot)
     val leaf = new java.io.File(s"$rawRoot/stream_id=$drv/granularity=seconds")
       .listFiles().filter(_.getName.startsWith("ymd=")).head
     val rel = s"stream_id=$drv/granularity=seconds/${leaf.getName}"
-    val bak = new java.io.File(s"$rawRoot.graft-parts-bak/$rel")
+    val bak = local(DirSwap.backupOf(rawTable, rel))
     bak.getParentFile.mkdirs()
     assert(leaf.renameTo(bak))
     assert(rows(drv) == drvRows, "stranded derived leaf served as a hole")
     assert(new java.io.File(s"$rawRoot/$rel").isDirectory)
-    assert(!new java.io.File(s"$rawRoot.graft-parts-bak").exists())
-
-    // a primary-root replace crashed between its two renames: only
-    // `<root>.graft-old` is left
-    val dp = new java.io.File(s"$root/datapoints")
-    assert(dp.renameTo(new java.io.File(s"$root/datapoints.graft-old")))
-    assert(rows(src) == srcRows, "stranded primary root served as empty")
-    assert(dp.isDirectory && !new java.io.File(s"$root/datapoints.graft-old").exists())
+    assert(!local(DirSwap.backup(rawTable)).exists())
+    assert(rows(src) == srcRows)
   }
 
   test("null values: ignored by value downsamplers, counted out of count") {
@@ -1262,14 +1261,15 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toSeq).toSeq == dataBefore)
     assert(ds.getData(drv, Granularity.Seconds)
       .orderBy("t").collect().map(_.toSeq).toSeq == drvBefore)
-    // crash heal: strand a leaf in the backup tree (the mid-swap window)
-    // — the next read must restore it, not serve a hole
-    val bakLeaf = new java.io.File(s"$dpRoot.graft-parts-bak/$day1")
+    // crash heal: strand a leaf in the backup (the mid-swap window) —
+    // the next read must restore it, not serve a hole
+    val dpTable = new org.apache.hadoop.fs.Path(dpRoot)
+    val bakLeaf = local(DirSwap.backupOf(dpTable, day1.stripPrefix("/")))
     bakLeaf.getParentFile.mkdirs()
     assert(new java.io.File(s"$dpRoot/$day1").renameTo(bakLeaf))
     assert(ds.datapoints.orderBy("granularity", "t", "stream_id")
       .collect().map(_.toSeq).toSeq == dataBefore)
-    assert(!new java.io.File(s"$dpRoot.graft-parts-bak").exists())
+    assert(!local(DirSwap.backup(dpTable)).exists())
   }
 
   test("duplicate-timestamp data: incremental derive == full recompute") {
@@ -1447,20 +1447,24 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("crash between shard rename-aside and swap-in falls back per shard") {
+  test("crash between a shard's move into the backup and its swap-in heals at open") {
     val root = Files.createTempDirectory("graft-shard-crash").toString
     val ds = new Datastream(spark, root)
     val ids = (1 to 10).map(i => ds.ensureStream(Map("name" -> s"cr$i")))
     ds.flush()
     val streamsDir = new java.io.File(s"$root/streams")
-    // simulate the crash window: one shard renamed aside, tmp never moved in
+    val table = new org.apache.hadoop.fs.Path(streamsDir.toString)
+    // simulate the crash window: one shard in the backup, its new copy
+    // never moved in
     val shard = Option(streamsDir.listFiles()).get
       .filter(f => f.isDirectory && f.getName.startsWith("shard=")).head
-    assert(shard.renameTo(
-      new java.io.File(streamsDir, s".old_${shard.getName}")))
+    val bak = local(DirSwap.backupOf(table, shard.getName))
+    bak.getParentFile.mkdirs()
+    assert(shard.renameTo(bak))
     val d2 = new Datastream(spark, root)
-    assert(d2.streams.count() == 10, "backup shard must be read in place")
+    assert(d2.streams.count() == 10, "backed-up shard must be restored")
     ids.foreach(id => assert(d2.getTags(id).nonEmpty))
+    assert(shard.isDirectory && !local(DirSwap.backup(table)).exists())
   }
 
   override def afterAll(): Unit = spark.stop()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.core.DirSwap
 import graft.gates.Fixtures
 import graft.operators.{Dedup, Multimodal, Similarity, TextStats}
 
@@ -2059,10 +2060,12 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // staged-dir guard (r13): hidden pre-publish trees from the delete/
     // compact lanes must never reach a search — partition discovery
     // skips dot-prefixed dirs AND the search's heal rolls them back
+    val pqStage = DirSwap.stage(new org.apache.hadoop.fs.Path(s"$root/pqcells"))
     spark.range(1).select(lit(424242L).as("vec_id"),
-        typedLit(Seq.fill(16)(7)).as("codes"), lit(0L).as("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/.ivfpq_stage")
+        typedLit(Seq.fill(16)(7)).as("codes"), lit(0L).as("batch"),
+        lit(0L).as("cell"))
+      .write.mode("overwrite").partitionBy("batch", "cell")
+      .parquet(pqStage.toString)
     spark.range(1).select(lit(424243L).as("vec_id"),
         typedLit(Seq.fill(16)(7)).as("codes"), lit(0L).as("cell"))
       .write.mode("overwrite").partitionBy("cell")
@@ -2072,7 +2075,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toSet == before, "staged trees leaked into a search")
     val sfs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!sfs.exists(new org.apache.hadoop.fs.Path(s"$root/.ivfpq_stage")) &&
+    assert(!sfs.exists(pqStage) &&
       !sfs.exists(new org.apache.hadoop.fs.Path(s"$root/.ivfpq_cstage")),
       "the search's heal must roll back bare stage trees")
     // demolition: delete every cell dir whose content the answer does
@@ -3286,23 +3289,23 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
       .sortBy(_.getName)
     val Array(c0, c1, c2, _*) = cells
-    // crash state 1: tmp written but live never staged away — tmp may be
+    val table = new org.apache.hadoop.fs.Path(s"$root/cells")
+    def local(p: org.apache.hadoop.fs.Path) = new java.io.File(p.toUri.getPath)
+    // crash state 1: a staged rewrite never published — it may be
     // incomplete and must be DROPPED (live copy stays authoritative)
-    val tmp0 = new java.io.File(c0.getParent,
-      s".ivf_tmp_${c0.getName.stripPrefix("cell=")}")
-    tmp0.mkdirs() // an empty (incomplete) rewrite attempt
-    // crash state 2: live staged to old, tmp complete but unpublished —
-    // tmp must be PUBLISHED (it is the post-delete truth). Simulate a
-    // delete-nothing rewrite: the cell content itself stands in for tmp.
-    val id1 = c1.getName.stripPrefix("cell=")
-    val tmp1 = new java.io.File(c1.getParent, s".ivf_tmp_$id1")
-    assert(c1.renameTo(tmp1))
-    // crash state 3: published but old not yet dropped — old must go
-    val id2 = c2.getName.stripPrefix("cell=")
-    val old2 = new java.io.File(c2.getParent, s".ivf_old_$id2")
-    old2.mkdirs()
+    val stage0 = new java.io.File(local(DirSwap.stage(table)), c0.getName)
+    stage0.mkdirs() // an empty (incomplete) rewrite attempt
+    // crash state 2: live moved into the backup, the new copy never
+    // moved in — the backup must be RESTORED (the swap rolls back)
+    val bak1 = local(DirSwap.backupOf(table, c1.getName))
+    bak1.getParentFile.mkdirs()
+    assert(c1.renameTo(bak1))
+    // crash state 3: published but the backup not yet dropped — it must go
+    val bak2 = local(DirSwap.backupOf(table, c2.getName))
+    bak2.mkdirs()
     assert(searchTriples(root, q) == want, "heal-on-read changed results")
-    assert(!tmp0.exists() && !tmp1.exists() && !old2.exists() && c1.exists(),
+    assert(!local(DirSwap.stage(table)).exists() &&
+      !local(DirSwap.backup(table)).exists() && c1.exists() && c2.exists(),
       "heal left swap debris behind")
   }
 
@@ -3652,7 +3655,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sky == want, s"got $sky want $want")
   }
 
-  test("bm25 deleteFromIndex: post-delete search == fresh build; heal publishes an interrupted swap") {
+  test("bm25 deleteFromIndex: post-delete search == fresh build; heal restores an interrupted swap") {
     import spark.implicits._
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").where(col("doc_id") < 60)
@@ -3680,17 +3683,18 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("doc_id", "tok", "tf")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(posts(rootA) == posts(rootB))
-    // interrupted swap: live staged away, tmp complete → heal publishes
+    // interrupted swap: live moved into the backup, the new copy never
+    // moved in → heal restores it
     val fs = new org.apache.hadoop.fs.Path(rootA)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val buckets = fs.listStatus(new org.apache.hadoop.fs.Path(
-      s"$rootA/postings")).map(_.getPath).filter(_.getName.startsWith("bucket="))
-    val victim = buckets.head
-    val tag = victim.getName.stripPrefix("bucket=")
-    assert(fs.rename(victim, new org.apache.hadoop.fs.Path(
-      victim.getParent, s".bm25_tmp_$tag")))
+    val postings = new org.apache.hadoop.fs.Path(s"$rootA/postings")
+    val victim = fs.listStatus(postings).map(_.getPath)
+      .filter(_.getName.startsWith("bucket=")).head
+    fs.mkdirs(DirSwap.backup(postings))
+    assert(fs.rename(victim, DirSwap.backupOf(postings, victim.getName)))
     assert(search(rootA) == search(rootB),
-      "search must heal-publish the staged bucket before reading")
+      "search must restore the backed-up bucket before reading")
+    assert(fs.exists(victim) && !fs.exists(DirSwap.backup(postings)))
   }
 
   test("bm25 doclens delete rewrites only touched buckets; heal completes a crashed delete") {
@@ -3852,7 +3856,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // B reaches its publish gate with hidden stage output only — the
     // exact call deleteFromIvfIndexFrame/compactIvfIndex make before
     // their first destructive rename — and must raise, not last-wins
-    val orphanStage = new java.io.File(s"$root/.ivf_stage/cell=0")
+    val ivfStage = DirSwap.stage(new org.apache.hadoop.fs.Path(s"$root/cells"))
+    val orphanStage = new java.io.File(s"${ivfStage.toUri.getPath}/cell=0")
     orphanStage.mkdirs()
     intercept[graft.model.ConcurrentCommit] {
       graft.operators.IndexGen.advance(fs, root, bBaseline)
@@ -3860,7 +3865,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the loser's pre-publish state heals away; the index reads whole:
     // exactly A's delete applied, nothing lost
     graft.operators.Similarity.healIvfIndex(spark, root)
-    assert(!new java.io.File(s"$root/.ivf_stage").exists())
+    assert(!new java.io.File(ivfStage.toUri.getPath).exists())
     val left = spark.read.parquet(s"$root/cells")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(left == (0L until 150L).toSet -- Set(3L, 9L))
@@ -3981,17 +3986,18 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val published = search()
     // writer A mid-publication: a REAL staged rewrite of vec 9's home
     // cell (minus vec 9) sits in the stage tree, lease held — exactly
-    // the on-disk state between advance() and publishStagedCells()
+    // the on-disk state between advance() and the DirSwap.publish
     val homeCell = spark.read.parquet(s"$root/cells")
       .where(col("vec_id") === 9L).select(col("cell").cast("long"))
       .head().getLong(0)
+    val cellsTable = new org.apache.hadoop.fs.Path(s"$root/cells")
     spark.read.parquet(s"$root/cells")
       .where(col("cell").cast("long") === homeCell &&
         col("vec_id") =!= 9L)
       .select(col("vec_id"), col("emb"), col("norm"),
         col("cell").cast("long").as("cell"))
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$root/.ivf_stage")
+      .parquet(DirSwap.stage(cellsTable).toString)
     val g = graft.operators.IndexGen.current(fs, root)
     val lease = s"_idx_lease_${g + 1}_${System.currentTimeMillis() + 600000}_t"
     fs.create(new org.apache.hadoop.fs.Path(root, lease), true).close()
@@ -4000,18 +4006,13 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pre-r14 the heal-on-read here destroyed the publication
     assert(search() == published,
       "reader under a live lease must serve the published generation")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/.ivf_stage")),
+    assert(fs.exists(DirSwap.stage(cellsTable)),
       "reader must not repair a leased root's stage tree")
-    // writer A completes its publication (the publishStagedCells renames)
-    val staged = new org.apache.hadoop.fs.Path(
-      s"$root/.ivf_stage/cell=$homeCell")
-    val live = new org.apache.hadoop.fs.Path(s"$root/cells/cell=$homeCell")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/cells/.ivf_tmp_$homeCell")
-    val old = new org.apache.hadoop.fs.Path(s"$root/cells/.ivf_old_$homeCell")
-    assert(fs.rename(staged, tmp) && fs.rename(live, old) &&
-      fs.rename(tmp, live))
-    fs.delete(old, true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/.ivf_stage"), true)
+    // writer A completes its publication (the delete's DirSwap.publish)
+    DirSwap.publish(fs, cellsTable, Seq(s"cell=$homeCell"),
+      () => graft.operators.IndexGen.checkLease(fs, root, lease))
+    assert(!fs.exists(DirSwap.stage(cellsTable)) &&
+      !fs.exists(DirSwap.backup(cellsTable)))
     graft.operators.IndexGen.release(fs, root, lease)
     // publication landed intact: vec 9 gone, everything else served
     val after = search()
@@ -4717,7 +4718,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(posts() == pBefore, "compaction must not change postings")
   }
 
-  test("ivfpq delete: post-delete search == fresh index on survivors; heal publishes an interrupted swap and rolls back a pre-publish stage") {
+  test("ivfpq delete: post-delete search == fresh index on survivors; heal restores an interrupted swap and rolls back a pre-publish stage") {
     import spark.implicits._
     val S = graft.operators.Similarity
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -4747,26 +4748,29 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"$rootA/pqcells")
       .where(col("vec_id") >= 100000L).count() == 0,
       "deleted codes must be purged from every (batch, cell) dir")
-    // interrupted swap: a cell staged away with its tmp complete — the
-    // next search must heal-publish it
+    // interrupted swap: a (batch, cell) moved into the backup, its new
+    // copy never moved in — the next search must restore it
     val fs = new org.apache.hadoop.fs.Path(rootA)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bdir = fs.listStatus(new org.apache.hadoop.fs.Path(s"$rootA/pqcells"))
+    val pqcells = new org.apache.hadoop.fs.Path(s"$rootA/pqcells")
+    val bdir = fs.listStatus(pqcells)
       .map(_.getPath).filter(_.getName.startsWith("batch=")).head
     val victim = fs.listStatus(bdir).map(_.getPath)
       .filter(_.getName.startsWith("cell=")).head
-    val tag = victim.getName.stripPrefix("cell=")
-    assert(fs.rename(victim,
-      new org.apache.hadoop.fs.Path(bdir, s".ivfpq_tmp_$tag")))
+    fs.mkdirs(DirSwap.backup(pqcells))
+    assert(fs.rename(victim, DirSwap.backupOf(pqcells,
+      s"${bdir.getName}/${victim.getName}")))
     assert(search(rootA) == search(rootB),
-      "search must heal-publish the staged PQ cell before reading")
+      "search must restore the backed-up PQ cell before reading")
+    assert(fs.exists(victim) && !fs.exists(DirSwap.backup(pqcells)))
     // pre-publish stage tree (no marker): heal must roll it back
     spark.range(1).select(lit(999999L).as("vec_id"),
-        typedLit(Seq.fill(16)(0)).as("codes"), lit(0L).as("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$rootA/.ivfpq_stage")
+        typedLit(Seq.fill(16)(0)).as("codes"), lit(0L).as("batch"),
+        lit(0L).as("cell"))
+      .write.mode("overwrite").partitionBy("batch", "cell")
+      .parquet(DirSwap.stage(pqcells).toString)
     S.healIvfPqIndex(spark, rootA)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$rootA/.ivfpq_stage")))
+    assert(!fs.exists(DirSwap.stage(pqcells)))
     assert(search(rootA) == search(rootB))
   }
 

@@ -1200,11 +1200,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val survivors = spark.read.parquet(s"$work/out_g2")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(4L), survivors)
-    // crash heal: live dir swapped away, only the backup remains — the
-    // reader and the next compaction must both recover it
+    // crash heal: live dir moved into the backup, its new copy never
+    // moved in — the next compaction must restore it first
     val docs = new java.io.File(s"$work/state/docs")
-    assert(docs.renameTo(new java.io.File(s"$work/state/docs.compact_old")))
+    val state = new org.apache.hadoop.fs.Path(s"$work/state")
+    val bak = new java.io.File(
+      graft.core.DirSwap.backupOf(state, "docs").toUri.getPath)
+    bak.getParentFile.mkdirs()
+    assert(docs.renameTo(bak))
     Streaming.compactDedupState(spark, s"$work/state")
+    assert(!new java.io.File(
+      graft.core.DirSwap.backup(state).toUri.getPath).exists())
     assert(parts("docs") == Set("batch_id=-1"))
     assert(spark.read.parquet(s"$work/state/docs")
       .select("doc_id").collect().map(_.getLong(0)).toSet ==
