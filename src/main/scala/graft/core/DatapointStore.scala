@@ -116,6 +116,29 @@ object DatapointStore {
   def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
     scan(spark, root, dirs).getOrElse(empty(spark))
 
+  /** Day keys `K` of the `ymd=K` directories directly under `dir` (a
+    * granularity directory of store `root`) with `lo <= K <= hi`, either
+    * bound open when None, ascending; none when `dir` does not exist. One
+    * driver-side listing after the root's [[DirSwap.heal]], so a day
+    * stranded in the backup by a crashed publish is listed. Reads name
+    * these days instead of `dir`: Spark lists a directory with more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * children through a distributed job.
+    */
+  def days(spark: SparkSession, root: String, dir: String,
+      lo: Option[String], hi: Option[String]): Seq[String] = {
+    val fs = fsFor(spark, root)
+    DirSwap.heal(fs, new Path(root))
+    val d = new Path(dir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).toSeq
+      .collect { case st if st.isDirectory => st.getPath.getName }
+      .filter(_.startsWith("ymd="))
+      .map(_.stripPrefix("ymd="))
+      .filter(k => lo.forall(k >= _) && hi.forall(k <= _))
+      .sorted
+  }
+
   /** [[read]], or None when none of `dirs` exists. */
   private[graft] def scan(spark: SparkSession, root: String,
       dirs: Seq[String]): Option[DataFrame] = {

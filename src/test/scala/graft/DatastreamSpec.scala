@@ -353,9 +353,33 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("granularity") === "minutes").collect()
     assert(minuteRows.length == 1 &&
       minuteRows.head.getLong(minuteRows.head.fieldIndex("c")) == 2)
-    // lazy cursor (toLocalIterator-backed)
+    // lazy cursor
     val it = ds.getDataIterator(id, Granularity.Seconds)
     assert(it.hasNext && it.next().getString(2) == g1)
+
+    // a 3-day seconds stream pages one day at a time: complete, in order
+    // both ways, and the first page reads only its own day's leaf
+    val num = ds.ensureStream(Map("name" -> "cursor-3d"))
+    val pts = for (d <- 1 to 3; h <- Seq(0, 8, 16))
+      yield (num, ts(f"2024-01-0$d%d $h%02d:00:00"), (d * 100 + h).toDouble)
+    ds.appendMultiple(pts.toDF("stream_id", "t", "v"))
+    import scala.jdk.CollectionConverters._
+    def cursor(reverse: Boolean) =
+      ds.getDataIterator(num, Granularity.Seconds, reverse = reverse)
+    val asc = pts.map(p => (p._2, p._3))
+    assert(cursor(false).asScala.map(r => (r.getTimestamp(0), r.getDouble(1)))
+      .toSeq == asc)
+    assert(cursor(true).asScala.map(r => (r.getTimestamp(0), r.getDouble(1)))
+      .toSeq == asc.reverse)
+    def leafRows(day: String) = ds.datapoints.where(col("granularity") ===
+      "seconds" && col("ymd") === DatapointStore.ymdKey(ts(day))).count()
+    for ((reverse, day, first) <- Seq((false, "2024-01-01 00:00:00", 100.0),
+        (true, "2024-01-03 00:00:00", 316.0))) {
+      val (row, read) = graft.obs.Meter.measure(spark)(cursor(reverse).next())
+      assert(row.getDouble(1) == first)
+      assert(read.recordsRead > 0 && read.recordsRead <= leafRows(day),
+        s"first page read ${read.recordsRead} records")
+    }
   }
 
   test("downsample filter_stream predicate skips non-matching streams (A10)") {
@@ -415,7 +439,8 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("getData above the 32-path listing threshold: one partition directory, zero listing jobs, same rows as the unified scan") {
     import spark.implicits._
-    val ds = freshDs()
+    val root = Files.createTempDirectory("graft-test").toString
+    val ds = new Datastream(spark, root)
     val src = ds.ensureStream(Map("name" -> "lsrc"))
     val other = ds.ensureStream(Map("name" -> "lother"))
     // 34 derived streams: each derived root then holds more stream
@@ -429,38 +454,100 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, k) <- Seq(src -> 1.0, other -> 3.0); d <- Seq(1, 2); h <- 0 until 24
       m <- Seq(0, 30)
     } yield (id, ts(f"2024-01-0$d%d $h%02d:$m%02d:00"), k * (d * 100 + h) + m)
-    ds.appendMultiple(pts.toDF("stream_id", "t", "v"))
+    // two appends (and ladder runs) that split 2024-01-01, no compaction:
+    // that day's leaves hold two files each
+    val cut = ts("2024-01-01 12:00:00")
+    val (early, late) = pts.partition(_._2.before(cut))
+    ds.appendMultiple(early.toDF("stream_id", "t", "v"))
+    ds.downsampleStreams(cut)
+    ds.appendMultiple(late.toDF("stream_id", "t", "v"))
     ds.downsampleStreams(ts("2024-01-03 00:00:00"))
+    val day1 = DatapointStore.ymdKey(ts("2024-01-01 00:00:00"))
+    for (g <- Seq("seconds", "hours")) {
+      val leaf = new java.io.File(s"$root/datapoints/granularity=$g/ymd=$day1")
+      assert(leaf.list().count(_.endsWith(".parquet")) >= 2,
+        s"$leaf holds one file; the multi-file case is not engaged")
+    }
     // engaged: the unified scan lists each derived root through a job
     val (_, unified) = listingJobs(ds.datapoints.count())
     assert(unified.nonEmpty,
       "store is below the listing threshold; the pin is not engaged")
+    val stored = ds.datapoints.cache()
 
+    // the windows' bounds fall on stored rows, so exclusivity drops some
     val lo = ts("2024-01-01 06:00:00")
     val hi = ts("2024-01-02 03:00:00")
     val vds = Seq("count", "sum", "min", "max")
     for {
       id <- Seq(src, drv.head, drv.last)
       g <- Seq(Granularity.Seconds, Granularity.Hours)
-      (start, end) <- Seq((None, None), (Some(lo), Some(hi)))
+      (start, end, sx, ex) <- Seq((None, None, false, false),
+        (Some(lo), Some(hi), false, false), (Some(lo), Some(hi), true, true),
+        (Some(lo), None, true, false))
+      reverse <- Seq(false, true)
     } {
       val raw = g == Granularity.Seconds
       val (got, jobs) = listingJobs(ds.getData(id, g, start = start, end = end,
+          startExclusive = sx, endExclusive = ex, reverse = reverse,
           valueDownsamplers = if (raw) None else Some(vds),
           timeDownsamplers = if (raw) None else Some(Seq("first")))
         .collect().map(_.toSeq).toSeq)
       assert(jobs.isEmpty, s"getData($id, ${g.name}) listed: $jobs")
-      val window = ds.datapoints.where(col("granularity") === g.name &&
+      val window = stored.where(col("granularity") === g.name &&
         col("stream_id") === id &&
-        start.fold(lit(true))(s => col("t") >= s) &&
-        end.fold(lit(true))(e => col("t") <= e))
+        start.fold(lit(true))(s => if (sx) col("t") > s else col("t") >= s) &&
+        end.fold(lit(true))(e => if (ex) col("t") < e else col("t") <= e))
       val cols =
         if (raw) Seq(col("t"), col("v_num"), col("v_json"))
         else col("t") +: vds.map(n => col(Downsamplers.value(n))) :+ col("t_first")
-      val want = window.select(cols: _*).orderBy("t").collect().map(_.toSeq).toSeq
+      val want = window.select(cols: _*)
+        .orderBy(if (reverse) col("t").desc else col("t"))
+        .collect().map(_.toSeq).toSeq
       assert(want.nonEmpty, s"no fixture rows for $id at ${g.name}")
-      assert(got == want, s"getData($id, ${g.name}, $start, $end) differs")
+      assert(want.map(_.head).distinct.size == want.size, "t is not unique")
+      assert(got == want,
+        s"getData($id, ${g.name}, $start, $end, $sx, $ex, $reverse) differs")
     }
+    stored.unpersist()
+  }
+
+  test("getData prunes ymd= days by its window: zero listing jobs over a 40-day directory, at most 2 jobs, no range partitioning") {
+    import spark.implicits._
+    val ds = freshDs()
+    val a = ds.ensureStream(Map("name" -> "days-a"))
+    val b = ds.ensureStream(Map("name" -> "days-b"))
+    // one append per stream over the same 40 days: every ymd= leaf of the
+    // seconds directory holds two files
+    val days = 0 until 40
+    def at(d: Int, h: Int) =
+      new Timestamp(ts("2024-01-01 00:00:00").getTime + d * 86400000L + h * 3600000L)
+    for ((id, k) <- Seq(a -> 1.0, b -> 2.0))
+      ds.appendMultiple(days.flatMap(d => Seq(6, 18).map(h => (id, at(d, h), k * d + h)))
+        .toDF("stream_id", "t", "v"))
+    // engaged: the whole directory lists through a job
+    val (_, whole) = listingJobs(ds.getData(a, Granularity.Seconds).collect())
+    assert(whole.nonEmpty, "directory is below the listing threshold")
+
+    def want(id: String, lo: Timestamp, hi: Timestamp) = ds.datapoints
+      .where(col("granularity") === "seconds" && col("stream_id") === id &&
+        col("t") >= lo && col("t") <= hi)
+      .select(col("t"), col("v_num"), col("v_json")).orderBy("t")
+      .collect().map(_.toSeq).toSeq
+    val (oneDay, listed) = listingJobs(ds.getData(a, Granularity.Seconds,
+      start = Some(at(20, 0)), end = Some(at(20, 23))).collect().map(_.toSeq).toSeq)
+    assert(listed.isEmpty, s"a one-day window listed: $listed")
+    assert(oneDay.size == 2 && oneDay == want(a, at(20, 0), at(20, 23)))
+
+    // a several-day window over two-file leaves: no sampling job and no
+    // range-partitioning exchange, the scan job and the result job at most
+    val df = ds.getData(b, Granularity.Seconds,
+      start = Some(at(10, 0)), end = Some(at(12, 23)))
+    val (rows, read) = graft.obs.Meter.measure(spark)(df.collect())
+    assert(rows.map(_.toSeq).toSeq == want(b, at(10, 0), at(12, 23)) &&
+      rows.length == 6)
+    assert(read.jobs <= 2, read.sites)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
   }
 
   test("routed reads heal stranded crash backups; a granularity with no directory reads empty") {
