@@ -116,27 +116,28 @@ object DatapointStore {
   def read(spark: SparkSession, root: String, dirs: Seq[String]): DataFrame =
     scan(spark, root, dirs).getOrElse(empty(spark))
 
-  /** Day keys `K` of the `ymd=K` directories directly under `dir` (a
-    * granularity directory of store `root`) with `lo <= K <= hi`, either
-    * bound open when None, ascending; none when `dir` does not exist. One
-    * driver-side listing after the root's [[DirSwap.heal]], so a day
-    * stranded in the backup by a crashed publish is listed. Reads name
-    * these days instead of `dir`: Spark lists a directory with more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
-    * children through a distributed job.
+  /** The `ymd=K` day directories of granularity directory `dir` (of store
+    * `root`) with `lo <= K <= hi`, either bound open when None, read as
+    * [[read]] does; [[empty]] when there are none or `dir` does not exist.
+    * One heal of the root and one driver-side listing of `dir`: the read
+    * names the listed days instead of `dir`, so Spark neither lists a
+    * directory with more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) children
+    * through a distributed job nor scans the days outside the window, and
+    * a day just listed needs no existence probe.
     */
-  def days(spark: SparkSession, root: String, dir: String,
-      lo: Option[String], hi: Option[String]): Seq[String] = {
+  def readDays(spark: SparkSession, root: String, dir: String,
+      lo: Option[String], hi: Option[String]): DataFrame = {
     val fs = fsFor(spark, root)
     DirSwap.heal(fs, new Path(root))
-    val d = new Path(dir)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq
-      .collect { case st if st.isDirectory => st.getPath.getName }
-      .filter(_.startsWith("ymd="))
-      .map(_.stripPrefix("ymd="))
-      .filter(k => lo.forall(k >= _) && hi.forall(k <= _))
-      .sorted
+    val listed = try fs.listStatus(new Path(dir)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val days = listed.map(_.getPath.getName)
+      .filter(n => n.startsWith("ymd=") && {
+        val k = n.stripPrefix("ymd=")
+        lo.forall(k >= _) && hi.forall(k <= _)
+      })
+    if (days.isEmpty) empty(spark) else load(spark, root, days.map(n => s"$dir/$n"))
   }
 
   /** [[read]], or None when none of `dirs` exists. */
@@ -146,10 +147,12 @@ object DatapointStore {
     // heal only: a stage tree may belong to a compaction about to publish
     DirSwap.heal(fs, new Path(root))
     val present = dirs.distinct.filter(d => fs.exists(new Path(d)))
-    if (present.isEmpty) None
-    else Some(spark.read.option("basePath", root).schema(schema)
-      .parquet(present: _*))
+    if (present.isEmpty) None else Some(load(spark, root, present))
   }
+
+  private def load(spark: SparkSession, root: String,
+      dirs: Seq[String]): DataFrame =
+    spark.read.option("basePath", root).schema(schema).parquet(dirs: _*)
 
   def append(df: DataFrame, path: String): Unit =
     // repartition on the partition keys first: one task per output

@@ -3,7 +3,7 @@ package graft.core
 import java.sql.Timestamp
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -900,9 +900,14 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
 
   /** One stream's rows at `granularity` in `t` order (descending when
     * `reverse`): raw values at its highest granularity, the requested
-    * downsamplers above it. One scan: a bounded read names only the
-    * window's `ymd=` days, and the rows sort inside one partition
-    * ([[DataRead.plan]]). */
+    * downsamplers above it. One scan: the read names only the window's
+    * `ymd=` days ([[DatapointStore.readDays]]), and the matched rows sort
+    * inside ONE partition. The scan stays split across tasks; only the
+    * stream's rows cross the exchange, and a single-partition sort needs
+    * no range-partitioner sampling job (a global `orderBy` scans the
+    * leaf twice for it). That one sort task holds the whole result, so
+    * this suits results small next to the leaves they scan.
+    */
   def getData(
       streamId: String,
       granularity: Granularity,
@@ -913,74 +918,6 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       reverse: Boolean = false,
       valueDownsamplers: Option[Seq[String]] = None,
       timeDownsamplers: Option[Seq[String]] = None): DataFrame = {
-    val r = dataRead(streamId, granularity, start, end, startExclusive,
-      endExclusive, reverse, valueDownsamplers, timeDownsamplers)
-    // a bounded read names its days: the granularity directory may hold
-    // more than 32 of them, which Spark would list through a job
-    r.plan(if (start.isEmpty && end.isEmpty) None else Some(r.days))
-  }
-
-  /** Lazy cursor over get_data results — the reference's `Datapoints`
-    * wrapper. It pages through the window's `ymd=` days in order
-    * (descending when `reverse`): each page is a run of consecutive days
-    * holding at most 86,400 buckets of `granularity` (one day at
-    * `seconds`, 60 at `minutes`), collected through [[getData]]'s plan
-    * body when the cursor reaches it, so memory stays bounded by one page
-    * however large the range.
-    */
-  def getDataIterator(
-      streamId: String,
-      granularity: Granularity,
-      start: Option[Timestamp] = None,
-      end: Option[Timestamp] = None,
-      reverse: Boolean = false): java.util.Iterator[org.apache.spark.sql.Row] = {
-    import scala.jdk.CollectionConverters._
-    val r = dataRead(streamId, granularity, start, end, reverse = reverse)
-    // 86,400 buckets of g span g.seconds days
-    val span = granularity.seconds
-    val pages = (if (reverse) r.days.reverse else r.days)
-      .foldLeft(Vector.empty[Vector[String]]) { (ps, day) =>
-        ps.lastOption match {
-          case Some(p) if math.abs(day.toLong - p.head.toLong) < span =>
-            ps.init :+ (p :+ day)
-          case _ => ps :+ Vector(day)
-        }
-      }
-    pages.iterator.flatMap(p => r.plan(Some(p)).collect()).asJava
-  }
-
-  /** One validated get_data request: the store root and directory holding
-    * the stream's rows at its granularity, and [[plan]], the one plan body
-    * over any of that directory's days. */
-  private final class DataRead(root: String, dir: String,
-      lo: Option[String], hi: Option[String], cond: Column,
-      cols: Seq[Column], order: Column) {
-    /** Day keys of the directory's `ymd=` days within the window, ascending. */
-    def days: Seq[String] = DatapointStore.days(spark, root, dir, lo, hi)
-
-    /** The window's rows of `days` (the whole directory when None) in `t`
-      * order: one filter, one projection, and a sort inside ONE partition.
-      * The scan stays split across tasks; only the stream's matched rows
-      * cross the exchange, and a single-partition sort needs no
-      * range-partitioner sampling job (a global `orderBy` scans the leaf
-      * twice for it). */
-    def plan(days: Option[Seq[String]]): DataFrame =
-      DatapointStore.read(spark, root,
-          days.fold(Seq(dir))(_.map(k => s"$dir/ymd=$k")))
-        .where(cond).select(cols: _*)
-        .repartition(1).sortWithinPartitions(order)
-  }
-
-  private def dataRead(
-      streamId: String,
-      granularity: Granularity,
-      start: Option[Timestamp],
-      end: Option[Timestamp],
-      startExclusive: Boolean = false,
-      endExclusive: Boolean = false,
-      reverse: Boolean,
-      valueDownsamplers: Option[Seq[String]] = None,
-      timeDownsamplers: Option[Seq[String]] = None): DataRead = {
     val d = catalog.getOrElse(streamId, throw StreamNotFound(streamId))
     val hg = Granularity(d.highest_granularity)
     if (granularity.seconds < hg.seconds)
@@ -995,14 +932,16 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
         throw UnsupportedDownsampler(n))
     }
     // the catalog knows the ONE partition directory holding these rows:
-    // Spark lists it alone (no other root, no other derived stream), then
-    // parquet min/max pushdown on stream_id/t prunes inside it
+    // the read lists it alone (no other root, no other derived stream),
+    // then parquet min/max pushdown on stream_id/t prunes inside it
     val (root, dir) = dirOf(streamId, granularity.name)
     val lo = start.map(DatapointStore.ymdKey)
     val hi = end.map(DatapointStore.ymdKey)
     // a `t` predicate alone never prunes the ymd partition column — derive
     // the matching ymd day-key bounds explicitly (same epoch-day formula
-    // as DatapointStore.ymdCol, so it is session-timezone-proof)
+    // as DatapointStore.ymdCol, so it is session-timezone-proof). readDays
+    // lists only the days inside them; the filter repeats them, so the
+    // plan's partition filters state the window's days
     val cond = Seq(
       Some(col("granularity") === granularity.name && col("stream_id") === streamId),
       start.map(s => if (startExclusive) col("t") > s else col("t") >= s),
@@ -1015,14 +954,31 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       else {
         val vds = valueDownsamplers.getOrElse(d.value_downsamplers)
         val tds = timeDownsamplers.getOrElse(d.time_downsamplers)
+        val vCols = vds.map(n => col(Downsamplers.value(n)).as(n))
         // time downsamplers keep the t_ prefix: the value downsampler `mean`
         // would otherwise collide with the time downsampler `mean`
-        col("t") +: (vds.map(n => col(Downsamplers.value(n)).as(n)) ++
-          tds.map(n => col(s"t_$n")))
+        val tCols = tds.map(n => col(s"t_$n"))
+        col("t") +: (vCols ++ tCols)
       }
-    new DataRead(root, dir, lo, hi, cond, cols,
-      if (reverse) col("t").desc else col("t"))
+    DatapointStore.readDays(spark, root, dir, lo, hi)
+      .where(cond).select(cols: _*)
+      .repartition(1).sortWithinPartitions(if (reverse) col("t").desc else col("t"))
   }
+
+  /** Lazy cursor over get_data results — the reference's `Datapoints`
+    * wrapper: [[getData]]'s one plan, fetched by `toLocalIterator`. Its
+    * one sorted partition reaches the driver in Spark's compressed
+    * collected form and rows are decoded as the cursor advances, so the
+    * driver holds the compressed result, not the decoded rows.
+    */
+  def getDataIterator(
+      streamId: String,
+      granularity: Granularity,
+      start: Option[Timestamp] = None,
+      end: Option[Timestamp] = None,
+      reverse: Boolean = false): java.util.Iterator[org.apache.spark.sql.Row] =
+    getData(streamId, granularity, start = start, end = end,
+      reverse = reverse).toLocalIterator()
 
   // ---- A5–A8 tags -----------------------------------------------------
 

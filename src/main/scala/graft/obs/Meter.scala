@@ -8,17 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Jobs, finished tasks, executor-CPU nanoseconds and input records the
-  * tasks read. */
-final case class Tally(jobs: Long, tasks: Long, cpuNs: Long,
-    recordsRead: Long) {
-  def +(o: Tally): Tally = Tally(jobs + o.jobs, tasks + o.tasks,
-    cpuNs + o.cpuNs, recordsRead + o.recordsRead)
-  def -(o: Tally): Tally = Tally(jobs - o.jobs, tasks - o.tasks,
-    cpuNs - o.cpuNs, recordsRead - o.recordsRead)
+/** Jobs, finished tasks and executor-CPU nanoseconds. */
+final case class Tally(jobs: Long, tasks: Long, cpuNs: Long) {
+  def +(o: Tally): Tally = Tally(jobs + o.jobs, tasks + o.tasks, cpuNs + o.cpuNs)
+  def -(o: Tally): Tally = Tally(jobs - o.jobs, tasks - o.tasks, cpuNs - o.cpuNs)
 }
 
-object Tally { val zero: Tally = Tally(0, 0, 0, 0) }
+object Tally { val zero: Tally = Tally(0, 0, 0) }
 
 /** What a [[Meter]] counted, by site (see [[Meter.siteOf]]). The sites
   * partition the totals: every job and task is charged to exactly one.
@@ -28,7 +24,6 @@ final case class Reading(sites: Map[String, Tally]) {
   def jobs: Long = total.jobs
   def tasks: Long = total.tasks
   def cpuNs: Long = total.cpuNs
-  def recordsRead: Long = total.recordsRead
 
   /** What was counted after `earlier` (a reading of the same meter). */
   def -(earlier: Reading): Reading = Reading(sites.map { case (k, t) =>
@@ -43,10 +38,9 @@ final case class Reading(sites: Map[String, Tally]) {
     }.mkString("{", ",", "}")
 }
 
-/** One listener that counts jobs, tasks, executor CPU and input records
-  * per site. A job is charged to the site of its description when it
-  * starts; its stages remember that site, so each finished task's CPU and
-  * records land there too.
+/** One listener that counts jobs, tasks and executor CPU per site. A job
+  * is charged to the site of its description when it starts; its stages
+  * remember that site, so each finished task's CPU lands there too.
   * [[read]] drains the listener bus first, so a read right after an action
   * sees every task of it.
   */
@@ -63,13 +57,12 @@ final class Meter private (sc: SparkContext) extends SparkListener {
     val site = Meter.siteOf(Option(e.properties)
       .flatMap(p => Option(p.getProperty("spark.job.description"))))
     e.stageIds.foreach(stageSite(_) = site)
-    charge(site, Tally(1, 0, 0, 0))
+    charge(site, Tally(1, 0, 0))
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    val m = Option(e.taskMetrics)
-    charge(stageSite.getOrElse(e.stageId, Meter.Untagged), Tally(0, 1,
-      m.fold(0L)(_.executorCpuTime), m.fold(0L)(_.inputMetrics.recordsRead)))
+    val cpu = Option(e.taskMetrics).fold(0L)(_.executorCpuTime)
+    charge(stageSite.getOrElse(e.stageId, Meter.Untagged), Tally(0, 1, cpu))
   }
 
   /** Everything counted since [[Meter.attach]], after draining the bus. */
