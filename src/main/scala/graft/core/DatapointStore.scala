@@ -154,34 +154,55 @@ object DatapointStore {
       dirs: Seq[String]): DataFrame =
     spark.read.option("basePath", root).schema(schema).parquet(dirs: _*)
 
+  /** Leaf keys of the primary root and of the derived roots. */
+  private val primaryKeys = Seq("granularity", "ymd")
+  private val derivedKeys = Seq("stream_id", "granularity", "ymd")
+
+  /** Write `df` (store schema) partitioned by `partCols`, each file sorted
+    * by (stream_id, t) so parquet row-group min/max stats prune both the
+    * stream and the time range — the scan-side half of the reference's
+    * _id-range-scan trick (§1.5). The sort leads with the partition
+    * columns: a planned write requires that ordering, and a sort that
+    * does not start with them is replaced by one that sorts by them only.
+    */
+  private def writeLeaves(df: DataFrame, path: String, partCols: Seq[String],
+      mode: SaveMode): Unit =
+    df.sortWithinPartitions((partCols ++ Seq("stream_id", "t")).distinct.map(col): _*)
+      .write.mode(mode).partitionBy(partCols: _*).parquet(path)
+
   def append(df: DataFrame, path: String): Unit =
     // repartition on the partition keys first: one task per output
     // partition, so an append writes one file per (granularity, ymd)
-    // instead of tasks × partitions small files; then sort within files by
-    // (stream_id, t) so parquet row-group min/max stats prune both the
-    // stream and the time range — the scan-side half of the reference's
-    // _id-range-scan trick (§1.5). At cluster scale add stream-id
-    // bucketing to spread one hot (g, ymd) over several writers.
-    normalize(df).repartition(col("granularity"), col("ymd"))
-      .sortWithinPartitions("stream_id", "t")
-      .write.mode(SaveMode.Append)
-      .partitionBy("granularity", "ymd").parquet(path)
+    // instead of tasks × partitions small files, sorted by (stream_id, t).
+    // At cluster scale add stream-id bucketing to spread one hot
+    // (g, ymd) over several writers.
+    writeLeaves(normalize(df).repartition(col("granularity"), col("ymd")),
+      path, primaryKeys, SaveMode.Append)
 
   /** Append to a derived-stream root: ONE partitioned write for all
     * derived streams together (never a job per stream), with stream_id as
     * the leading partition column so a recompute or delete drops one
     * stream's data by removing its partition directory. The repartition
     * names its width (the session's default parallelism): every leaf
-    * still lands in one file, but AQE cannot coalesce a write of many
-    * small leaves into one task that creates them all serially.
+    * still lands in one file, sorted by t, but AQE cannot coalesce a
+    * write of many small leaves into one task that creates them all
+    * serially.
     */
   def appendByStream(df: DataFrame, path: String): Unit =
-    normalize(df)
+    writeLeaves(normalize(df)
       .repartition(df.sparkSession.sparkContext.defaultParallelism,
-        col("stream_id"), col("granularity"), col("ymd"))
-      .sortWithinPartitions("t")
-      .write.mode(SaveMode.Append)
-      .partitionBy("stream_id", "granularity", "ymd").parquet(path)
+        col("stream_id"), col("granularity"), col("ymd")),
+      path, derivedKeys, SaveMode.Append)
+
+  /** Append rows whose partitions already hold whole leaves — the
+    * ladder's fold, exchanged by its root's leaf key minus the level —
+    * with no exchange of its own: each leaf is written by the one task
+    * that holds it, as one file. `byStream` picks the derived rollups
+    * root's keys (stream_id first) over the primary root's.
+    */
+  def appendLeaves(df: DataFrame, path: String, byStream: Boolean): Unit =
+    writeLeaves(normalize(df), path,
+      if (byStream) derivedKeys else primaryKeys, SaveMode.Append)
 
   /** Recursive delete that REFUSES to fail silently: a delete that leaves
     * files behind (held handle, permissions) would make a partition or
@@ -282,13 +303,9 @@ object DatapointStore {
     // their types (and, for derived roots, fills stream_id from the dir)
     val df = spark.read.option("basePath", path).schema(schema)
       .parquet(frag.map(r => s"$path/$r"): _*)
-    val sortCols =
-      if (partCols.contains("stream_id")) Seq("t") else Seq("stream_id", "t")
     val staged = DirSwap.stage(root)
-    df.repartition(partCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(staged.toString)
+    writeLeaves(df.repartition(partCols.map(col): _*), staged.toString,
+      partCols, SaveMode.Overwrite)
     try DirSwap.publish(fs, root, leaves(fs, staged).map(_._1))
     catch {
       case e: java.io.IOException if lenient =>
@@ -308,10 +325,8 @@ object DatapointStore {
     DirSwap.heal(fs, root)
     DirSwap.dropStage(fs, root)
     val staged = DirSwap.stage(root)
-    normalize(df).repartition(col("granularity"), col("ymd"))
-      .sortWithinPartitions("stream_id", "t")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("granularity", "ymd").parquet(staged.toString)
+    writeLeaves(normalize(df).repartition(col("granularity"), col("ymd")),
+      staged.toString, primaryKeys, SaveMode.Overwrite)
     DirSwap.publish(fs, root,
       (leaves(fs, root) ++ leaves(fs, staged)).map(_._1).distinct)
   }

@@ -147,6 +147,16 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
   /** level -> (stream id -> earliest unmaterialized epoch sec). */
   private val ladderPending =
     scala.collection.mutable.Map.empty[String, Map[String, Long]]
+  /** Per-stream rollup high-water marks (driver-side, in-memory, like the
+    * frontier): stream id -> latest rollup bucket start on disk (epoch
+    * sec) by ladder level, [[RollupLadder.NoMark]] for a level with no
+    * rollup rows. A stream with no entry is unknown: its next ladder run
+    * scans its root for them; each later run advances them from what its
+    * fold wrote. Every path that deletes rollups drops the affected
+    * entries first (cascade rewrites, deleteStreams, expireData), so a
+    * mark never claims a bucket that is gone.
+    */
+  private val ladderMarks = scala.collection.mutable.Map.empty[String, Array[Long]]
   /** Derived streams' data extents (epoch sec), mirroring their coverage
     * markers — lazily read once, then maintained by writeCoverage — so
     * the ladder's active-set check never re-reads marker files per run.
@@ -813,7 +823,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
 
   /** `body` planned statically (AQE off) on a 1/16 slice of the session's
     * shuffle width, which stands in for AQE's coalescing: the scope of the
-    * append write and of the ladder's hwm-scan and fold. */
+    * append write and of the ladder's mark scan and fold-and-write. */
   private def staticNarrow[T](body: => T): T = GraftSession.withConf(spark,
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> math.max(2,
@@ -1061,6 +1071,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
       victims.partition(id => catalog(id).derive_op.isDefined)
     // derived streams: drop their raw + rollup partition directories, no
     // table rewrite
+    ladderMarks --= victims
     derVictims.foreach { id =>
       rmTree(streamDir(derivedRawPath, id))
       rmTree(streamDir(rollupsPath, id))
@@ -1104,6 +1115,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     val cutoffs = horizons.map { case (g, t) =>
       g.name -> DatapointStore.ymdKey(t)
     }
+    ladderMarks.clear()
     DatapointStore.expireByGranularity(datapointsPath, cutoffs, depth = 0)
     DatapointStore.expireByGranularity(derivedRawPath, cutoffs, depth = 1)
     DatapointStore.expireByGranularity(rollupsPath, cutoffs, depth = 1)
@@ -1133,14 +1145,16 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     downsampleStreams(new Timestamp(System.currentTimeMillis()))
 
   /** Fold new raw datapoints into every coarser granularity for all matched
-    * streams in ONE pass ([[graft.operators.RollupLadder]]): after one
-    * high-water-mark scan, a single kernel job folds every level of every
-    * active stream, finest→coarsest per (stream, UTC day), each level from
-    * the previous level's partial aggregates (SURVEY §2.2 note a: c/s/q/l/u
-    * compose, m/d derive; the nested ladder means completed coarse buckets
-    * are exactly unions of completed finer buckets). Only completed
-    * buckets (bucket end <= until) are written, in one write per store
-    * root; `returnDatapoints` returns those rows.
+    * streams in ONE pass per store root ([[graft.operators.RollupLadder]]):
+    * each stream folds only the buckets past its per-level high-water
+    * marks (the reference's `downsample_state`, kept on the driver and
+    * advanced by each run's fold), and one kernel job folds every level of
+    * every active stream of the root, finest→coarsest per (stream, UTC
+    * day), each level from the previous level's partial aggregates (SURVEY
+    * §2.2 note a: c/s/q/l/u compose, m/d derive; the nested ladder means
+    * completed coarse buckets are exactly unions of completed finer
+    * buckets), writing as it folds. Only completed buckets (bucket end <=
+    * until) are written; `returnDatapoints` returns those rows.
     */
   def downsampleStreams(until: Timestamp,
       queryTags: Map[String, String] = Map.empty,
@@ -1198,106 +1212,140 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
     val levels = Granularity.ladder.drop(1).filter(g => needsAt(g.name).nonEmpty)
     if (levels.isEmpty) return None
 
-    // the store is resolved ONCE per ladder run, over the active streams
-    // only: the hwm-scan and the fold kernel share this one file listing
-    // (the ladder's write follows both). A derived root lists at most once
-    // per run, and only the active derived streams' directories.
+    // per stream: which levels this run folds. One fold-and-write job per
+    // store root: source streams' rollups land in the primary root,
+    // derived streams' in the rollups root (so a later recompute never
+    // touches the primary table).
+    val needSets = levels.map(g => g -> needsAt(g.name).toSet)
     val scanIds = levels.flatMap(g => needsAt(g.name)).distinct
-    val store = scanDirs(streamDirs(scanIds))
-
-    // AQE OFF for the hwm-scan and the fold checkpoint: AQE executes a
-    // checkpointed aggregate as shuffle-stage job + result-stage job;
-    // these are fixed-shape jobs whose partition sizing is pinned here, so
-    // runtime re-planning buys nothing and doubles the per-batch scheduler
-    // floor. Restored before the write (writes keep AQE: partition
-    // coalescing DOES matter for output file counts).
-    // SCOPE CAVEAT: spark.conf is session-global, so any query PLANNED
-    // on this SparkSession while the ladder runs inherits AQE-off and the
-    // shrunken shuffle width. That is inside this store's contract — the
-    // owning application runs ingest/downsample synchronously (the one-owner
-    // model every mutation path here assumes) — but a deployment sharing
-    // the session with ad-hoc readers should run ladders on a cloned
-    // session (SparkSession.cloneSession gives a separate conf over the
-    // same shared state) if concurrent planning matters.
-    val folded = staticNarrow {
-      // ONE scan resolves every level's per-stream high-water marks (max
-      // materialized bucket) up front — granularity is a partition column
-      // and the union of active sets prunes stream_id, so this is one job
-      // per ladder run, over active streams only. Levels whose partitions
-      // were never materialized cost nothing (directory probe).
-      val scannable = levels.map(_.name).filter(granularityExists)
-      val hwm: Map[(String, String), Long] =
-        Meter.tagged(spark.sparkContext, "ladder:hwm-scan") {
-          if (scannable.isEmpty) Map.empty
-          else filterToStreams(
-              store.where(col("granularity").isin(scannable: _*)), scanIds)
-            .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
-            .collect().iterator
-            .map(r => (r.getString(0), r.getString(1)) ->
-              Math.floorDiv(r.getTimestamp(2).getTime, 1000L))
-            .toMap
-        }
-
-      // per stream: which levels this run folds, each from its threshold
-      // (high-water bucket + g.seconds: only buckets past what is on disk)
-      val needSets = levels.map(g => g -> needsAt(g.name).toSet)
-      val plans = scanIds.map { id =>
-        val thr = Array.fill(Granularity.ladder.size)(RollupLadder.Skip)
-        needSets.foreach { case (g, need) =>
-          if (need(id)) thr(g.level) =
-            hwm.get((id, g.name)).fold(Long.MinValue)(_ + g.seconds)
-        }
-        id -> RollupLadder.StreamPlan(
-          catalog(id).value_type == ValueType.Numeric, hgOf(id).level, thr)
-      }.toMap
-
-      // every level of every active stream in ONE kernel job; checkpointed
-      // because the write and return_datapoints both read it.
-      // localCheckpoint, NOT persist: caching under AQE materializes as
-      // extra jobs/tasks per consumer (measured r2/r7)
-      Meter.tagged(spark.sparkContext, "ladder:fold") {
-        RollupLadder.fold(store, plans, until.getTime / 1000L,
-          spark.sparkContext.defaultParallelism).localCheckpoint(true)
-      }
-    }
-
-    // the whole ladder's output lands in ONE write per root; derived
-    // streams' rollups go to their own root (so a later recompute never
-    // touches the primary table)
-    Meter.tagged(spark.sparkContext, "ladder:write") {
-      val derived = scanIds.filter(id => catalog(id).derive_op.isDefined)
-      if (derived.nonEmpty) {
-        DatapointStore.append(
-          folded.where(!col("stream_id").isin(derived: _*)), datapointsPath)
-        DatapointStore.appendByStream(
-          folded.where(col("stream_id").isin(derived: _*)), rollupsPath)
-      } else DatapointStore.append(folded, datapointsPath)
-
-      if (unrestricted) levels.foreach { g =>
-        // frontier: every bucket ending <= until is now materialized (or
-        // provably empty) — advanced only after the union write succeeded
-        ladderFrontier(g.name) = math.max(
-          ladderFrontier.getOrElse(g.name, Long.MinValue),
-          Math.floorDiv(untilSec, g.seconds) * g.seconds)
-        // pending retention: a stream whose data reaches into the bucket
-        // still OPEN at this until keeps its entry (advanced to the open
-        // bucket's start) — with a frontier parked AHEAD of event time
-        // (a wall-clock `downsampleStreams()` on a past-data store), the
-        // extent check can't re-discover it, so dropping it here would
-        // strand that final bucket forever once it completes
-        val openStart = Math.floorDiv(untilSec, g.seconds) * g.seconds
-        ladderPending(g.name) = ladderPending.getOrElse(g.name, Map.empty)
-          .flatMap { case (id, lo) =>
-            if (!catalog.contains(id)) None
-            else if (extentSec(id).exists(_ >= openStart))
-              Some(id -> math.max(lo, openStart))
-            else None
+    val (derivedIds, sourceIds) = scanIds.partition(catalog(_).derive_op.isDefined)
+    val out = try Seq(sourceIds -> false, derivedIds -> true).collect {
+      case (rootIds, byStream) if rootIds.nonEmpty =>
+        // the root is resolved ONCE, over the active streams only: a cold
+        // mark scan and the fold share this one file listing, so a
+        // derived root lists at most once per run, and only the active
+        // derived streams' directories
+        val store = scanDirs(streamDirs(rootIds))
+        // AQE OFF: statically planned, the mark scan's aggregate and the
+        // fold's exchange + write are ONE job each (AQE runs every
+        // shuffle stage as its own job); the fold's exchange names its
+        // width and puts every output leaf in one task, so the write
+        // needs no AQE coalescing.
+        // SCOPE CAVEAT: spark.conf is session-global, so any query PLANNED
+        // on this SparkSession while the ladder runs inherits AQE-off and
+        // the shrunken shuffle width. That is inside this store's contract
+        // — the owning application runs ingest/downsample synchronously
+        // (the one-owner model every mutation path here assumes) — but a
+        // deployment sharing the session with ad-hoc readers should run
+        // ladders on a cloned session (SparkSession.cloneSession gives a
+        // separate conf over the same shared state) if concurrent
+        // planning matters.
+        staticNarrow {
+          loadMarks(store, rootIds)
+          val plans = rootIds.map { id =>
+            val thr = Array.fill(Granularity.ladder.size)(RollupLadder.Skip)
+            val mark = ladderMarks(id)
+            needSets.foreach { case (g, need) =>
+              // only buckets past what is on disk: high-water bucket + g
+              if (need(id)) thr(g.level) =
+                if (mark(g.level) == RollupLadder.NoMark) Long.MinValue
+                else mark(g.level) + g.seconds
+            }
+            id -> RollupLadder.StreamPlan(
+              catalog(id).value_type == ValueType.Numeric, hgOf(id).level, thr)
+          }.toMap
+          val path = if (byStream) rollupsPath else datapointsPath
+          val f = RollupLadder.fold(store, plans, untilSec,
+            spark.sparkContext.defaultParallelism, byStream)
+          // the fold runs inside the write; only a caller that wants the
+          // rows back pays for a checkpoint (localCheckpoint, NOT persist:
+          // caching under AQE materializes as extra jobs/tasks per
+          // consumer, measured r2/r7), whose partitions the write reuses
+          val kept =
+            if (!returnDatapoints) {
+              Meter.tagged(spark.sparkContext, "ladder:fold") {
+                DatapointStore.appendLeaves(f.rows, path, byStream)
+              }
+              None
+            } else {
+              val cp = Meter.tagged(spark.sparkContext, "ladder:fold") {
+                f.rows.localCheckpoint(true)
+              }
+              Meter.tagged(spark.sparkContext, "ladder:write") {
+                DatapointStore.appendLeaves(cp, path, byStream)
+              }
+              Some(cp)
+            }
+          // this root's rollups are on disk: its streams' marks advance
+          f.marks.value.foreach { case (id, emitted) =>
+            val mark = ladderMarks(id)
+            emitted.indices.foreach(k => mark(k) = math.max(mark(k), emitted(k)))
           }
-        ()
-      }
+          kept
+        }
+    }.flatten catch {
+      // a failed run may have written part of its rollups: its streams'
+      // marks are rescanned by the next run
+      case e: Throwable => ladderMarks --= scanIds; throw e
     }
-    if (returnDatapoints) Some(DatapointStore.normalize(folded)) else None
+
+    if (unrestricted) levels.foreach { g =>
+      // frontier: every bucket ending <= until is now materialized (or
+      // provably empty) — advanced only after every root's write succeeded
+      ladderFrontier(g.name) = math.max(
+        ladderFrontier.getOrElse(g.name, Long.MinValue),
+        Math.floorDiv(untilSec, g.seconds) * g.seconds)
+      // pending retention: a stream whose data reaches into the bucket
+      // still OPEN at this until keeps its entry (advanced to the open
+      // bucket's start) — with a frontier parked AHEAD of event time
+      // (a wall-clock `downsampleStreams()` on a past-data store), the
+      // extent check can't re-discover it, so dropping it here would
+      // strand that final bucket forever once it completes
+      val openStart = Math.floorDiv(untilSec, g.seconds) * g.seconds
+      ladderPending(g.name) = ladderPending.getOrElse(g.name, Map.empty)
+        .flatMap { case (id, lo) =>
+          if (!catalog.contains(id)) None
+          else if (extentSec(id).exists(_ >= openStart))
+            Some(id -> math.max(lo, openStart))
+          else None
+        }
+      ()
+    }
+    out.reduceOption(_.unionByName(_)).map(DatapointStore.normalize)
   }
+
+  /** Fill the high-water marks of `rootIds` (streams of ONE store root,
+    * whose scan is `store`) that have none: ONE scan over those streams,
+    * every rollup level at once (granularity is a partition column), the
+    * max bucket per (stream, level) — run after an open and after a
+    * delete dropped a stream's marks, never per level. Levels with no
+    * directory on disk cost a probe, not a job; none at all, no job.
+    */
+  private def loadMarks(store: DataFrame, rootIds: Seq[String]): Unit = {
+    val cold = rootIds.filterNot(ladderMarks.contains)
+    if (cold.isEmpty) return
+    val scannable = Granularity.ladder.drop(1).map(_.name).filter(granularityExists)
+    cold.foreach(id => ladderMarks(id) =
+      Array.fill(Granularity.ladder.size)(RollupLadder.NoMark))
+    if (scannable.nonEmpty) Meter.tagged(spark.sparkContext, "ladder:hwm-scan") {
+      filterToStreams(store.where(col("granularity").isin(scannable: _*)), cold)
+        .groupBy("stream_id", "granularity").agg(max("t").as("hwm"))
+        .collect().foreach { r =>
+          val (id, g) = (r.getString(0), Granularity(r.getString(1)))
+          // a stream's own raw level is not a mark (a minutes stream's raw
+          // rows share granularity=minutes with other streams' rollups)
+          if (g.level > Granularity(catalog(id).highest_granularity).level)
+            ladderMarks(id)(g.level) = Math.floorDiv(r.getTimestamp(2).getTime, 1000L)
+        }
+    }
+  }
+
+  /** The high-water marks in memory: stream id -> (level -> latest
+    * rollup bucket start, epoch sec), for every stream that has them. */
+  private[graft] def ladderMarksSnapshot: Map[String, Map[String, Long]] =
+    ladderMarks.iterator.map { case (id, m) => id -> Granularity.ladder
+      .collect { case g if m(g.level) != RollupLadder.NoMark => g.name -> m(g.level) }
+      .toMap }.toMap
 
   private def noteDataWritten(loSec: Long, ids: Iterable[String]): Unit =
     Granularity.ladder.drop(1).foreach { g =>
@@ -1810,6 +1858,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
               deleteDerivedYmds(derivedRawPath, d.stream_id, wKey, hiKey)
               // rollups: always from wKey onward — the downsample ladder's
               // high-water mark never refills a finite mid-range hole
+              ladderMarks -= d.stream_id
               deleteDerivedYmds(rollupsPath, d.stream_id, wKey, None)
             case None =>
               // full mode gets the sentinel too: a missing coverage marker
@@ -1828,6 +1877,7 @@ class Datastream(val spark: SparkSession, val rootDir: String) {
               dfs.listStatus(dirty.getParent)
                 .filterNot(_.getPath.getName == dirty.getName)
                 .foreach(f => rmTree(f.getPath.toString))
+              ladderMarks -= d.stream_id
               rmTree(streamDir(rollupsPath, d.stream_id))
           }
         }

@@ -7,22 +7,28 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.AccumulatorV2
 
 import graft.model.Granularity
 
-/** The rollup ladder as ONE kernel job: every coarser level of every
-  * stream in a `downsampleStreams` run folds in a single pass over the
-  * run's store frame, so a run costs the same jobs however many levels
-  * it folds.
+/** The rollup ladder as ONE kernel job per store root: every coarser
+  * level of every stream in a `downsampleStreams` run folds in a single
+  * pass over the root's store frame, and the folded rows go straight
+  * into that root's partitioned write, so a run costs the same jobs
+  * however many levels it folds.
   *
   * Shape: the store rows each level folds — raw rows at the stream's
   * highest granularity, and the on-disk partials of each level below a
-  * folded one — are restricted through ONE broadcast table
-  * (stream_id, input granularity → threshold), exchanged once by
-  * stream_id, sorted by t, and folded by `mapPartitions` per
-  * (stream, UTC day) group. Every bucket of every level nests in one UTC
-  * day (all ladder widths divide 86400), so a group is self-contained
-  * and the kernel holds one stream-day in memory, never a whole stream.
+  * folded one — are restricted by each stream's per-level thresholds
+  * (one broadcast plan map), exchanged once by the root's leaf key minus
+  * the level (UTC day for the primary root, (stream_id, UTC day) for the
+  * derived rollups root), sorted by (stream_id, t), and folded by
+  * `mapPartitions` per (stream, UTC day) group. Every bucket of every
+  * level nests in its input row's UTC day (all ladder widths divide
+  * 86400), so a group is self-contained, the kernel holds one
+  * stream-day in memory, never a whole stream, and every output leaf
+  * (granularity, ymd) is produced by one task: written as one file.
+  * A primary-root day therefore folds in one task.
   *
   * Within a group the levels fold in ladder order and reproduce the
   * level-by-level chain ([[Downsample.toGranularity]] /
@@ -44,6 +50,10 @@ import graft.model.Granularity
   * Sums accumulate in t order, so s/q/m/d can differ from a Spark
   * aggregate over the same rows in the last ulps (float addition order);
   * counts, extrema and time columns are exact.
+  *
+  * The kernel also reports each stream's new high-water marks: the
+  * latest bucket it emitted per level ([[Marks]]), so the caller keeps
+  * the marks on the driver instead of rescanning the rollups per run.
   */
 object RollupLadder {
 
@@ -75,24 +85,49 @@ object RollupLadder {
     "t_mean" -> TimestampType, "granularity" -> StringType)
     .map { case (n, t) => StructField(n, t, nullable = true) })
 
+  /** The latest bucket start (epoch seconds) a fold emitted per stream
+    * and ladder index ([[NoMark]]: none): once the fold's rows are
+    * written, each stream's high-water marks. Max is idempotent, so a
+    * retried task cannot skew it. Registered unnamed, so Spark's status
+    * store never renders it per task. */
+  final class Marks extends AccumulatorV2[(String, Int, Long), Map[String, Array[Long]]] {
+    private val m = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+    def isZero: Boolean = m.isEmpty
+    def copy(): Marks = { val c = new Marks; c.merge(this); c }
+    def reset(): Unit = m.clear()
+    def add(x: (String, Int, Long)): Unit = {
+      val a = m.getOrElseUpdate(x._1, Array.fill(ladder.size)(NoMark))
+      if (x._3 > a(x._2)) a(x._2) = x._3
+    }
+    def merge(o: AccumulatorV2[(String, Int, Long), Map[String, Array[Long]]]): Unit =
+      o.value.foreach { case (id, a) =>
+        a.indices.foreach(k => if (a(k) != NoMark) add((id, k, a(k))))
+      }
+    def value: Map[String, Array[Long]] = m.toMap
+  }
+
+  val NoMark: Long = Long.MinValue
+
+  /** A fold's rows (schema [[schema]]; not yet run) and the marks the
+    * run that consumes them accumulates. */
+  final case class Fold(rows: DataFrame, marks: Marks)
+
   /** Fold every level `plans` asks for (at least one), for every planned
     * stream, out of `store` (the store schema: stream_id, t, v_num,
-    * v_json, the aggregates, granularity, ymd), emitting only buckets that
-    * end by `untilSec`. `partitions` sizes the one exchange.
+    * v_json, the aggregates, granularity, ymd; ONE store root's rows),
+    * emitting only buckets that end by `untilSec`. The one exchange is
+    * `partitions` wide, keyed by the UTC day, and by (stream_id, day)
+    * when `byStream` (a root partitioned by stream_id first): each task
+    * holds every row of the output leaves it produces.
     */
   def fold(store: DataFrame, plans: Map[String, StreamPlan], untilSec: Long,
-      partitions: Int): DataFrame = {
+      partitions: Int, byStream: Boolean): Fold = {
     val spark = store.sparkSession
-    import spark.implicits._
-    // (stream, input granularity) → threshold: raw rows feed the level
-    // above the stream's highest granularity, level k−1 partials feed k
-    val table = plans.toSeq.flatMap { case (id, p) =>
-      (p.hg + 1 until ladder.size).collect {
-        case k if p.threshold(k) != Skip => (id, ladder(k - 1).name, p.threshold(k))
-      }
-    }
-    val inputs = table.map(_._2).distinct
-    val lo = table.map(_._3).min
+    val inputs = plans.values.flatMap(p =>
+      (p.hg + 1 until ladder.size).filter(p.threshold(_) != Skip)
+        .map(k => ladder(k - 1).name)).toSeq.distinct
+    val lo = plans.values.flatMap(p =>
+      (p.hg + 1 until ladder.size).map(p.threshold).filter(_ != Skip)).min
     val scanned = store.where(col("granularity").isin(inputs: _*))
     // every planned stream past its high-water mark: whole older days
     // prune at the partition level (ymd is the UTC day, zero-padded)
@@ -101,15 +136,26 @@ object RollupLadder {
       else scanned.where(col("ymd") >=
         f"${math.max(Math.floorDiv(lo, 86400L), 0L)}%09d")
     val bc = spark.sparkContext.broadcast(plans)
-    pruned
-      .join(broadcast(table.toDF("stream_id", "granularity", "thr")),
-        Seq("stream_id", "granularity"))
-      .where(unix_timestamp(col("t")) >= col("thr"))
-      .select(inputColumns.map(col): _*)
-      .repartition(partitions, col("stream_id"))
+    // a row feeds the level above its own granularity, from that level's
+    // threshold on: raw rows the level above the stream's highest
+    // granularity, level k−1 partials level k
+    val feeds = udf { (id: String, g: String, sec: Long) =>
+      bc.value.get(id).exists { p =>
+        val k = levelOf(g) + 1
+        k > p.hg && k < ladder.size && p.threshold(k) != Skip && sec >= p.threshold(k)
+      }
+    }
+    val marks = new Marks
+    spark.sparkContext.register(marks)
+    val key = if (byStream) Seq(col("stream_id"), col("ymd")) else Seq(col("ymd"))
+    val rows = pruned
+      .where(feeds(col("stream_id"), col("granularity"), unix_timestamp(col("t"))))
+      .select((inputColumns :+ "ymd").map(col): _*)
+      .repartition(partitions, key: _*)
       .sortWithinPartitions("stream_id", "t")
-      .mapPartitions(rows => foldSorted(rows, bc.value, untilSec))(
+      .mapPartitions(rows => foldSorted(rows, bc.value, untilSec, marks))(
         Encoders.row(schema))
+    Fold(rows, marks)
   }
 
   /** One partial bucket feeding the next level: a disk row of some level,
@@ -156,7 +202,7 @@ object RollupLadder {
 
   /** Fold rows sorted by (stream_id, t), one (stream, UTC day) at a time. */
   private def foldSorted(rows: Iterator[Row], plans: Map[String, StreamPlan],
-      untilSec: Long): Iterator[Row] = {
+      untilSec: Long, marks: Marks): Iterator[Row] = {
     val in = rows.buffered
     new Iterator[Iterator[Row]] {
       def hasNext: Boolean = in.hasNext
@@ -176,7 +222,7 @@ object RollupLadder {
             raw += new Raw(us, r.isNullAt(vi), if (plan.numeric && !r.isNullAt(3)) r.getDouble(3) else 0.0)
           } else disk(k) += readPart(r, Math.floorDiv(us, 1000000L))
         }
-        foldDay(id, plan, raw, disk, untilSec).iterator
+        foldDay(id, plan, raw, disk, untilSec, marks).iterator
       }
     }.flatten
   }
@@ -197,7 +243,7 @@ object RollupLadder {
   /** Every planned level of one stream-day, in ladder order. */
   private def foldDay(id: String, plan: StreamPlan,
       raw: ArrayBuffer[Raw], disk: Array[ArrayBuffer[Part]],
-      untilSec: Long): Seq[Row] = {
+      untilSec: Long, marks: Marks): Seq[Row] = {
     val out = Seq.newBuilder[Row]
     var fresh: Seq[Part] = Nil // the level below's buckets from this run
     for (k <- plan.hg + 1 until ladder.size) {
@@ -245,6 +291,7 @@ object RollupLadder {
           out += toRow(id, g, b, tMean, a, plan.numeric)
           new Part(b, tMean, a)
         }
+        fresh.lastOption.foreach(p => marks.add((id, k, p.t)))
       }
     }
     out.result()

@@ -741,6 +741,147 @@ class DatastreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hourRows.head.getLong(1) == 3 && hourRows.head.getDouble(2) == 90.0)
   }
 
+  test("ladder high-water marks kept in memory == a rescan after every reopen, through deletes, expiry and restricted runs") {
+    import spark.implicits._
+    // `kept` lives across every run and folds from its in-memory marks;
+    // `fresh` is reopened on its root before each ladder run, so every
+    // run rescans the store for them. The rollups must agree at every level
+    // after each step.
+    val (keptRoot, freshRoot) = (Files.createTempDirectory("graft-marks-k").toString,
+      Files.createTempDirectory("graft-marks-f").toString)
+    val kept = new Datastream(spark, keptRoot)
+    var fresh = new Datastream(spark, freshRoot)
+    val srcNames = Seq("a", "b", "mins", "solo")
+    def declare(ds: Datastream): Map[String, String] = {
+      val src = srcNames.map(n => n -> ds.ensureStream(Map("name" -> n, "grp" -> (if (n == "b") "y" else "x")),
+        highestGranularity = if (n == "mins") Granularity.Minutes else Granularity.Seconds)).toMap
+      val sum = ds.ensureStream(Map("name" -> "sum"), deriveFrom = Seq(src("a"), src("b")),
+        deriveOp = Some(DeriveOps.Sum))
+      ds.flush()
+      src + ("sum" -> sum)
+    }
+    val (kIds, fIds) = (declare(kept), declare(fresh))
+    def both(f: (Datastream, Map[String, String]) => Unit): Unit = {
+      f(kept, kIds); f(fresh, fIds)
+    }
+    // integer values, one point per stream-second: every sum is exact
+    def points(names: Seq[String], from: String, n: Int, stepSec: Int, v0: Int) =
+      names.flatMap(name => (0 until n).map(i => (name,
+        new Timestamp(ts(from).getTime + 1000L * stepSec * i), (v0 + i % 97).toDouble)))
+    def append(rows: Seq[(String, Timestamp, Double)]): Unit = both { (ds, ids) =>
+      ds.appendMultiple(rows.map { case (n, t, v) => (ids(n), t, v) }
+        .toDF("stream_id", "t", "v"), checkTimestamp = false)
+    }
+    def rollups(ds: Datastream, ids: Map[String, String]) = ds.datapoints
+      .join(ids.toSeq.map(_.swap).toDF("stream_id", "name"), "stream_id")
+      .select("name", "granularity", "t", "c", "s", "q", "l", "u", "m", "d",
+        "t_first", "t_last", "t_mean")
+      .where(col("c").isNotNull).collect().map(_.toSeq).toSet
+    def ladder(step: String, until: String, tags: Map[String, String] = Map.empty,
+        only: Option[String] = None): Unit = {
+      kept.downsampleStreams(ts(until), queryTags = tags, filterStream =
+        only.fold(Datastream.AllStreams)(n => (d: StreamDescriptor) => d.stream_id == kIds(n)))
+      fresh = new Datastream(spark, freshRoot)
+      fresh.downsampleStreams(ts(until), queryTags = tags, filterStream =
+        only.fold(Datastream.AllStreams)(n => (d: StreamDescriptor) => d.stream_id == fIds(n)))
+      val (k, f) = (rollups(kept, kIds), rollups(fresh, fIds))
+      assert(k == f, s"$step: ${(k diff f).take(3)} / ${(f diff k).take(3)}")
+      // the marks in memory are the store's per-level maxima
+      val marks = kept.ladderMarksSnapshot
+      assert(marks.nonEmpty, s"$step: no marks kept")
+      val onDisk = kept.datapoints.where(col("c").isNotNull)
+        .groupBy("stream_id", "granularity").agg(org.apache.spark.sql.functions.max("t")).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getTimestamp(2).getTime / 1000L)
+        .toMap
+      marks.foreach { case (id, m) =>
+        val name = kIds.find(_._2 == id).get._1
+        val hg = if (name == "mins") 60L else 1L
+        val want = onDisk.collect {
+          case ((`id`, g), b) if Granularity(g).seconds > hg => g -> b
+        }
+        assert(m == want, s"$step: marks of $name")
+      }
+    }
+    // steady batches, the second closing day 1 and crossing into day 2
+    append(points(srcNames, "2024-05-01 00:00:00", 400, 37, 0))
+    ladder("batch 1", "2024-05-01 03:00:00")
+    append(points(srcNames, "2024-05-01 04:00:00", 700, 113, 5))
+    ladder("batch 2", "2024-05-02 01:00:00")
+    // a late append behind the marks (and a cascade rewrite of `sum`
+    // from that point on)
+    append(points(Seq("a", "solo"), "2024-05-01 02:10:01", 30, 41, 11))
+    ladder("late append", "2024-05-02 02:00:00")
+    // tag-restricted and filterStream runs
+    append(points(srcNames, "2024-05-02 02:00:00", 300, 29, 3))
+    ladder("tags", "2024-05-02 05:00:00", tags = Map("grp" -> "x"))
+    ladder("filterStream", "2024-05-02 06:00:00", only = Some("b"))
+    ladder("all", "2024-05-02 07:00:00")
+    // retention, then more data
+    both((ds, _) => ds.expireData(ts("2024-05-02 00:00:00")))
+    append(points(srcNames, "2024-05-02 07:00:00", 300, 31, 7))
+    ladder("expire", "2024-05-02 12:00:00")
+    // deletes: the derived stream (its roots) and a source with no
+    // dependents (a primary-root rewrite), then more data
+    both((ds, _) => ds.deleteStreams(Map("name" -> "sum")))
+    both((ds, _) => ds.deleteStreams(Map("name" -> "solo")))
+    append(points(Seq("a", "b", "mins"), "2024-05-02 12:00:00", 300, 47, 9))
+    ladder("delete", "2024-05-03 00:00:00")
+    assert(rollups(kept, kIds).exists(_(1) == "days"), "the ladder reached days")
+  }
+
+  test("partitioned writes sort each file by (stream_id, t)") {
+    import spark.implicits._
+    // 20,000 rows over 500 streams in one (granularity, ymd) leaf, in
+    // random order over 8 input partitions
+    val rnd = new scala.util.Random(7)
+    val rows = rnd.shuffle((0 until 20000).map(i =>
+      (f"s${i % 500}%03d", new Timestamp(ts("2024-06-01 00:00:00").getTime + 1000L * (i / 500)),
+        i.toDouble)))
+    val df = rows.toDF("stream_id", "t", "v_num").withColumn("granularity", lit("seconds"))
+      .repartition(8)
+    val root = Files.createTempDirectory("graft-sorted").toString
+    def parquetFiles(dir: String): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    }
+    // a file of a derived root holds one stream: no stream_id column
+    def assertSorted(what: String, dir: String): Unit = {
+      val files = parquetFiles(dir)
+      assert(files.nonEmpty, s"$what: no files under $dir")
+      files.foreach { f =>
+        // one small file reads as one split, in file order
+        val file = spark.read.parquet(f)
+        val got = file.select(
+            (if (file.columns.contains("stream_id")) col("stream_id") else lit("")), col("t"))
+          .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime)).toSeq
+        val inOrder = got.size > 1 && got == got.sortBy(identity)
+        assert(inOrder, s"$what: $f (${got.size} rows) is not in (stream_id, t) order")
+      }
+    }
+    val leaf = s"$root/datapoints/granularity=seconds"
+    DatapointStore.append(df, s"$root/datapoints")
+    DatapointStore.append(df.where(col("v_num") < 100), s"$root/datapoints")
+    assert(parquetFiles(leaf).size == 2)
+    assertSorted("append", leaf)
+    val ds = new Datastream(spark, root)
+    ds.compactStore()
+    assert(parquetFiles(leaf).size == 1)
+    assertSorted("compact", leaf)
+    DatapointStore.replace(df.where(col("v_num") >= 100), s"$root/datapoints")
+    assertSorted("replace", leaf)
+    DatapointStore.appendByStream(df.where(col("stream_id") === "s007"), s"$root/derived_raw")
+    assertSorted("appendByStream", s"$root/derived_raw")
+    // the ladder's fold writes its leaves the same way
+    val store = new Datastream(spark, Files.createTempDirectory("graft-sorted-l").toString)
+    val ids = (0 until 300).map(i => store.ensureStream(Map("sorted" -> s"$i")))
+    store.appendMultiple(rnd.shuffle(ids.flatMap(id => (0 until 20).map(i =>
+        (id, new Timestamp(ts("2024-06-01 00:00:00").getTime + 60000L * i), 1.0 * i))))
+      .toDF("stream_id", "t", "v").repartition(8), checkTimestamp = false)
+    store.downsampleStreams(ts("2024-06-02 00:00:00"))
+    assertSorted("ladder", s"${store.rootDir}/datapoints/granularity=minutes")
+  }
+
   test("incremental derive on append == full recompute, all four ops") {
     import spark.implicits._
     // one store driven by staged appends (incremental cascade), compared

@@ -201,13 +201,17 @@ class EquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val store1 = rawAll.where(unix_timestamp(col("t")) < until1)
       val ref1 = chain(store1, plans1, until1).localCheckpoint(true)
-      same(s"seed $seed run 1",
-        RollupLadder.fold(store1, plans1, until1, 3), ref1)
+      val fold1 = RollupLadder.fold(store1, plans1, until1, 3, byStream = false)
+      same(s"seed $seed run 1", fold1.rows, ref1)
       // run 2: every raw point plus run 1's partials on disk; thresholds
-      // from the per-level high-water marks; frac skips minutes10
+      // from the per-level high-water marks, which run 1's fold reported;
+      // frac skips minutes10
       val hwm = ref1.groupBy("stream_id", "granularity").agg(max("t"))
         .collect().map(r => (r.getString(0), r.getString(1)) ->
           r.getTimestamp(2).getTime / 1000L).toMap
+      assert(fold1.marks.value.toSeq.flatMap { case (id, m) => m.indices.collect {
+          case k if m(k) != RollupLadder.NoMark => (id, ladder(k).name) -> m(k) } }.toMap == hwm,
+        s"seed $seed: run 1's marks")
       val plans2 = hgOf.map { case (id, hg) =>
         id -> StreamPlan(numeric(id), hg, Array.tabulate(ladder.size) { k =>
           if (k <= hg || (id == "frac" && ladder(k) == Granularity.Minutes10)) Skip
@@ -215,8 +219,10 @@ class EquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         })
       }
       val store2 = rawAll.unionByName(ref1)
+      // exchanged by (stream_id, day), as for a root partitioned by stream
       same(s"seed $seed run 2",
-        RollupLadder.fold(store2, plans2, until2, 3), chain(store2, plans2, until2))
+        RollupLadder.fold(store2, plans2, until2, 3, byStream = true).rows,
+        chain(store2, plans2, until2))
     }
   }
 
@@ -237,7 +243,7 @@ class EquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (k == 1 || k == 2) Long.MinValue else RollupLadder.Skip)
     val rows = RollupLadder.fold(store,
         Map("z" -> RollupLadder.StreamPlan(numeric = true, hg = 0, thr)),
-        base + 86400, 2)
+        base + 86400, 2, byStream = false).rows
       .orderBy("granularity", "t").collect()
     assert(rows.map(_.getString(12)).toSeq == Seq("minutes", "seconds10", "seconds10"))
     rows.foreach { r =>
