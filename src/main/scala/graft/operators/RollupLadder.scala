@@ -123,11 +123,11 @@ object RollupLadder {
   def fold(store: DataFrame, plans: Map[String, StreamPlan], untilSec: Long,
       partitions: Int, byStream: Boolean): Fold = {
     val spark = store.sparkSession
-    val inputs = plans.values.flatMap(p =>
-      (p.hg + 1 until ladder.size).filter(p.threshold(_) != Skip)
-        .map(k => ladder(k - 1).name)).toSeq.distinct
-    val lo = plans.values.flatMap(p =>
-      (p.hg + 1 until ladder.size).map(p.threshold).filter(_ != Skip)).min
+    // (input granularity, threshold) of every planned level
+    val planned = plans.values.toSeq.flatMap(p => (p.hg + 1 until ladder.size)
+      .collect { case k if p.threshold(k) != Skip => (ladder(k - 1).name, p.threshold(k)) })
+    val inputs = planned.map(_._1).distinct
+    val lo = planned.map(_._2).min
     val scanned = store.where(col("granularity").isin(inputs: _*))
     // every planned stream past its high-water mark: whole older days
     // prune at the partition level (ymd is the UTC day, zero-padded)
